@@ -16,7 +16,7 @@ def main(argv: list[str] | None = None) -> int:
     parser = argparse.ArgumentParser(prog="northwind_warehouse_spark")
     sub = parser.add_subparsers(dest="cmd", required=True)
 
-    p_wh = sub.add_parser("warehouse", help="incremental warehouse build (staging → SCD2 dims → facts → audit)")
+    p_wh = sub.add_parser("warehouse", help="incremental warehouse build (staging → SCD2 dims → facts; each commit carries its watermark)")
     p_wh.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     p_wh.add_argument("--lake", required=True)
 

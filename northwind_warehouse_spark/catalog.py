@@ -107,10 +107,6 @@ def table_rows(sf_dir: str, table: str) -> int:
     return _ROW_COUNTS[key]
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str, suffix: str = "") -> list[str]:
     """Register every raw table as a temp view so users query the
     warehouse in plain Spark SQL — the access mode dbt users already

@@ -36,10 +36,6 @@ def ratio_4dp(numer_col: str, denom_col: str) -> Column:
     )
 
 
-def o_tokens(text_col: str = "text") -> str:
-    return f"string_split({text_col}, ' ')"
-
-
 def o_n_tokens(text_col: str = "text") -> str:
     return f"CAST(len(string_split({text_col}, ' ')) AS BIGINT)"
 

@@ -44,9 +44,3 @@ def cosine_from_parts(dot_col: str, n2a_col: str, n2b_col: str) -> Column:
     return F.col(dot_col).cast("double") / F.sqrt(
         F.col(n2a_col).cast("double") * F.col(n2b_col).cast("double")
     )
-
-
-# --- DuckDB oracle renderings ------------------------------------------------
-
-def o_quant(x: str) -> str:
-    return f"CAST(floor(CAST({x} AS DOUBLE) * {SCALE}.0) AS BIGINT)"

@@ -2,11 +2,14 @@
 
 Re-expresses the reference's audit machinery
 (reference: macros/audit_management/{generate_audit_table,initialized_audit,
-updating_audit,get_audit_info}.sql) Spark-first: the audit control table is
-a small parquet state table keyed by entity; the high-watermark predicate
-is a plain timestamp filter, so it pushes down to the parquet scan
-(min/max row-group stats skip old files entirely — this is the whole point
-at 100 TB).
+updating_audit,get_audit_info}.sql) over the lake's own commits: an
+entity's high watermark is the ``watermark`` of its latest
+``VersionedTable`` manifest entry, committed atomically with the data
+it describes, so data and watermark can never disagree and reading the
+audit state starts no Spark job. The high-watermark predicate is a plain
+timestamp filter, so it pushes down to the parquet scan (min/max
+row-group stats skip old files entirely — this is the whole point at
+100 TB).
 """
 
 from __future__ import annotations
@@ -17,6 +20,8 @@ from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from northwind_warehouse_spark.sources.versioned import VersionedTable, naive_utc
 
 EPOCH_LOW = datetime(1900, 1, 1)
 
@@ -33,59 +38,34 @@ class AuditEntry:
 
 
 class AuditControl:
-    """Parquet-backed audit_control table (one row per entity)."""
-
-    SCHEMA = (
-        "entity string, hwm_date timestamp, driver_table string, "
-        "business_key string, is_processed boolean, is_initialized boolean, "
-        "last_processed_date timestamp"
-    )
+    """Read-only audit view of ``<lake>/<entity>/_manifest.json``, where
+    ``<lake>`` is the directory holding ``path``'s ``_audit/``. Dates are
+    naive UTC."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
-        self.path = path
+        self.lake = os.path.dirname(os.path.dirname(path.rstrip("/")))
 
-    def _read(self) -> DataFrame:
-        if os.path.exists(self.path):
-            return self.spark.read.schema(self.SCHEMA).parquet(self.path)
-        return self.spark.createDataFrame([], self.SCHEMA)
-
+    # kept only so perfbench's tracer still resolves it by name
     def initialize(self, entity: str, driver_table: str, business_key: str) -> None:
-        """Idempotent insert-if-absent (reference: initialized_audit.sql)."""
-        cur = self._read()
-        if cur.filter(F.col("entity") == entity).limit(1).count() > 0:
-            return
-        row = [(entity, EPOCH_LOW, driver_table, business_key, False, True, EPOCH_LOW)]
-        new = self.spark.createDataFrame(row, self.SCHEMA)
-        self._overwrite(cur.unionByName(new))
+        """No-op: an entity with no commit already reads as 1900-01-01."""
 
     def get(self, entity: str) -> AuditEntry:
-        rows = self._read().filter(F.col("entity") == entity).collect()
-        if not rows:
-            return AuditEntry(entity, EPOCH_LOW, "", "", False, False, EPOCH_LOW)
-        r = rows[0]
+        """The watermark and commit time of the entity's latest version;
+        the manifest records no driver table or business key."""
+        versions = VersionedTable(self.spark, self.lake, entity).versions()
+        latest = versions[-1] if versions else {}
+        if not latest.get("watermark"):
+            return AuditEntry(entity, EPOCH_LOW, "", "", False, bool(versions), EPOCH_LOW)
         return AuditEntry(
-            r.entity, r.hwm_date or EPOCH_LOW, r.driver_table, r.business_key,
-            bool(r.is_processed), bool(r.is_initialized), r.last_processed_date or EPOCH_LOW,
+            entity, datetime.fromisoformat(latest["watermark"]), "", "", True, True,
+            naive_utc(datetime.fromisoformat(latest["committed_at"])),
         )
 
+    # kept only so perfbench's tracer still resolves it by name
     def update(self, entity: str, hwm_date: datetime, processed_at: datetime | None = None) -> None:
-        """Advance the watermark after a successful load (reference: updating_audit.sql)."""
-        processed_at = processed_at or datetime.now()
-        cur = self._read().collect()
-        out = []
-        for r in cur:
-            if r.entity == entity:
-                out.append((entity, hwm_date, r.driver_table, r.business_key, True, True, processed_at))
-            else:
-                out.append(tuple(r))
-        self._overwrite(self.spark.createDataFrame(out, self.SCHEMA))
-
-    def _overwrite(self, df: DataFrame) -> None:
-        tmp = self.path + ".tmp"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        final = self.spark.read.schema(self.SCHEMA).parquet(tmp)
-        final.coalesce(1).write.mode("overwrite").parquet(self.path)
+        raise NotImplementedError(
+            "the watermark commits with its data: pass watermark= to VersionedTable.write")
 
 
 def high_watermark_filter(df: DataFrame, ts_col: str, hwm: str | datetime) -> DataFrame:

@@ -455,8 +455,8 @@ def ivf_assign_two_level(
     — where k ∝ n/128 makes the children relation GB-sized — it
     degrades to a SALTED shuffle join instead of a driver-sized
     broadcast (the raw key has only √k distinct values; see the
-    closed-gate branch below and tools/closed_gate_probe.py's
-    measurement). (Packing all k centroids into
+    closed-gate branch below and its measurement in SCALING.md,
+    "Closed-gate two-level join"). (Packing all k centroids into
     one nested-array row would be zero-shuffle here but builds that
     array in a single task — a driver/memory cliff at large k; the
     equi-join has no cliff.) Zero UDF throughout. The tie rule at BOTH

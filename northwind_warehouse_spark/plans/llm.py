@@ -10331,6 +10331,9 @@ def oracle_span_corruption_manifest() -> str:
 
 _SFT_PROMPT_TOKENS = 16
 _SFT_MIN_COMPLETION_TOKENS = 8
+# sft_pair_manifest's size(split(text)) filter equals the oracle's
+# completion-length filter only at >= 2 (split('') has size 1)
+assert _SFT_MIN_COMPLETION_TOKENS >= 2
 
 
 def sft_pair_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -12,8 +12,6 @@ are hashed as epoch microseconds.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 

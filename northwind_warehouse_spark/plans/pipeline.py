@@ -2,15 +2,21 @@
 equivalent of ``dbt run`` on the reference project.
 
 Flow per run (reference: models/* + macros/audit_management/*):
-  1. read the audit control table (high watermark per entity);
-  2. staging: conform raw tables → lake;
-  3. dims: incremental SCD2 merge of new change rows (only affected keys
-     recomputed) → lake;
-  4. facts: high-watermark slice, SK lookups, upsert by business key
-     (partitioned by order_year for pruning) → lake;
-  5. advance the audit watermarks.
+  1. staging: conform raw tables → lake;
+  2. dims: read the dim's high watermark from its latest manifest entry,
+     incremental SCD2 merge of the newer change rows (only affected keys
+     recomputed), and commit the new version together with its new
+     watermark (the newest change ``ts``, or the parent's if there is
+     none) in one manifest entry;
+  3. facts: re-resolve existing rows still on the dummy customer SK
+     against the current dim_customer (reference:
+     macros/fact_order_fail_lookup.sql), upsert the incoming orders by
+     ``order_id`` and commit one version (partitioned by order_year for
+     pruning).
 
-Idempotent: re-running with no new data writes nothing new
+Each stage has one commit point, its manifest entry: a crash anywhere
+before it leaves the table and its watermark as they were. Idempotent:
+re-running with no new data commits versions equal to the previous ones
 (merge of empty changes = existing), mirroring dbt's incremental
 materialization semantics.
 """
@@ -26,11 +32,12 @@ from northwind_warehouse_spark.catalog import load
 from northwind_warehouse_spark.functions.hashing import num_str, surrogate_key
 from northwind_warehouse_spark.operators.joins import maybe_broadcast
 from northwind_warehouse_spark.operators.incremental import (
-    AuditControl, high_watermark_filter,
+    AuditControl, high_watermark_filter, incremental_merge_by_key,
 )
 from northwind_warehouse_spark.operators.scd2 import scd2_from_change_stream, scd2_merge
 from northwind_warehouse_spark.plans import medallion
 from northwind_warehouse_spark.sources.lake import read_table, write_table
+from northwind_warehouse_spark.sources.versioned import VersionedTable
 
 
 class WarehousePipeline:
@@ -47,9 +54,7 @@ class WarehousePipeline:
     def _path(self, name: str) -> str:
         return f"{self.lake}/{name}"
 
-    def _vt(self, name: str) -> "VersionedTable":
-        from northwind_warehouse_spark.sources.versioned import VersionedTable
-
+    def _vt(self, name: str) -> VersionedTable:
         return VersionedTable(self.spark, self.lake, name)
 
     def _exists(self, name: str) -> bool:
@@ -73,7 +78,6 @@ class WarehousePipeline:
 
     def run_dim_users(self, sf_dir: str) -> None:
         entity = self.DIM_USERS
-        self.audit.initialize(entity, "events", "user_id")
         hwm = self.audit.get(entity).hwm_date
         changes = self._user_changes(sf_dir, hwm)
         hash_col = surrogate_key("event_type", num_str("value"))
@@ -87,45 +91,32 @@ class WarehousePipeline:
             dim = scd2_merge(vt.read(), changes, **kwargs)
         else:
             dim = scd2_from_change_stream(changes, **kwargs)
-        # each run commits an immutable version — no read/overwrite
-        # conflict, and past runs stay reproducible (time travel)
-        vt.write(dim)
         new_hwm = changes.agg(F.max("ts")).collect()[0][0]
-        if new_hwm is not None:
-            self.audit.update(entity, new_hwm)
+        # each run commits an immutable version with its watermark in one
+        # manifest swap — no read/overwrite conflict, past runs stay
+        # reproducible (time travel)
+        vt.write(dim, watermark=new_hwm or hwm)
 
     def run_fact_orders(self, sf_dir: str) -> None:
         entity = self.FACT_ORDERS
-        self.audit.initialize(entity, "orders", "order_id")
         fact = medallion.fact_orders(self.spark, sf_dir).withColumn(
             "order_year", F.year("order_date")
         )
         vt = self._vt(entity)
         if self._exists(entity):
-            merged = vt.read().join(
-                fact.select("order_id").distinct(), ["order_id"], "left_anti"
-            ).unionByName(fact)
-        else:
-            merged = fact
-        vt.write(merged, partition_by=("order_year",))
-        self.audit.update(entity, datetime.now())
+            existing = self.refresh_failed_lookups(
+                vt.read(), medallion.dim_customer(self.spark, sf_dir))
+            fact = incremental_merge_by_key(existing, fact, ["order_id"])
+        vt.write(fact, partition_by=("order_year",))
 
-    def refresh_failed_lookups(self, sf_dir: str) -> int:
-        """Re-resolve fact rows stuck on the dummy customer SK
-        (reference: macros/fact_order_fail_lookup.sql) — e.g. after a
-        late-arriving dimension load. Returns the number of repaired rows."""
-        entity = self.FACT_ORDERS
-        if not self._exists(entity):
-            return 0
-        vt = self._vt(entity)
-        fact = vt.read()
+    def refresh_failed_lookups(self, fact: DataFrame, dim: DataFrame) -> DataFrame:
+        """``fact`` with its rows still on the dummy customer SK
+        re-resolved against ``dim`` (reference:
+        macros/fact_order_fail_lookup.sql) — e.g. after a late-arriving
+        dimension load. Lazy: the caller's commit runs it."""
         dummy_sk = surrogate_key(F.lit(0))
         failed = fact.filter(F.col("customer_sk") == dummy_sk)
-        n_failed = failed.count()
-        if n_failed == 0:
-            return 0
-        ok = fact.filter(F.col("customer_sk") != dummy_sk)
-        dim = medallion.dim_customer(self.spark, sf_dir).select(
+        dim = dim.select(
             F.col("customer_id").alias("_cid"), F.col("customer_sk").alias("_sk"),
             F.col("nation_name").alias("_nn"), F.col("region_name").alias("_rn"),
         )
@@ -136,14 +127,12 @@ class WarehousePipeline:
             .withColumn("region_name", F.coalesce("_rn", F.lit("Not Found")))
             .drop("_cid", "_sk", "_nn", "_rn")
         )
-        vt.write(ok.unionByName(repaired), partition_by=("order_year",))
-        return n_failed
+        return fact.filter(F.col("customer_sk") != dummy_sk).unionByName(repaired)
 
     def run(self, sf_dir: str) -> None:
         self.run_staging(sf_dir)
         self.run_dim_users(sf_dir)
         self.run_fact_orders(sf_dir)
-        self.refresh_failed_lookups(sf_dir)
 
     # -- reads -------------------------------------------------------------
 

@@ -45,14 +45,6 @@ def read_json(spark: SparkSession, path: str, schema: str) -> DataFrame:
     return spark.read.schema(schema).json(path)
 
 
-def write_csv(df: DataFrame, path: str, header: bool = True, mode: str = "overwrite") -> None:
-    df.write.mode(mode).option("header", str(header).lower()).csv(path)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)
-
-
 def read_orc(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
 

@@ -10,8 +10,13 @@ pinned to version N sees identical bytes forever, regardless of later
 writes.
 
 Layout:
-    <root>/<table>/_manifest.json        # [{version, committed_at, path}]
+    <root>/<table>/_manifest.json   # [{version, committed_at, path, watermark}]
     <root>/<table>/v=<n>/ ... parquet ...
+
+A manifest entry is the only commit point of a version: its data
+directory and its source ``watermark`` (the newest source timestamp the
+version has absorbed, naive UTC ISO, or null) land in the same atomic
+``os.replace`` of the manifest — the ``txn`` action of Delta Lake's log.
 
 Write amplification is per-version (full snapshots, like the reference's
 materialized tables) — incremental formats (Delta/Iceberg) swap in
@@ -22,9 +27,20 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+def _aware_utc(ts: datetime) -> datetime:
+    """``ts`` as an aware datetime; a naive one is read as UTC."""
+    return ts.replace(tzinfo=timezone.utc) if ts.tzinfo is None else ts
+
+
+def naive_utc(ts: datetime) -> datetime:
+    """``ts`` as a naive UTC datetime; a naive one is already UTC."""
+    return _aware_utc(ts).astimezone(timezone.utc).replace(tzinfo=None)
 
 
 class VersionedTable:
@@ -51,20 +67,25 @@ class VersionedTable:
         df: DataFrame,
         committed_at: datetime | None = None,
         partition_by: tuple[str, ...] = (),
+        watermark: datetime | None = None,
     ) -> int:
-        """Commit a new immutable version; returns its id."""
+        """Commit a new immutable version, with the source ``watermark``
+        it has absorbed; returns its id."""
         manifest = self._manifest()
         version = (manifest[-1]["version"] + 1) if manifest else 0
         path = os.path.join(self.dir, f"v={version}")
+        # no entry references v=<version>: it can only be left by a commit
+        # that crashed before its manifest swap
+        shutil.rmtree(path, ignore_errors=True)
         writer = df.write.mode("errorifexists")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
-        committed = committed_at or datetime.now(timezone.utc)
         manifest.append({
             "version": version,
-            "committed_at": committed.isoformat(),
+            "committed_at": _aware_utc(committed_at or datetime.now(timezone.utc)).isoformat(),
             "path": path,
+            "watermark": naive_utc(watermark).isoformat() if watermark else None,
         })
         os.makedirs(self.dir, exist_ok=True)
         tmp = self.manifest_path + ".tmp"
@@ -101,16 +122,12 @@ class VersionedTable:
         rewritten atomically BEFORE directories are removed — a crash
         between the two leaves unreferenced files (harmless, re-vacuumable),
         never a manifest pointing at deleted data."""
-        import shutil
-
         manifest = self._manifest()
         keep_last = max(1, keep_last)
         cutoff = manifest[:-keep_last] if keep_last < len(manifest) else []
         if older_than is not None:
-            if older_than.tzinfo is None:
-                older_than = older_than.replace(tzinfo=timezone.utc)
             cutoff = [m for m in cutoff
-                      if datetime.fromisoformat(m["committed_at"]) < older_than]
+                      if datetime.fromisoformat(m["committed_at"]) < _aware_utc(older_than)]
         if not cutoff:
             return []
         dropped = {m["version"] for m in cutoff}
@@ -126,11 +143,9 @@ class VersionedTable:
     def read_asof(self, ts: datetime) -> DataFrame:
         """The newest version committed at or before ``ts`` — the
         ``AT (TIMESTAMP => ...)`` semantics of the reference."""
-        if ts.tzinfo is None:
-            ts = ts.replace(tzinfo=timezone.utc)
         eligible = [
             m for m in self._manifest()
-            if datetime.fromisoformat(m["committed_at"]) <= ts
+            if datetime.fromisoformat(m["committed_at"]) <= _aware_utc(ts)
         ]
         if not eligible:
             raise KeyError(f"no version of {self.dir} existed at {ts.isoformat()}")

@@ -136,21 +136,36 @@ def test_incremental_merge_by_key(spark):
 
 
 def test_audit_control_roundtrip(spark, tmp_path):
-    from datetime import datetime
+    """The audit state is the latest manifest entry's watermark: absent
+    until a version commits one, then that watermark (naive UTC)."""
+    from datetime import datetime, timedelta, timezone
+
+    import pytest
 
     from northwind_warehouse_spark.operators.incremental import AuditControl
+    from northwind_warehouse_spark.sources.versioned import VersionedTable
 
-    ac = AuditControl(spark, str(tmp_path / "audit_control"))
-    ac.initialize("dim_users", "events", "user_id")
-    ac.initialize("dim_users", "events", "user_id")  # idempotent
+    ac = AuditControl(spark, str(tmp_path / "_audit" / "audit_control"))
+    ac.initialize("dim_users", "events", "user_id")  # stores nothing
+    entry = ac.get("dim_users")
+    assert not entry.is_initialized and not entry.is_processed
+    assert entry.hwm_date == datetime(1900, 1, 1)
+    assert not (tmp_path / "_audit").exists()
+
+    vt = VersionedTable(spark, str(tmp_path), "dim_users")
+    vt.write(spark.range(1))  # a version without a watermark
     entry = ac.get("dim_users")
     assert entry.is_initialized and not entry.is_processed
     assert entry.hwm_date == datetime(1900, 1, 1)
 
-    ac.update("dim_users", datetime(2024, 1, 15, 12, 0, 0))
+    cet = timezone(timedelta(hours=1))
+    vt.write(spark.range(1), watermark=datetime(2024, 1, 15, 13, 0, 0, tzinfo=cet))
     entry = ac.get("dim_users")
     assert entry.is_processed
     assert entry.hwm_date == datetime(2024, 1, 15, 12, 0, 0)
+
+    with pytest.raises(NotImplementedError, match="watermark="):
+        ac.update("dim_users", datetime(2024, 2, 1))
 
 
 def test_salted_join_equals_plain_join(spark):

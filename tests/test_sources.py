@@ -101,14 +101,15 @@ def test_processing_date_range_macro_parity(spark, tmp_path):
     from northwind_warehouse_spark.operators.incremental import (
         AuditControl, processing_date_range,
     )
+    from northwind_warehouse_spark.sources.versioned import VersionedTable
 
-    audit = AuditControl(spark, str(tmp_path / "audit"))
-    audit.initialize("dim_users", driver_table="events", business_key="user_id")
+    audit = AuditControl(spark, str(tmp_path / "_audit" / "audit_control"))
     target = datetime(2024, 1, 10)
     rng = processing_date_range(audit, "dim_users", target)
     assert rng["needs_processing"] and rng["start_date"] == target and rng["total_days"] == 1
 
-    audit.update("dim_users", hwm_date=datetime(2024, 1, 8), processed_at=datetime(2024, 1, 8))
+    VersionedTable(spark, str(tmp_path), "dim_users").write(
+        spark.range(1), watermark=datetime(2024, 1, 8), committed_at=datetime(2024, 1, 8))
     rng = processing_date_range(audit, "dim_users", target)
     assert rng["start_date"] == datetime(2024, 1, 8) and rng["total_days"] == 3
     assert rng["hwm_date"] == datetime(2024, 1, 8) and rng["is_processed"]

@@ -83,3 +83,31 @@ def test_vacuum_retention(spark, tmp_path):
     # keep_last=0 is clamped: the newest version can never be vacuumed
     assert t.vacuum(keep_last=0) == [2]
     assert [m["version"] for m in t.versions()] == [3]
+
+
+def test_crashed_commit_does_not_wedge_the_table(spark, tmp_path, monkeypatch):
+    """A commit that dies after writing its ``v=<n>`` directory but before
+    the manifest swap leaves that directory unreferenced. The next write
+    must reuse the id and commit, not fail on the leftover forever."""
+    import os
+
+    from northwind_warehouse_spark.sources.versioned import VersionedTable
+
+    t = VersionedTable(spark, str(tmp_path), "t")
+    assert t.write(spark.range(3), watermark=datetime(2024, 1, 1)) == 0
+
+    def crash(*args, **kwargs):
+        raise OSError("crash before the manifest swap")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", crash)
+        with pytest.raises(OSError):
+            t.write(spark.range(5), watermark=datetime(2024, 1, 2))
+    assert os.path.isdir(os.path.join(str(tmp_path), "t", "v=1"))
+    assert [(v["version"], v["watermark"]) for v in t.versions()] == [(0, "2024-01-01T00:00:00")]
+    assert t.read().count() == 3
+
+    for n in (7, 9):  # every retry commits, not only the first
+        v = t.write(spark.range(n), watermark=datetime(2024, 1, 3))
+        assert t.read().count() == n and t.versions()[-1]["version"] == v
+    assert [v["version"] for v in t.versions()] == [0, 1, 2]

@@ -1210,8 +1210,9 @@ def main() -> None:
         "When the parameter gate declines the children broadcast, the",
         "level-2 IVF join shuffles on super_id — only √k distinct values,",
         "so an unsalted exchange keeps ≤√k reducers busy. Round 8 salts",
-        "the closed branch (_L2_SALT=8). tools/closed_gate_probe.py",
-        "(gate forced closed, min-of-2, multiset equality asserted):",
+        "the closed branch (_L2_SALT=8). The round-8 forced-closed probe",
+        "(gate forced closed, min-of-2, multiset equality asserted; also",
+        "recorded in SURVEY.md):",
         "10× (n=20k, k=157, √k=13 keys on 32 cores): unsalted 1.89s →",
         "salted 1.09s (−42% — the hot-key stall is real and the salt",
         "removes it); 30× (n=60k, k=469, √k=22): 1.90s → 1.84s (keys",
