@@ -2,12 +2,16 @@
 
 ``entry(spark)`` smoke-runs the flagship query; ``queries()`` /
 ``oracle_sql()`` list every implemented operator from SURVEY.md §2 with
-its DuckDB oracle. Column names are aliased identically on both sides
-(the driver sorts columns by name before hashing).
+its DuckDB oracle. A plan builder in ``plans/medallion.py``,
+``plans/analytics.py`` or ``plans/llm.py`` is registered by defining its
+oracle, ``oracle_<name>()``, beside it. Column names are aliased
+identically on both sides (the driver sorts columns by name before
+hashing).
 """
 
 from __future__ import annotations
 
+import inspect
 import sys
 from collections.abc import Callable
 from pathlib import Path
@@ -26,776 +30,49 @@ def entry(spark: SparkSession) -> DataFrame:
     return analytics.q1_pricing_summary(spark, "/root/testdata/sf0.001")
 
 
-# The driver's correctness gate samples the FIRST 50 registry entries
-# (round-1 evidence: CORRECTNESS_r01.json == keys 1..50 in insertion
-# order). Front-load a representative spread — every LLM-pipeline op,
-# the medallion core, and the headline analytics — so the recorded
-# evidence covers all of SURVEY §2's sections; the remainder keep full
-# local coverage via tests/test_oracle.py at sf0.001 AND sf0.01.
+# The driver's correctness gate samples the first 50 entries of queries().
 _DRIVER_FIRST = (
-    # round-10 rotation: (a) every key whose RESULTS or PLAN changed
-    # this round — the stored-index serving family (occupancy-scaled
-    # two-level build + probes, P=4, generation-partitioned storage:
-    # results changed), bpe_encode (per-round persist: plan changed,
-    # results identical), dedup_minhash_lsh_lake (checkpoint root now
-    # env-derived) — so the recorded gate evidence covers the rework;
-    # (b) the last two never-gated keys (every registry key has now
-    # been driver-gated at least once); (c) staleness refresh — the
-    # keys gated LONGEST ago (round 1), so gate evidence ages out.
-    # Every key keeps full local two-SF + type-parity coverage via
-    # tests/test_oracle.py regardless of rotation.
-    # (a) round-11 rework — the stored-index serving family goes
-    # through the new k-policy probe entry (_idx_query_probe /
-    # _idx_nprobe: results identical at the gate SF by the proven
-    # flat≡hier(S≥√k) identity, plans re-derived), the NEW hier-branch
-    # gate twin (ann_ivfpq_hier_probe_recall — first gate ever), and
-    # knn_graph_cell_local (now reads the stored gen-0 assignment:
-    # plan changed, results identical)
     "ann_ivfpq_from_index", "ann_ivfpq_multiprobe_from_index",
     "ann_ivfpq_from_index_recall", "ann_ivfpq_hier_probe_recall",
-    "knn_graph_cell_local",
-    # round-10 rework, retained one more round
-    "bpe_encode", "dedup_minhash_lsh_lake",
-    # (a) round-12 rework, gated r13 per the rotation policy — the
-    # triangle pair-aggregation rewrite (NEW persist + mirrored union
-    # in the plan, results identical; r12 verdict What's-wrong #1)
-    "part_cooccurrence_topk",
-    # (a) round-14 rework (optimization round 2) — plans changed,
-    # results identical (oracle-proven at both SFs): the count-branch
-    # spread bypass (medallion_reconciliation), the pinned prefix cache
-    # width (dedup_prefix_filter_join), the truth/pairs persists
-    # extended beyond the verdict twins (ann_ivf_multiprobe_recall,
-    # ann_recall_eval), the select_explode unigram branch
-    # (collocation_lift_top) and the equivalent completion-length gate
-    # (sft_pair_manifest). Six round-1/r13-refresh keys with untouched
-    # plans rotated out (full two-SF coverage stays via
-    # tests/test_oracle.py).
-    "medallion_reconciliation", "dedup_prefix_filter_join",
-    "ann_ivf_multiprobe_recall", "ann_recall_eval",
-    "collocation_lift_top", "sft_pair_manifest",
-    # (a') round-10 second wave — plans changed (staged token arrays
-    # out of lambda bodies; tf/trigram persists), results identical
+    "knn_graph_cell_local", "bpe_encode", "dedup_minhash_lsh_lake",
+    "part_cooccurrence_topk", "medallion_reconciliation",
+    "dedup_prefix_filter_join", "ann_ivf_multiprobe_recall",
+    "ann_recall_eval", "collocation_lift_top", "sft_pair_manifest",
     "bpe_pair_stats", "dup_ngram_fraction", "ngram_novelty",
     "quality_gate_ablation", "tfidf_top_terms",
-    # (b) gated r10
-    "purchase_breadth_bands", "brand_return_rates",
-    # (c) round-1-vintage refresh (alphabetical within vintage;
-    # cube_sales / customer_spend_deciles rotated out r11 — freshly
-    # gated r10, full two-SF coverage via tests/test_oracle.py)
-    "dim_part",
-    "dim_supplier", "q10_returned_items",
-    "q11_important_parts", "q12_priority_shipping",
-    "q13_order_distribution", "q14_promo_revenue", "q15_top_supplier",
-    "q16_parts_supplier_count", "q17_small_quantity_revenue",
-    "q18_large_orders", "q19_disjunctive_revenue", "q20_excess_suppliers",
-    "q21_waiting_suppliers", "q22_idle_customers", "q2_min_cost_supplier",
-    "q3_shipping_priority", "q4_order_priority", "q6_forecast_revenue",
-    "q7_nation_volume", "q8_market_share", "q9_product_profit",
-    "repeat_buyers", "rollup_sales", "sketch_distinct_users",
-    "snapshot_users", "stg_orders", "top_customers_per_nation",
-    "asof_events",
+    "purchase_breadth_bands", "brand_return_rates", "dim_part",
+    "dim_supplier", "q10_returned_items", "q11_important_parts",
+    "q12_priority_shipping", "q13_order_distribution",
+    "q14_promo_revenue", "q15_top_supplier", "q16_parts_supplier_count",
+    "q17_small_quantity_revenue", "q18_large_orders",
+    "q19_disjunctive_revenue", "q20_excess_suppliers",
+    "q21_waiting_suppliers", "q22_idle_customers",
+    "q2_min_cost_supplier", "q3_shipping_priority", "q4_order_priority",
+    "q6_forecast_revenue", "q7_nation_volume", "q8_market_share",
+    "q9_product_profit", "repeat_buyers", "rollup_sales",
+    "sketch_distinct_users", "snapshot_users", "stg_orders",
+    "top_customers_per_nation", "asof_events",
 )
 
 
-def _prioritize(q: dict) -> dict:
-    ordered = {k: q[k] for k in _DRIVER_FIRST if k in q}
-    ordered.update(q)
-    return ordered
+def _builders() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every plan builder defined in a plan module with an ``oracle_<name>``
+    twin beside it, module by module, each in definition order."""
+    found = {}
+    for mod in (medallion, analytics, llm):
+        names = vars(mod)
+        for name, fn in names.items():
+            if (inspect.isfunction(fn) and fn.__module__ == mod.__name__
+                    and f"oracle_{name}" in names):
+                found[name] = fn
+    return found
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return _prioritize({
-        "stg_customer": medallion.stg_customer,
-        "stg_orders": medallion.stg_orders,
-        "stg_lineitem": medallion.stg_lineitem,
-        "stg_events": medallion.stg_events,
-        "dim_date": medallion.dim_date,
-        "dim_customer": medallion.dim_customer,
-        "dim_part": medallion.dim_part,
-        "dim_supplier": medallion.dim_supplier,
-        "scd2_users": medallion.scd2_users,
-        "snapshot_users": medallion.snapshot_users,
-        "fact_orders": medallion.fact_orders,
-        "fact_lineitem": medallion.fact_lineitem,
-        "asof_events": medallion.asof_events,
-        "incremental_hwm": medallion.incremental_hwm,
-        "missing_dates": medallion.missing_dates,
-        "dq_checks": medallion.dq_checks,
-        "fk_integrity_matrix": medallion.fk_integrity_matrix,
-        "snapshot_diff_users": medallion.snapshot_diff_users,
-        "late_arrival_audit": medallion.late_arrival_audit,
-        "dim_date_fiscal445": medallion.dim_date_fiscal445,
-        "scd4_users": medallion.scd4_users,
-        "fact_resolve_failed": medallion.fact_resolve_failed,
-        "events_unpivot": analytics.events_unpivot,
-        "q1_pricing_summary": analytics.q1_pricing_summary,
-        "q3_shipping_priority": analytics.q3_shipping_priority,
-        "q5_local_revenue": analytics.q5_local_revenue,
-        "q6_forecast_revenue": analytics.q6_forecast_revenue,
-        "q10_returned_items": analytics.q10_returned_items,
-        "top_customers_per_nation": analytics.top_customers_per_nation,
-        "rollup_sales": analytics.rollup_sales,
-        "events_pivot": analytics.events_pivot,
-        "events_sessionize": analytics.events_sessionize,
-        "q4_order_priority": analytics.q4_order_priority,
-        "q14_promo_revenue": analytics.q14_promo_revenue,
-        "q16_parts_supplier_count": analytics.q16_parts_supplier_count,
-        "q18_large_orders": analytics.q18_large_orders,
-        "q22_idle_customers": analytics.q22_idle_customers,
-        "events_props_extract": analytics.events_props_extract,
-        "median_order_value": analytics.median_order_value,
-        "q7_nation_volume": analytics.q7_nation_volume,
-        "cube_sales": analytics.cube_sales,
-        "monthly_revenue_running": analytics.monthly_revenue_running,
-        "repeat_buyers": analytics.repeat_buyers,
-        "sketch_distinct_users": analytics.sketch_distinct_users,
-        "customer_spend_deciles": analytics.customer_spend_deciles,
-        "q19_disjunctive_revenue": analytics.q19_disjunctive_revenue,
-        "q8_market_share": analytics.q8_market_share,
-        "q2_min_cost_supplier": analytics.q2_min_cost_supplier,
-        "q9_product_profit": analytics.q9_product_profit,
-        "q11_important_parts": analytics.q11_important_parts,
-        "q12_priority_shipping": analytics.q12_priority_shipping,
-        "q13_order_distribution": analytics.q13_order_distribution,
-        "q15_top_supplier": analytics.q15_top_supplier,
-        "q17_small_quantity_revenue": analytics.q17_small_quantity_revenue,
-        "q20_excess_suppliers": analytics.q20_excess_suppliers,
-        "q21_waiting_suppliers": analytics.q21_waiting_suppliers,
-        "events_resample": analytics.events_resample,
-        "grouping_sets_sales": analytics.grouping_sets_sales,
-        "approx_order_quantiles": analytics.approx_order_quantiles,
-        "events_funnel": analytics.events_funnel,
-        "retention_cohorts": analytics.retention_cohorts,
-        "customer_spend_distribution": analytics.customer_spend_distribution,
-        "dedup_exact": llm.dedup_exact,
-        "dedup_minhash_lsh": llm.dedup_minhash_lsh,
-        "dedup_minhash_lsh_lake": llm.dedup_minhash_lsh_lake,
-        "dedup_ngram_jaccard": llm.dedup_ngram_jaccard,
-        "dedup_simhash": llm.dedup_simhash,
-        "text_quality": llm.text_quality,
-        "quality_filter": llm.quality_filter,
-        "lang_id": llm.lang_id,
-        "token_count": llm.token_count,
-        "doc_fingerprint": llm.doc_fingerprint,
-        "doc_chunking": llm.doc_chunking,
-        "train_val_split": llm.train_val_split,
-        "ann_cosine_topk": llm.ann_cosine_topk,
-        "ann_lsh": llm.ann_lsh,
-        "ann_lsh_topk": llm.ann_lsh_topk,
-        "dedup_embedding_cosine": llm.dedup_embedding_cosine,
-        "embedding_stats": llm.embedding_stats,
-        "vocab_top_terms": llm.vocab_top_terms,
-        "repetition_quality": llm.repetition_quality,
-        "contamination_check": llm.contamination_check,
-        "dedup_cross_corpus": llm.dedup_cross_corpus,
-        "dedup_clusters": llm.dedup_clusters,
-        "dedup_semantic_clusters": llm.dedup_semantic_clusters,
-        "corpus_sample": llm.corpus_sample,
-        "corpus_sample_per_source": llm.corpus_sample_per_source,
-        "domain_mixture": llm.domain_mixture,
-        "dedup_chunks": llm.dedup_chunks,
-        "ann_ivf_topk": llm.ann_ivf_topk,
-        "ann_ivf_multiprobe_topk": llm.ann_ivf_multiprobe_topk,
-        "ann_ivf_multiprobe_recall": llm.ann_ivf_multiprobe_recall,
-        "collapse_repeats": llm.collapse_repeats,
-        "bpe_pair_stats": llm.bpe_pair_stats,
-        "multimodal_extract": llm.multimodal_extract,
-        "sequence_pack": llm.sequence_pack,
-        "tfidf_top_terms": llm.tfidf_top_terms,
-        "pii_redact": llm.pii_redact,
-        "bigram_lm_quality": llm.bigram_lm_quality,
-        "interval_join_attribution": analytics.interval_join_attribution,
-        "events_daily_active": analytics.events_daily_active,
-        "events_spike_detect": analytics.events_spike_detect,
-        "events_cusum_detect": analytics.events_cusum_detect,
-        "jackknife_mean_ci": analytics.jackknife_mean_ci,
-        "seasonal_residual_outliers": analytics.seasonal_residual_outliers,
-        "supplier_share_shift": analytics.supplier_share_shift,
-        "discount_quantity_elasticity": analytics.discount_quantity_elasticity,
-        "cohort_ltv_curve": analytics.cohort_ltv_curve,
-        "xyz_parts_variability": analytics.xyz_parts_variability,
-        "sample_extrapolation_error": analytics.sample_extrapolation_error,
-        "tax_reconciliation_annual": analytics.tax_reconciliation_annual,
-        "event_type_user_overlap": analytics.event_type_user_overlap,
-        "nation_quantile_bands": analytics.nation_quantile_bands,
-        "events_burst_windows": analytics.events_burst_windows,
-        "drill_across_customer_360": analytics.drill_across_customer_360,
-        "role_playing_date_latency": analytics.role_playing_date_latency,
-        "train_val_test_split": llm.train_val_test_split,
-        "mixture_resample": llm.mixture_resample,
-        "kmeans_iter": llm.kmeans_iter,
-        "knn_classify": llm.knn_classify,
-        "dedup_graph_degrees": llm.dedup_graph_degrees,
-        "corpus_dedup_apply": llm.corpus_dedup_apply,
-        "rfm_segments": analytics.rfm_segments,
-        "dedup_minhash_estimate": llm.dedup_minhash_estimate,
-        "events_transitions": analytics.events_transitions,
-        "ship_latency_stats": analytics.ship_latency_stats,
-        "bpe_merge_step": llm.bpe_merge_step,
-        "model_score_filter": llm.model_score_filter,
-        "score_lift_table": llm.score_lift_table,
-        "lm_quality_terciles": llm.lm_quality_terciles,
-        "dedup_canonical_by_quality": llm.dedup_canonical_by_quality,
-        "except_churned": analytics.except_churned,
-        "moving_avg_revenue": analytics.moving_avg_revenue,
-        "order_value_histogram": analytics.order_value_histogram,
-        "monthly_revenue_mom": analytics.monthly_revenue_mom,
-        "events_trigram_paths": analytics.events_trigram_paths,
-        "scd2_asof_users": medallion.scd2_asof_users,
-        "cdc_apply_latest": medallion.cdc_apply_latest,
-        "ann_recall_eval": llm.ann_recall_eval,
-        "key_skew_audit": analytics.key_skew_audit,
-        "bpe_encode": llm.bpe_encode,
-        "embedding_quantize_int8": llm.embedding_quantize_int8,
-        "events_weekly_active": analytics.events_weekly_active,
-        "nation_order_extremes": analytics.nation_order_extremes,
-        "quarantine_orders": medallion.quarantine_orders,
-        "table_stats_orders": medallion.table_stats_orders,
-        "scd2_integrity_audit": medallion.scd2_integrity_audit,
-        "events_interpolate": analytics.events_interpolate,
-        "nation_coverage": analytics.nation_coverage,
-        "lang_confusion_matrix": llm.lang_confusion_matrix,
-        "dup_ngram_fraction": llm.dup_ngram_fraction,
-        "revenue_share_of_parent": analytics.revenue_share_of_parent,
-        "benford_price_audit": analytics.benford_price_audit,
-        "basket_affinity": analytics.basket_affinity,
-        "pareto_customers": analytics.pareto_customers,
-        "abc_parts": analytics.abc_parts,
-        "interpurchase_intervals": analytics.interpurchase_intervals,
-        "skyline_parts": analytics.skyline_parts,
-        "sketch_distinct_rollup": analytics.sketch_distinct_rollup,
-        "event_pagerank": analytics.event_pagerank,
-        "equi_depth_histogram": analytics.equi_depth_histogram,
-        "twap_event_value": analytics.twap_event_value,
-        "fuzzy_part_matches": analytics.fuzzy_part_matches,
-        "dim_part_multisource": medallion.dim_part_multisource,
-        "hierarchy_unroll": medallion.hierarchy_unroll,
-        "scd2_parts_multisource": medallion.scd2_parts_multisource,
-        "hierarchy_rollup": medallion.hierarchy_rollup,
-        "corpus_sample_token_budget": llm.corpus_sample_token_budget,
-        "quality_stratified_sample": llm.quality_stratified_sample,
-        "boilerplate_prune": llm.boilerplate_prune,
-        "winnow_fingerprint": llm.winnow_fingerprint,
-        "ann_pq_topk": llm.ann_pq_topk,
-        "ann_pq_recall": llm.ann_pq_recall,
-        "curate_corpus": llm.curate_corpus,
-        "winnow_overlap_pairs": llm.winnow_overlap_pairs,
-        "pq_refine_stats": llm.pq_refine_stats,
-        "pq_train_rounds": llm.pq_train_rounds,
-        "knn_graph_cell_local": llm.knn_graph_cell_local,
-        "label_centroid_separation": llm.label_centroid_separation,
-        "lsh_band_tuning": llm.lsh_band_tuning,
-        "dedup_exact_normalized": llm.dedup_exact_normalized,
-        "distinctive_terms_by_source": llm.distinctive_terms_by_source,
-        "shingle_df_profile": llm.shingle_df_profile,
-        "ann_pq_rerank_topk": llm.ann_pq_rerank_topk,
-        "dedup_incremental_new_batch": llm.dedup_incremental_new_batch,
-        "lsh_bucket_occupancy": llm.lsh_bucket_occupancy,
-        "sentence_stats": llm.sentence_stats,
-        "fact_order_lifecycle": medallion.fact_order_lifecycle,
-        "fact_inventory_monthly": medallion.fact_inventory_monthly,
-        "gaps_islands_orders": analytics.gaps_islands_orders,
-        "revenue_alloc_largest_remainder": analytics.revenue_alloc_largest_remainder,
-        "mad_outlier_orders": analytics.mad_outlier_orders,
-        "dedup_prefix_truncation": llm.dedup_prefix_truncation,
-        "ngram_novelty": llm.ngram_novelty,
-        "tokenizer_fertility": llm.tokenizer_fertility,
-        "simhash_hamming_pairs": llm.simhash_hamming_pairs,
-        "embedding_outliers": llm.embedding_outliers,
-        "ann_ivfpq_topk": llm.ann_ivfpq_topk,
-        "ann_ivfpq_from_index": llm.ann_ivfpq_from_index,
-        "ann_ivfpq_multiprobe_from_index": llm.ann_ivfpq_multiprobe_from_index,
-        "ann_ivfpq_from_index_recall": llm.ann_ivfpq_from_index_recall,
-        "scd3_users": medallion.scd3_users,
-        "junk_dim_orders": medallion.junk_dim_orders,
-        "asof_events_forward": medallion.asof_events_forward,
-        "asof_events_tolerance": medallion.asof_events_tolerance,
-        "dedup_graph_triangles": llm.dedup_graph_triangles,
-        "bloom_prefilter_audit": analytics.bloom_prefilter_audit,
-        "attribution_models": analytics.attribution_models,
-        "events_debounce": analytics.events_debounce,
-        "dedup_containment": llm.dedup_containment,
-        "vocab_coverage": llm.vocab_coverage,
-        "bom_explosion": medallion.bom_explosion,
-        "revenue_trend_slope": analytics.revenue_trend_slope,
-        "minhash_recall_eval": llm.minhash_recall_eval,
-        "pack_efficiency_audit": llm.pack_efficiency_audit,
-        "sample_representativeness": llm.sample_representativeness,
-        "order_aging_report": analytics.order_aging_report,
-        "kmv_overlap_estimate": analytics.kmv_overlap_estimate,
-        "events_session_window": analytics.events_session_window,
-        "segment_priority_chi2": analytics.segment_priority_chi2,
-        "market_concentration_hhi": analytics.market_concentration_hhi,
-        "cross_source_overlap_matrix": llm.cross_source_overlap_matrix,
-        "embedding_power_iter": llm.embedding_power_iter,
-        "dim_customer_inferred": medallion.dim_customer_inferred,
-        "multimodal_frame_manifest": llm.multimodal_frame_manifest,
-        "multimodal_resize_audit": llm.multimodal_resize_audit,
-        "order_backlog_daily": analytics.order_backlog_daily,
-        "dedup_savings_by_source": llm.dedup_savings_by_source,
-        "dup_quality_correlation": llm.dup_quality_correlation,
-        "dedup_prefix_filter_join": llm.dedup_prefix_filter_join,
-        "events_funnel_timebound": analytics.events_funnel_timebound,
-        "dedup_consensus_pairs": llm.dedup_consensus_pairs,
-        "scd6_users": medallion.scd6_users,
-        "customer_growth_accounting": analytics.customer_growth_accounting,
-        "price_volume_mix": analytics.price_volume_mix,
-        "order_fulfillment_sla": analytics.order_fulfillment_sla,
-        "events_dow_hour_profile": analytics.events_dow_hour_profile,
-        "dedup_cluster_size_histogram": llm.dedup_cluster_size_histogram,
-        "vocab_growth_curve": llm.vocab_growth_curve,
-        "doc_length_bands": llm.doc_length_bands,
-        "monthly_seasonal_index": analytics.monthly_seasonal_index,
-        "discount_effectiveness": analytics.discount_effectiveness,
-        "next_click_latency_percentiles": analytics.next_click_latency_percentiles,
-        "winsorized_event_value": analytics.winsorized_event_value,
-        "events_autocorr_lag1": analytics.events_autocorr_lag1,
-        "zipf_rank_frequency": llm.zipf_rank_frequency,
-        "events_fano_factor": analytics.events_fano_factor,
-        "pack_straddle_stats": llm.pack_straddle_stats,
-        # round-6 additions
-        "dim_customer_minidim": medallion.dim_customer_minidim,
-        "revenue_rolling_28d": analytics.revenue_rolling_28d,
-        "new_vs_returning_revenue": analytics.new_vs_returning_revenue,
-        "price_point_bias": analytics.price_point_bias,
-        "event_type_gini_by_user": analytics.event_type_gini_by_user,
-        "supplier_on_time_ship": analytics.supplier_on_time_ship,
-        "split_leakage_audit": llm.split_leakage_audit,
-        "hapax_ratio_quality": llm.hapax_ratio_quality,
-        "dedup_cluster_chain_audit": llm.dedup_cluster_chain_audit,
-        "embedding_dim_variance": llm.embedding_dim_variance,
-        "collocation_lift_top": llm.collocation_lift_top,
-        "label_balance_audit": llm.label_balance_audit,
-        "dead_stock_parts": analytics.dead_stock_parts,
-        "revenue_by_customer_tenure_band": analytics.revenue_by_customer_tenure_band,
-        "fiscal_period_sales": analytics.fiscal_period_sales,
-        "order_size_value_matrix": analytics.order_size_value_matrix,
-        "events_value_profile": analytics.events_value_profile,
-        "candidate_jaccard_histogram": llm.candidate_jaccard_histogram,
-        "token_length_profile": llm.token_length_profile,
-        "int8_reconstruction_error": llm.int8_reconstruction_error,
-        "fiscal_yoy_sales": analytics.fiscal_yoy_sales,
-        "events_bot_heuristic": analytics.events_bot_heuristic,
-        "brand_return_rates": analytics.brand_return_rates,
-        "events_stickiness_monthly": analytics.events_stickiness_monthly,
-        "band_agreement_histogram": llm.band_agreement_histogram,
-        "curation_funnel_report": llm.curation_funnel_report,
-        "stopword_profile_by_source": llm.stopword_profile_by_source,
-        "purchase_breadth_bands": analytics.purchase_breadth_bands,
-        "session_type_affinity": analytics.session_type_affinity,
-        "doc_embedding_coverage": llm.doc_embedding_coverage,
-        "source_vocab_tv_distance": llm.source_vocab_tv_distance,
-        "knn_label_purity": llm.knn_label_purity,
-        "quarter_end_loading": analytics.quarter_end_loading,
-        "sole_source_parts": analytics.sole_source_parts,
-        "orders_dow_seasonality": analytics.orders_dow_seasonality,
-        "supplier_risk_screen": analytics.supplier_risk_screen,
-        "part_cooccurrence_topk": analytics.part_cooccurrence_topk,
-        "scd2_compaction": medallion.scd2_compaction,
-        "ivf_cell_occupancy": llm.ivf_cell_occupancy,
-        "simhash_bit_balance": llm.simhash_bit_balance,
-        "dim_date_month_shrunken": medallion.dim_date_month_shrunken,
-        "order_status_drift_monthly": analytics.order_status_drift_monthly,
-        "acctbal_spend_quadrants": analytics.acctbal_spend_quadrants,
-        "pq_code_utilization": llm.pq_code_utilization,
-        "embedding_cosine_histogram": llm.embedding_cosine_histogram,
-        "nation_trade_balance": analytics.nation_trade_balance,
-        "spend_tier_migration": analytics.spend_tier_migration,
-        "retail_price_realization": analytics.retail_price_realization,
-        "charset_profile_by_source": llm.charset_profile_by_source,
-        "fingerprint_collision_audit": llm.fingerprint_collision_audit,
-        "inferred_member_repair": medallion.inferred_member_repair,
-        "brand_repeat_purchase": analytics.brand_repeat_purchase,
-        "part_supplier_price_spread": analytics.part_supplier_price_spread,
-        "multimodal_audio_segments": llm.multimodal_audio_segments,
-        "medallion_reconciliation": medallion.medallion_reconciliation,
-        "dq_lineitem_ranges": medallion.dq_lineitem_ranges,
-        "arpu_monthly": analytics.arpu_monthly,
-        "minhash_seed_uniformity": llm.minhash_seed_uniformity,
-        "shingle_kmv_error": llm.shingle_kmv_error,
-        "embedding_exact_dup_audit": llm.embedding_exact_dup_audit,
-        "import_dependency_concentration": analytics.import_dependency_concentration,
-        "k_anonymity_audit": medallion.k_anonymity_audit,
-        "props_key_profile": analytics.props_key_profile,
-        "discount_cap_whatif": analytics.discount_cap_whatif,
-        "context_fit_audit": llm.context_fit_audit,
-        "churn_training_set": analytics.churn_training_set,
-        "incremental_agg_maintenance": medallion.incremental_agg_maintenance,
-        "hard_negative_mining": llm.hard_negative_mining,
-        "template_family_profile": llm.template_family_profile,
-        "span_corruption_manifest": llm.span_corruption_manifest,
-        "supplier_lead_time_trend": analytics.supplier_lead_time_trend,
-        "sql_surface_nation_revenue": analytics.sql_surface_nation_revenue,
-        "sft_pair_manifest": llm.sft_pair_manifest,
-        "events_new_users_daily": analytics.events_new_users_daily,
-        "source_vocab_jaccard": llm.source_vocab_jaccard,
-        "dv_hub_customer": medallion.dv_hub_customer,
-        "dv_link_order_customer": medallion.dv_link_order_customer,
-        "dv_sat_user_events": medallion.dv_sat_user_events,
-        "dv_pit_users": medallion.dv_pit_users,
-        "halflife_weighted_value": analytics.halflife_weighted_value,
-        "lang_charset_consistency": llm.lang_charset_consistency,
-        "events_salted_type_rollup": analytics.events_salted_type_rollup,
-        "holiday_order_lift": analytics.holiday_order_lift,
-        "quality_gate_ablation": llm.quality_gate_ablation,
-        "events_value_anova": analytics.events_value_anova,
-        "chunk_position_dup_profile": llm.chunk_position_dup_profile,
-        "bitemporal_restatement": medallion.bitemporal_restatement,
-        "seasonal_naive_backtest": analytics.seasonal_naive_backtest,
-        "ann_margin_profile": llm.ann_margin_profile,
-        "lineitem_linenumber_audit": medallion.lineitem_linenumber_audit,
-        "name_format_expectations": medallion.name_format_expectations,
-        "customer_hazard_curve": analytics.customer_hazard_curve,
-        "kfold_assignment_audit": llm.kfold_assignment_audit,
-        "ivf_train_rounds": llm.ivf_train_rounds,
-        "ann_ivfpq_hier_probe_recall": llm.ann_ivfpq_hier_probe_recall,
-    })
+    found = _builders()
+    return {**{k: found[k] for k in _DRIVER_FIRST}, **found}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "stg_customer": medallion.oracle_stg_customer(),
-        "stg_orders": medallion.oracle_stg_orders(),
-        "stg_lineitem": medallion.oracle_stg_lineitem(),
-        "stg_events": medallion.oracle_stg_events(),
-        "dim_date": medallion.oracle_dim_date(),
-        "dim_customer": medallion.oracle_dim_customer(),
-        "dim_part": medallion.oracle_dim_part(),
-        "dim_supplier": medallion.oracle_dim_supplier(),
-        "scd2_users": medallion.oracle_scd2_users(),
-        "snapshot_users": medallion.oracle_snapshot_users(),
-        "fact_orders": medallion.oracle_fact_orders(),
-        "fact_lineitem": medallion.oracle_fact_lineitem(),
-        "asof_events": medallion.oracle_asof_events(),
-        "incremental_hwm": medallion.oracle_incremental_hwm(),
-        "missing_dates": medallion.oracle_missing_dates(),
-        "dq_checks": medallion.oracle_dq_checks(),
-        "fk_integrity_matrix": medallion.oracle_fk_integrity_matrix(),
-        "snapshot_diff_users": medallion.oracle_snapshot_diff_users(),
-        "late_arrival_audit": medallion.oracle_late_arrival_audit(),
-        "dim_date_fiscal445": medallion.oracle_dim_date_fiscal445(),
-        "scd4_users": medallion.oracle_scd4_users(),
-        "fact_resolve_failed": medallion.oracle_fact_resolve_failed(),
-        "events_unpivot": analytics.oracle_events_unpivot(),
-        "q1_pricing_summary": analytics.oracle_q1(),
-        "q3_shipping_priority": analytics.oracle_q3(),
-        "q5_local_revenue": analytics.oracle_q5(),
-        "q6_forecast_revenue": analytics.oracle_q6(),
-        "q10_returned_items": analytics.oracle_q10(),
-        "top_customers_per_nation": analytics.oracle_top_customers_per_nation(),
-        "rollup_sales": analytics.oracle_rollup_sales(),
-        "events_pivot": analytics.oracle_events_pivot(),
-        "events_sessionize": analytics.oracle_events_sessionize(),
-        "q4_order_priority": analytics.oracle_q4(),
-        "q14_promo_revenue": analytics.oracle_q14(),
-        "q16_parts_supplier_count": analytics.oracle_q16(),
-        "q18_large_orders": analytics.oracle_q18(),
-        "q22_idle_customers": analytics.oracle_q22(),
-        "events_props_extract": analytics.oracle_events_props_extract(),
-        "median_order_value": analytics.oracle_median_order_value(),
-        "q7_nation_volume": analytics.oracle_q7(),
-        "cube_sales": analytics.oracle_cube_sales(),
-        "monthly_revenue_running": analytics.oracle_monthly_revenue_running(),
-        "repeat_buyers": analytics.oracle_repeat_buyers(),
-        "customer_spend_deciles": analytics.oracle_customer_spend_deciles(),
-        "q19_disjunctive_revenue": analytics.oracle_q19(),
-        "q8_market_share": analytics.oracle_q8(),
-        "q2_min_cost_supplier": analytics.oracle_q2(),
-        "q9_product_profit": analytics.oracle_q9(),
-        "q11_important_parts": analytics.oracle_q11(),
-        "q12_priority_shipping": analytics.oracle_q12(),
-        "q13_order_distribution": analytics.oracle_q13(),
-        "q15_top_supplier": analytics.oracle_q15(),
-        "q17_small_quantity_revenue": analytics.oracle_q17(),
-        "q20_excess_suppliers": analytics.oracle_q20(),
-        "q21_waiting_suppliers": analytics.oracle_q21(),
-        "events_resample": analytics.oracle_events_resample(),
-        "grouping_sets_sales": analytics.oracle_grouping_sets_sales(),
-        "approx_order_quantiles": analytics.oracle_approx_order_quantiles(),
-        "events_funnel": analytics.oracle_events_funnel(),
-        "retention_cohorts": analytics.oracle_retention_cohorts(),
-        "customer_spend_distribution": analytics.oracle_customer_spend_distribution(),
-        "dedup_exact": llm.oracle_dedup_exact(),
-        "dedup_minhash_lsh": llm.oracle_dedup_minhash_lsh(),
-        "dedup_minhash_lsh_lake": llm.oracle_dedup_minhash_lsh_lake(),
-        "dedup_ngram_jaccard": llm.oracle_dedup_ngram_jaccard(),
-        "dedup_simhash": llm.oracle_dedup_simhash(),
-        "sketch_distinct_users": analytics.oracle_sketch_distinct_users(),
-        "text_quality": llm.oracle_text_quality(),
-        "quality_filter": llm.oracle_quality_filter(),
-        "lang_id": llm.oracle_lang_id(),
-        "token_count": llm.oracle_token_count(),
-        "doc_fingerprint": llm.oracle_doc_fingerprint(),
-        "doc_chunking": llm.oracle_doc_chunking(),
-        "train_val_split": llm.oracle_train_val_split(),
-        "ann_cosine_topk": llm.oracle_ann_cosine_topk(),
-        "ann_lsh": llm.oracle_ann_lsh(),
-        "ann_lsh_topk": llm.oracle_ann_lsh_topk(),
-        "dedup_embedding_cosine": llm.oracle_dedup_embedding_cosine(),
-        "embedding_stats": llm.oracle_embedding_stats(),
-        "vocab_top_terms": llm.oracle_vocab_top_terms(),
-        "repetition_quality": llm.oracle_repetition_quality(),
-        "contamination_check": llm.oracle_contamination_check(),
-        "dedup_cross_corpus": llm.oracle_dedup_cross_corpus(),
-        "dedup_clusters": llm.oracle_dedup_clusters(),
-        "dedup_semantic_clusters": llm.oracle_dedup_semantic_clusters(),
-        "corpus_sample": llm.oracle_corpus_sample(),
-        "corpus_sample_per_source": llm.oracle_corpus_sample_per_source(),
-        "domain_mixture": llm.oracle_domain_mixture(),
-        "dedup_chunks": llm.oracle_dedup_chunks(),
-        "ann_ivf_topk": llm.oracle_ann_ivf_topk(),
-        "ann_ivf_multiprobe_topk": llm.oracle_ann_ivf_multiprobe_topk(),
-        "ann_ivf_multiprobe_recall": llm.oracle_ann_ivf_multiprobe_recall(),
-        "collapse_repeats": llm.oracle_collapse_repeats(),
-        "bpe_pair_stats": llm.oracle_bpe_pair_stats(),
-        "multimodal_extract": llm.oracle_multimodal_extract(),
-        "sequence_pack": llm.oracle_sequence_pack(),
-        "tfidf_top_terms": llm.oracle_tfidf_top_terms(),
-        "pii_redact": llm.oracle_pii_redact(),
-        "bigram_lm_quality": llm.oracle_bigram_lm_quality(),
-        "interval_join_attribution": analytics.oracle_interval_join_attribution(),
-        "events_daily_active": analytics.oracle_events_daily_active(),
-        "events_spike_detect": analytics.oracle_events_spike_detect(),
-        "events_cusum_detect": analytics.oracle_events_cusum_detect(),
-        "jackknife_mean_ci": analytics.oracle_jackknife_mean_ci(),
-        "seasonal_residual_outliers": analytics.oracle_seasonal_residual_outliers(),
-        "supplier_share_shift": analytics.oracle_supplier_share_shift(),
-        "discount_quantity_elasticity": analytics.oracle_discount_quantity_elasticity(),
-        "cohort_ltv_curve": analytics.oracle_cohort_ltv_curve(),
-        "xyz_parts_variability": analytics.oracle_xyz_parts_variability(),
-        "sample_extrapolation_error": analytics.oracle_sample_extrapolation_error(),
-        "tax_reconciliation_annual": analytics.oracle_tax_reconciliation_annual(),
-        "event_type_user_overlap": analytics.oracle_event_type_user_overlap(),
-        "nation_quantile_bands": analytics.oracle_nation_quantile_bands(),
-        "events_burst_windows": analytics.oracle_events_burst_windows(),
-        "drill_across_customer_360": analytics.oracle_drill_across_customer_360(),
-        "role_playing_date_latency": analytics.oracle_role_playing_date_latency(),
-        "train_val_test_split": llm.oracle_train_val_test_split(),
-        "mixture_resample": llm.oracle_mixture_resample(),
-        "kmeans_iter": llm.oracle_kmeans_iter(),
-        "knn_classify": llm.oracle_knn_classify(),
-        "dedup_graph_degrees": llm.oracle_dedup_graph_degrees(),
-        "corpus_dedup_apply": llm.oracle_corpus_dedup_apply(),
-        "rfm_segments": analytics.oracle_rfm_segments(),
-        "dedup_minhash_estimate": llm.oracle_dedup_minhash_estimate(),
-        "events_transitions": analytics.oracle_events_transitions(),
-        "ship_latency_stats": analytics.oracle_ship_latency_stats(),
-        "bpe_merge_step": llm.oracle_bpe_merge_step(),
-        "model_score_filter": llm.oracle_model_score_filter(),
-        "score_lift_table": llm.oracle_score_lift_table(),
-        "lm_quality_terciles": llm.oracle_lm_quality_terciles(),
-        "dedup_canonical_by_quality": llm.oracle_dedup_canonical_by_quality(),
-        "except_churned": analytics.oracle_except_churned(),
-        "moving_avg_revenue": analytics.oracle_moving_avg_revenue(),
-        "order_value_histogram": analytics.oracle_order_value_histogram(),
-        "monthly_revenue_mom": analytics.oracle_monthly_revenue_mom(),
-        "events_trigram_paths": analytics.oracle_events_trigram_paths(),
-        "scd2_asof_users": medallion.oracle_scd2_asof_users(),
-        "cdc_apply_latest": medallion.oracle_cdc_apply_latest(),
-        "ann_recall_eval": llm.oracle_ann_recall_eval(),
-        "key_skew_audit": analytics.oracle_key_skew_audit(),
-        "bpe_encode": llm.oracle_bpe_encode(),
-        "embedding_quantize_int8": llm.oracle_embedding_quantize_int8(),
-        "events_weekly_active": analytics.oracle_events_weekly_active(),
-        "nation_order_extremes": analytics.oracle_nation_order_extremes(),
-        "quarantine_orders": medallion.oracle_quarantine_orders(),
-        "table_stats_orders": medallion.oracle_table_stats_orders(),
-        "scd2_integrity_audit": medallion.oracle_scd2_integrity_audit(),
-        "events_interpolate": analytics.oracle_events_interpolate(),
-        "nation_coverage": analytics.oracle_nation_coverage(),
-        "lang_confusion_matrix": llm.oracle_lang_confusion_matrix(),
-        "dup_ngram_fraction": llm.oracle_dup_ngram_fraction(),
-        "revenue_share_of_parent": analytics.oracle_revenue_share_of_parent(),
-        "benford_price_audit": analytics.oracle_benford_price_audit(),
-        "basket_affinity": analytics.oracle_basket_affinity(),
-        "pareto_customers": analytics.oracle_pareto_customers(),
-        "abc_parts": analytics.oracle_abc_parts(),
-        "interpurchase_intervals": analytics.oracle_interpurchase_intervals(),
-        "skyline_parts": analytics.oracle_skyline_parts(),
-        "sketch_distinct_rollup": analytics.oracle_sketch_distinct_rollup(),
-        "event_pagerank": analytics.oracle_event_pagerank(),
-        "equi_depth_histogram": analytics.oracle_equi_depth_histogram(),
-        "twap_event_value": analytics.oracle_twap_event_value(),
-        "fuzzy_part_matches": analytics.oracle_fuzzy_part_matches(),
-        "dim_part_multisource": medallion.oracle_dim_part_multisource(),
-        "hierarchy_unroll": medallion.oracle_hierarchy_unroll(),
-        "scd2_parts_multisource": medallion.oracle_scd2_parts_multisource(),
-        "hierarchy_rollup": medallion.oracle_hierarchy_rollup(),
-        "corpus_sample_token_budget": llm.oracle_corpus_sample_token_budget(),
-        "quality_stratified_sample": llm.oracle_quality_stratified_sample(),
-        "boilerplate_prune": llm.oracle_boilerplate_prune(),
-        "winnow_fingerprint": llm.oracle_winnow_fingerprint(),
-        "ann_pq_topk": llm.oracle_ann_pq_topk(),
-        "ann_pq_recall": llm.oracle_ann_pq_recall(),
-        "curate_corpus": llm.oracle_curate_corpus(),
-        "winnow_overlap_pairs": llm.oracle_winnow_overlap_pairs(),
-        "pq_refine_stats": llm.oracle_pq_refine_stats(),
-        "pq_train_rounds": llm.oracle_pq_train_rounds(),
-        "knn_graph_cell_local": llm.oracle_knn_graph_cell_local(),
-        "label_centroid_separation": llm.oracle_label_centroid_separation(),
-        "lsh_band_tuning": llm.oracle_lsh_band_tuning(),
-        "dedup_exact_normalized": llm.oracle_dedup_exact_normalized(),
-        "distinctive_terms_by_source": llm.oracle_distinctive_terms_by_source(),
-        "shingle_df_profile": llm.oracle_shingle_df_profile(),
-        "ann_pq_rerank_topk": llm.oracle_ann_pq_rerank_topk(),
-        "dedup_incremental_new_batch": llm.oracle_dedup_incremental_new_batch(),
-        "lsh_bucket_occupancy": llm.oracle_lsh_bucket_occupancy(),
-        "sentence_stats": llm.oracle_sentence_stats(),
-        "fact_order_lifecycle": medallion.oracle_fact_order_lifecycle(),
-        "fact_inventory_monthly": medallion.oracle_fact_inventory_monthly(),
-        "gaps_islands_orders": analytics.oracle_gaps_islands_orders(),
-        "revenue_alloc_largest_remainder": analytics.oracle_revenue_alloc_largest_remainder(),
-        "mad_outlier_orders": analytics.oracle_mad_outlier_orders(),
-        "dedup_prefix_truncation": llm.oracle_dedup_prefix_truncation(),
-        "ngram_novelty": llm.oracle_ngram_novelty(),
-        "tokenizer_fertility": llm.oracle_tokenizer_fertility(),
-        "simhash_hamming_pairs": llm.oracle_simhash_hamming_pairs(),
-        "embedding_outliers": llm.oracle_embedding_outliers(),
-        "ann_ivfpq_topk": llm.oracle_ann_ivfpq_topk(),
-        "ann_ivfpq_from_index": llm.oracle_ann_ivfpq_from_index(),
-        "ann_ivfpq_multiprobe_from_index": llm.oracle_ann_ivfpq_multiprobe_from_index(),
-        "ann_ivfpq_from_index_recall": llm.oracle_ann_ivfpq_from_index_recall(),
-        "scd3_users": medallion.oracle_scd3_users(),
-        "junk_dim_orders": medallion.oracle_junk_dim_orders(),
-        "asof_events_forward": medallion.oracle_asof_events_forward(),
-        "asof_events_tolerance": medallion.oracle_asof_events_tolerance(),
-        "dedup_graph_triangles": llm.oracle_dedup_graph_triangles(),
-        "bloom_prefilter_audit": analytics.oracle_bloom_prefilter_audit(),
-        "attribution_models": analytics.oracle_attribution_models(),
-        "events_debounce": analytics.oracle_events_debounce(),
-        "dedup_containment": llm.oracle_dedup_containment(),
-        "vocab_coverage": llm.oracle_vocab_coverage(),
-        "bom_explosion": medallion.oracle_bom_explosion(),
-        "revenue_trend_slope": analytics.oracle_revenue_trend_slope(),
-        "minhash_recall_eval": llm.oracle_minhash_recall_eval(),
-        "pack_efficiency_audit": llm.oracle_pack_efficiency_audit(),
-        "sample_representativeness": llm.oracle_sample_representativeness(),
-        "order_aging_report": analytics.oracle_order_aging_report(),
-        "kmv_overlap_estimate": analytics.oracle_kmv_overlap_estimate(),
-        "events_session_window": analytics.oracle_events_session_window(),
-        "segment_priority_chi2": analytics.oracle_segment_priority_chi2(),
-        "market_concentration_hhi": analytics.oracle_market_concentration_hhi(),
-        "cross_source_overlap_matrix": llm.oracle_cross_source_overlap_matrix(),
-        "embedding_power_iter": llm.oracle_embedding_power_iter(),
-        "dim_customer_inferred": medallion.oracle_dim_customer_inferred(),
-        "multimodal_frame_manifest": llm.oracle_multimodal_frame_manifest(),
-        "multimodal_resize_audit": llm.oracle_multimodal_resize_audit(),
-        "order_backlog_daily": analytics.oracle_order_backlog_daily(),
-        "dedup_savings_by_source": llm.oracle_dedup_savings_by_source(),
-        "dup_quality_correlation": llm.oracle_dup_quality_correlation(),
-        "dedup_prefix_filter_join": llm.oracle_dedup_prefix_filter_join(),
-        "events_funnel_timebound": analytics.oracle_events_funnel_timebound(),
-        "dedup_consensus_pairs": llm.oracle_dedup_consensus_pairs(),
-        "scd6_users": medallion.oracle_scd6_users(),
-        "customer_growth_accounting": analytics.oracle_customer_growth_accounting(),
-        "price_volume_mix": analytics.oracle_price_volume_mix(),
-        "order_fulfillment_sla": analytics.oracle_order_fulfillment_sla(),
-        "events_dow_hour_profile": analytics.oracle_events_dow_hour_profile(),
-        "dedup_cluster_size_histogram": llm.oracle_dedup_cluster_size_histogram(),
-        "vocab_growth_curve": llm.oracle_vocab_growth_curve(),
-        "doc_length_bands": llm.oracle_doc_length_bands(),
-        "monthly_seasonal_index": analytics.oracle_monthly_seasonal_index(),
-        "discount_effectiveness": analytics.oracle_discount_effectiveness(),
-        "next_click_latency_percentiles": analytics.oracle_next_click_latency_percentiles(),
-        "winsorized_event_value": analytics.oracle_winsorized_event_value(),
-        "events_autocorr_lag1": analytics.oracle_events_autocorr_lag1(),
-        "zipf_rank_frequency": llm.oracle_zipf_rank_frequency(),
-        "events_fano_factor": analytics.oracle_events_fano_factor(),
-        "pack_straddle_stats": llm.oracle_pack_straddle_stats(),
-        # round-6 additions
-        "dim_customer_minidim": medallion.oracle_dim_customer_minidim(),
-        "revenue_rolling_28d": analytics.oracle_revenue_rolling_28d(),
-        "new_vs_returning_revenue": analytics.oracle_new_vs_returning_revenue(),
-        "price_point_bias": analytics.oracle_price_point_bias(),
-        "event_type_gini_by_user": analytics.oracle_event_type_gini_by_user(),
-        "supplier_on_time_ship": analytics.oracle_supplier_on_time_ship(),
-        "split_leakage_audit": llm.oracle_split_leakage_audit(),
-        "hapax_ratio_quality": llm.oracle_hapax_ratio_quality(),
-        "dedup_cluster_chain_audit": llm.oracle_dedup_cluster_chain_audit(),
-        "embedding_dim_variance": llm.oracle_embedding_dim_variance(),
-        "collocation_lift_top": llm.oracle_collocation_lift_top(),
-        "label_balance_audit": llm.oracle_label_balance_audit(),
-        "dead_stock_parts": analytics.oracle_dead_stock_parts(),
-        "revenue_by_customer_tenure_band": analytics.oracle_revenue_by_customer_tenure_band(),
-        "fiscal_period_sales": analytics.oracle_fiscal_period_sales(),
-        "order_size_value_matrix": analytics.oracle_order_size_value_matrix(),
-        "events_value_profile": analytics.oracle_events_value_profile(),
-        "candidate_jaccard_histogram": llm.oracle_candidate_jaccard_histogram(),
-        "token_length_profile": llm.oracle_token_length_profile(),
-        "int8_reconstruction_error": llm.oracle_int8_reconstruction_error(),
-        "fiscal_yoy_sales": analytics.oracle_fiscal_yoy_sales(),
-        "events_bot_heuristic": analytics.oracle_events_bot_heuristic(),
-        "brand_return_rates": analytics.oracle_brand_return_rates(),
-        "events_stickiness_monthly": analytics.oracle_events_stickiness_monthly(),
-        "band_agreement_histogram": llm.oracle_band_agreement_histogram(),
-        "curation_funnel_report": llm.oracle_curation_funnel_report(),
-        "stopword_profile_by_source": llm.oracle_stopword_profile_by_source(),
-        "purchase_breadth_bands": analytics.oracle_purchase_breadth_bands(),
-        "session_type_affinity": analytics.oracle_session_type_affinity(),
-        "doc_embedding_coverage": llm.oracle_doc_embedding_coverage(),
-        "source_vocab_tv_distance": llm.oracle_source_vocab_tv_distance(),
-        "knn_label_purity": llm.oracle_knn_label_purity(),
-        "quarter_end_loading": analytics.oracle_quarter_end_loading(),
-        "sole_source_parts": analytics.oracle_sole_source_parts(),
-        "orders_dow_seasonality": analytics.oracle_orders_dow_seasonality(),
-        "supplier_risk_screen": analytics.oracle_supplier_risk_screen(),
-        "part_cooccurrence_topk": analytics.oracle_part_cooccurrence_topk(),
-        "scd2_compaction": medallion.oracle_scd2_compaction(),
-        "ivf_cell_occupancy": llm.oracle_ivf_cell_occupancy(),
-        "simhash_bit_balance": llm.oracle_simhash_bit_balance(),
-        "dim_date_month_shrunken": medallion.oracle_dim_date_month_shrunken(),
-        "order_status_drift_monthly": analytics.oracle_order_status_drift_monthly(),
-        "acctbal_spend_quadrants": analytics.oracle_acctbal_spend_quadrants(),
-        "pq_code_utilization": llm.oracle_pq_code_utilization(),
-        "embedding_cosine_histogram": llm.oracle_embedding_cosine_histogram(),
-        "nation_trade_balance": analytics.oracle_nation_trade_balance(),
-        "spend_tier_migration": analytics.oracle_spend_tier_migration(),
-        "retail_price_realization": analytics.oracle_retail_price_realization(),
-        "charset_profile_by_source": llm.oracle_charset_profile_by_source(),
-        "fingerprint_collision_audit": llm.oracle_fingerprint_collision_audit(),
-        "inferred_member_repair": medallion.oracle_inferred_member_repair(),
-        "brand_repeat_purchase": analytics.oracle_brand_repeat_purchase(),
-        "part_supplier_price_spread": analytics.oracle_part_supplier_price_spread(),
-        "multimodal_audio_segments": llm.oracle_multimodal_audio_segments(),
-        "medallion_reconciliation": medallion.oracle_medallion_reconciliation(),
-        "dq_lineitem_ranges": medallion.oracle_dq_lineitem_ranges(),
-        "arpu_monthly": analytics.oracle_arpu_monthly(),
-        "minhash_seed_uniformity": llm.oracle_minhash_seed_uniformity(),
-        "shingle_kmv_error": llm.oracle_shingle_kmv_error(),
-        "embedding_exact_dup_audit": llm.oracle_embedding_exact_dup_audit(),
-        "import_dependency_concentration": analytics.oracle_import_dependency_concentration(),
-        "k_anonymity_audit": medallion.oracle_k_anonymity_audit(),
-        "props_key_profile": analytics.oracle_props_key_profile(),
-        "discount_cap_whatif": analytics.oracle_discount_cap_whatif(),
-        "context_fit_audit": llm.oracle_context_fit_audit(),
-        "churn_training_set": analytics.oracle_churn_training_set(),
-        "incremental_agg_maintenance": medallion.oracle_incremental_agg_maintenance(),
-        "hard_negative_mining": llm.oracle_hard_negative_mining(),
-        "template_family_profile": llm.oracle_template_family_profile(),
-        "span_corruption_manifest": llm.oracle_span_corruption_manifest(),
-        "supplier_lead_time_trend": analytics.oracle_supplier_lead_time_trend(),
-        "sql_surface_nation_revenue": analytics.oracle_sql_surface_nation_revenue(),
-        "sft_pair_manifest": llm.oracle_sft_pair_manifest(),
-        "events_new_users_daily": analytics.oracle_events_new_users_daily(),
-        "source_vocab_jaccard": llm.oracle_source_vocab_jaccard(),
-        "dv_hub_customer": medallion.oracle_dv_hub_customer(),
-        "dv_link_order_customer": medallion.oracle_dv_link_order_customer(),
-        "dv_sat_user_events": medallion.oracle_dv_sat_user_events(),
-        "dv_pit_users": medallion.oracle_dv_pit_users(),
-        "halflife_weighted_value": analytics.oracle_halflife_weighted_value(),
-        "lang_charset_consistency": llm.oracle_lang_charset_consistency(),
-        "events_salted_type_rollup": analytics.oracle_events_salted_type_rollup(),
-        "holiday_order_lift": analytics.oracle_holiday_order_lift(),
-        "quality_gate_ablation": llm.oracle_quality_gate_ablation(),
-        "events_value_anova": analytics.oracle_events_value_anova(),
-        "chunk_position_dup_profile": llm.oracle_chunk_position_dup_profile(),
-        "bitemporal_restatement": medallion.oracle_bitemporal_restatement(),
-        "seasonal_naive_backtest": analytics.oracle_seasonal_naive_backtest(),
-        "ann_margin_profile": llm.oracle_ann_margin_profile(),
-        "lineitem_linenumber_audit": medallion.oracle_lineitem_linenumber_audit(),
-        "name_format_expectations": medallion.oracle_name_format_expectations(),
-        "customer_hazard_curve": analytics.oracle_customer_hazard_curve(),
-        "kfold_assignment_audit": llm.oracle_kfold_assignment_audit(),
-        "ivf_train_rounds": llm.oracle_ivf_train_rounds(),
-        "ann_ivfpq_hier_probe_recall": llm.oracle_ann_ivfpq_hier_probe_recall(),
-    }
+    return {k: getattr(sys.modules[fn.__module__], f"oracle_{k}")()
+            for k, fn in queries().items()}

@@ -37,8 +37,7 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "list":
         for name in sorted(entry.queries()):
-            oracle = "oracled" if name in entry.oracle_sql() else "rows-only"
-            print(f"{name}  [{oracle}]")
+            print(name)
         return 0
 
     from northwind_warehouse_spark.session import get_spark

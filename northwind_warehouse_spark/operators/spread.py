@@ -23,9 +23,7 @@ the knob never needs cluster-specific tuning because both inputs
 
 Scale-honesty: the repartition width follows
 ``sparkContext.defaultParallelism``, so the driver's lower-core bench
-runs measure the same plan at their own width, and
-``SPARK_GRAFT_SPREAD=0`` disables the operator outright for plan-shape
-forensics.
+runs measure the same plan at their own width.
 """
 
 from __future__ import annotations
@@ -90,8 +88,6 @@ def spread_scan(
     were single-threaded end to end on single-row-group inputs);
     pointless (and mildly costly) where the first operation is a wide
     shuffle anyway."""
-    if os.environ.get("SPARK_GRAFT_SPREAD", "1") == "0":
-        return df
     from northwind_warehouse_spark.catalog import table_rows
 
     try:

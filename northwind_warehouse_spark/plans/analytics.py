@@ -61,7 +61,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_q1() -> str:
+def oracle_q1_pricing_summary() -> str:
     return f"""
     SELECT l_returnflag, l_linestatus,
         {o_dsum2(o_dec2('l_quantity'), 'sum_qty')},
@@ -99,7 +99,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_q3() -> str:
+def oracle_q3_shipping_priority() -> str:
     return f"""
     SELECT l_orderkey, o_orderdate, o_orderpriority,
            {o_dsum2(o_disc_price(), 'revenue')}
@@ -144,7 +144,7 @@ def q5_local_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_q5() -> str:
+def oracle_q5_local_revenue() -> str:
     return f"""
     SELECT r_name, n_name, {o_dsum2(o_disc_price(), 'revenue')}
     FROM lineitem
@@ -178,7 +178,7 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_q6() -> str:
+def oracle_q6_forecast_revenue() -> str:
     return f"""
     SELECT {o_dsum2(o_dec2('l_extendedprice') + ' * ' + o_dec2('l_discount'), 'revenue')}
     FROM lineitem
@@ -213,7 +213,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_q10() -> str:
+def oracle_q10_returned_items() -> str:
     return f"""
     SELECT c_custkey, c_name, n_name, c_acctbal,
            {o_dsum2(o_disc_price(), 'revenue')}
@@ -339,7 +339,7 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_q4() -> str:
+def oracle_q4_order_priority() -> str:
     return """
     SELECT o_orderpriority, count(*) AS order_count
     FROM orders
@@ -376,7 +376,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_q14() -> str:
+def oracle_q14_promo_revenue() -> str:
     dp = o_disc_price()
     return f"""
     WITH agg AS (
@@ -414,7 +414,7 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_q18() -> str:
+def oracle_q18_large_orders() -> str:
     return """
     WITH big AS (
         SELECT l_orderkey, cast(round(sum(cast(l_quantity as decimal(12,2))), 2) as double) AS total_qty
@@ -445,7 +445,7 @@ def q16_parts_supplier_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_q16() -> str:
+def oracle_q16_parts_supplier_count() -> str:
     return """
     SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
     FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -477,7 +477,7 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_q22() -> str:
+def oracle_q22_idle_customers() -> str:
     return """
     WITH avg_bal AS (
         SELECT CAST(sum(cast(c_acctbal as decimal(12,2))) AS DOUBLE) / count(*) AS a
@@ -522,7 +522,7 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_q7() -> str:
+def oracle_q7_nation_volume() -> str:
     return f"""
     SELECT cn.n_name AS cust_nation, sn.n_name AS supp_nation,
            CAST(year(l_shipdate) AS INT) AS ship_year,
@@ -636,7 +636,7 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_q19() -> str:
+def oracle_q19_disjunctive_revenue() -> str:
     return f"""
     SELECT {o_dsum2(o_disc_price(), 'revenue')}, count(*) AS n_lines
     FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -682,7 +682,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("order_year")
 
 
-def oracle_q8() -> str:
+def oracle_q8_market_share() -> str:
     dp = o_disc_price()
     return f"""
     WITH agg AS (
@@ -1081,7 +1081,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_q2() -> str:
+def oracle_q2_min_cost_supplier() -> str:
     return """
     WITH offers AS (
         SELECT l_partkey, l_suppkey,
@@ -1144,7 +1144,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_q9() -> str:
+def oracle_q9_product_profit() -> str:
     amount = (
         f"cast({o_disc_price()} - cast("
         "cast(cast(p_retailprice as decimal(12,2)) * cast(0.60 as decimal(4,2)) as decimal(16,4))"
@@ -1195,7 +1195,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_q11() -> str:
+def oracle_q11_important_parts() -> str:
     dp = o_disc_price()
     return f"""
     WITH vals AS (
@@ -1231,7 +1231,7 @@ def q12_priority_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_q12() -> str:
+def oracle_q12_priority_shipping() -> str:
     return """
     SELECT l_linestatus,
         CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
@@ -1263,7 +1263,7 @@ def q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_q13() -> str:
+def oracle_q13_order_distribution() -> str:
     return """
     WITH per_cust AS (
         SELECT c_custkey, count(o_orderkey) AS c_count
@@ -1299,7 +1299,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_q15() -> str:
+def oracle_q15_top_supplier() -> str:
     dp = o_disc_price()
     return f"""
     WITH rev AS (
@@ -1339,7 +1339,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_q17() -> str:
+def oracle_q17_small_quantity_revenue() -> str:
     return f"""
     WITH stats AS (
         SELECT l_partkey AS s_partkey, CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
@@ -1377,7 +1377,7 @@ def q20_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_q20() -> str:
+def oracle_q20_excess_suppliers() -> str:
     return """
     SELECT s_suppkey, s_name, n_name
     FROM supplier JOIN nation ON s_nationkey = n_nationkey
@@ -1420,7 +1420,7 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_q21() -> str:
+def oracle_q21_waiting_suppliers() -> str:
     return """
     SELECT s_name, count(*) AS numwait
     FROM lineitem l1

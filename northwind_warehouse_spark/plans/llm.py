@@ -1,7 +1,8 @@
 """LLM-training-data pipeline plans (SURVEY.md §2C).
 
-Dedup family, text analysis, similarity search, multimodal — each with a
-DuckDB oracle unless the op is marked rows-only in SURVEY.md.
+Dedup family, text analysis, similarity search, multimodal. A builder
+is a registered query when its DuckDB oracle ``oracle_<name>`` sits
+beside it (``__spark_entry__``); helpers have no such twin.
 """
 
 from __future__ import annotations

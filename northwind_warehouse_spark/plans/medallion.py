@@ -2,8 +2,9 @@
 
 Staging conform → conformed dimensions (with the reference's dummy
 members 0='Not Found', -1='Not Applicable') → SCD2 → facts with
-surrogate-key lookups. Each builder has a paired ``oracle_*`` DuckDB SQL
-string with identical column names and value semantics.
+surrogate-key lookups. Each builder has a paired ``oracle_<name>`` DuckDB
+SQL string with identical column names and value semantics; the pair is
+what registers it in ``__spark_entry__``.
 
 Portability contract (see functions/hashing.py): hashes are md5 over
 '||'-joined strings; floats are rendered via DECIMAL(18,6); timestamps

@@ -15,7 +15,7 @@ from pyspark.sql import SparkSession
 
 def get_spark(app_name: str = "northwind_warehouse_spark",
               shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = max(int(cpus) if cpus.isdigit() else 32, 8)
     builder = (

@@ -65,7 +65,12 @@ SESSION_OUT_SCHEMA = StructType([
 def sessionize_stream(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     """Custom stateful sessionization with applyInPandasWithState.
 
-    Emits a session row when the gap rule closes it (or on state timeout).
+    Emits a session row when the gap rule closes it, or when the
+    event-time watermark on ``ts`` (newest event minus one gap, so events
+    up to one gap late are still placed) passes its last event plus the
+    gap. The timeout is event-time, so an ``availableNow`` run stops once
+    its input is drained; the sessions still open at that watermark stay
+    in state.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -73,16 +78,15 @@ def sessionize_stream(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
 
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
         (user_id,) = key
-        rows = pd.concat(list(pdfs)).sort_values("ts")
         if state.hasTimedOut:
-            if state.exists:
-                last_ts, session_start, n = state.get
-                state.remove()
-                yield pd.DataFrame([{
-                    "user_id": user_id, "session_start": session_start,
-                    "session_end": last_ts, "n_events": n,
-                }])
+            last_ts, session_start, n = state.get
+            state.remove()
+            yield pd.DataFrame([{
+                "user_id": user_id, "session_start": session_start,
+                "session_end": last_ts, "n_events": n,
+            }])
             return
+        rows = pd.concat(list(pdfs)).sort_values("ts")
         if state.exists:
             last_ts, session_start, n = state.get
         else:
@@ -102,16 +106,22 @@ def sessionize_stream(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
             last_ts = ts
             n += 1
         state.update((last_ts, session_start, n))
-        state.setTimeoutDuration(gap_seconds * 1000)
+        # epoch ms from the JVM: the naive pandas ts is session-local time
+        state.setTimeoutTimestamp(int(rows["ts_ms"].iloc[-1]) + gap_seconds * 1000)
         if out:
             yield pd.DataFrame(out)
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=SESSION_OUT_SCHEMA,
-        stateStructType=SESSION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    return (
+        events.withWatermark("ts", f"{gap_seconds} seconds")
+        .select("user_id", "ts", F.unix_millis("ts").alias("ts_ms"))
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            fn,
+            outputStructType=SESSION_OUT_SCHEMA,
+            stateStructType=SESSION_STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        )
     )
 
 

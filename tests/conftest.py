@@ -24,3 +24,21 @@ def spark():
     s = get_spark("nws-tests", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def registered_plans(spark):
+    """``queries()[k](spark, SF_SMOKE)`` for every registered key, built
+    once per session and shared by the plan-only registry sweeps."""
+    import __spark_entry__ as e
+
+    return {k: fn(spark, SF_SMOKE) for k, fn in e.queries().items()}
+
+
+@pytest.fixture(scope="session")
+def registered_executed_plans(registered_plans):
+    """The executed-plan string of each registered plan, rendered once."""
+    return {
+        k: df._jdf.queryExecution().executedPlan().toString()
+        for k, df in registered_plans.items()
+    }

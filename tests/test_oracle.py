@@ -64,19 +64,25 @@ def test_type_parity_flags_hugeint(spark):
     assert not ok
 
 
-def test_type_parity_registry_sweep(spark):
+def test_type_parity_registry_sweep(registered_plans):
     """Plan-only (DESCRIBE + df.schema): every oracled query must agree
     on column type classes — the class of divergence the driver hash
     rejects but the type-blind value compare cannot see."""
     from tests.oracle_util import type_parity
 
-    e = _entry()
-    osql = e.oracle_sql()
+    osql = _entry().oracle_sql()
     bad = {}
-    for k, fn in e.queries().items():
-        if k not in osql:
-            continue
-        p = type_parity(fn(spark, SF_SMOKE), osql[k], SF_SMOKE)
+    for k, df in registered_plans.items():
+        p = type_parity(df, osql[k], SF_SMOKE)
         if p:
             bad[k] = p
     assert not bad, f"type-parity mismatches: {bad}"
+
+
+def test_driver_first_is_fifty_registered_keys_in_front():
+    """The driver gate samples the first 50 entries of queries()."""
+    e = _entry()
+    assert len(e._DRIVER_FIRST) == 50
+    assert len(set(e._DRIVER_FIRST)) == 50
+    assert set(e._DRIVER_FIRST) <= set(e.queries())
+    assert list(e.queries())[:50] == list(e._DRIVER_FIRST)

@@ -40,13 +40,10 @@ def test_q1_reads_only_needed_columns(spark):
         assert col not in read_schema, f"{col} read but unused"
 
 
-def test_no_python_udfs_in_oracled_plans(spark):
-    import __spark_entry__ as e
-
-    for name, fn in e.queries().items():
+def test_no_python_udfs_in_oracled_plans(registered_executed_plans):
+    for name, plan in registered_executed_plans.items():
         if name == "multimodal_extract":  # the one intentional Pandas path
             continue
-        plan = _plan(fn(spark, SF_SMOKE))
         assert "BatchEvalPython" not in plan, f"{name} uses a row-at-a-time Python UDF"
         assert "ArrowEvalPython" not in plan, f"{name} uses a Pandas UDF"
 
@@ -595,7 +592,7 @@ def test_ivfpq_registered_serving_prunes_to_generation_zero(spark):
     )
 
 
-def test_no_cartesian_product_in_any_registered_plan(spark):
+def test_no_cartesian_product_in_any_registered_plan(registered_executed_plans):
     """Global plan discipline: NO registered query may plan a
     CartesianProduct — the unbounded cross join that is always a
     100 TB killer. Intentional small-side cross joins (broadcast
@@ -603,11 +600,8 @@ def test_no_cartesian_product_in_any_registered_plan(spark):
     BroadcastNestedLoopJoin and are allowed; a CartesianProduct means
     both sides were big and unkeyed, which no operator here should
     ever need."""
-    import __spark_entry__ as e
-
     offenders = []
-    for name, fn in e.queries().items():
-        plan = fn(spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
+    for name, plan in registered_executed_plans.items():
         if "CartesianProduct" in plan:
             offenders.append(name)
     assert not offenders, f"CartesianProduct planned in: {offenders}"

@@ -1,15 +1,13 @@
 """spread_scan: conditional scan-parallelism repair (guide §2.5).
 
 The operator must be an IDENTITY (same object, no plan change) whenever
-the input can already split, the table is too small, or the kill switch
-is set — and a hash/round-robin repartition to defaultParallelism only
-on a big under-split input. These conditions are the 100-TB honesty of
+the input can already split or the table is too small — and a
+hash/round-robin repartition to defaultParallelism only on a big
+under-split input. These conditions are the 100-TB honesty of
 the operator: on a real warehouse layout it must do nothing.
 """
 
 from __future__ import annotations
-
-import os
 
 from northwind_warehouse_spark.catalog import load, table_rows
 from northwind_warehouse_spark.operators.spread import scan_splits, spread_scan
@@ -27,16 +25,6 @@ def test_identity_when_table_small(spark):
     df = load(spark, SF_SMOKE, "lineitem")
     out = spread_scan(df, spark, SF_SMOKE, "lineitem", "l_orderkey")
     assert out is df
-
-
-def test_identity_when_disabled(spark):
-    sf = _sf_dirs()
-    df = load(spark, sf, "lineitem")
-    os.environ["SPARK_GRAFT_SPREAD"] = "0"
-    try:
-        assert spread_scan(df, spark, sf, "lineitem", "l_orderkey") is df
-    finally:
-        os.environ.pop("SPARK_GRAFT_SPREAD", None)
 
 
 def test_spreads_undersplit_big_table(spark):

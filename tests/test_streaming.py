@@ -168,10 +168,20 @@ def test_scd2_streaming_merge_equals_batch_build(spark, tmp_path):
 
 
 def test_sessionize_stream_runs(spark, events_dir, tmp_path):
+    """An availableNow run terminates on its own and emits exactly the
+    batch sessions that the final watermark has closed: every session
+    followed by a later one of its user, plus each user's last session
+    once its end plus the gap falls behind the watermark."""
+    from pyspark.sql.window import Window
+
+    from northwind_warehouse_spark.catalog import load
+    from northwind_warehouse_spark.operators.sessionize import sessionize
     from northwind_warehouse_spark.streaming.jobs import sessionize_stream, stream_events
 
+    gap_s = 1800
     _prepare(spark, events_dir)
-    stream = sessionize_stream(stream_events(spark, events_dir).select("user_id", "ts"))
+    stream = sessionize_stream(
+        stream_events(spark, events_dir).select("user_id", "ts"), gap_seconds=gap_s)
     q = (
         stream.writeStream.format("memory")
         .queryName("sess")
@@ -180,13 +190,32 @@ def test_sessionize_stream_runs(spark, events_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
-    rows = spark.table("sess").collect()
-    # closed sessions only (the final open session per user stays in state);
-    # every emitted session must be well-formed
-    for r in rows:
-        assert r.session_start <= r.session_end
-        assert r.n_events >= 1
+    try:
+        assert q.awaitTermination(180), "availableNow sessionizer did not terminate"
+    finally:
+        q.stop()
+    got = sorted(tuple(r) for r in spark.table("sess").select(
+        "user_id", "session_start", "session_end", "n_events").collect())
+
+    events = load(spark, SF_SMOKE, "events")
+    # the watermark's own arithmetic: newest event in epoch ms minus one gap
+    final_wm_ms = events.select(F.unix_millis(F.max("ts"))).first()[0] - gap_s * 1000
+    sessions = (
+        sessionize(events, "user_id", "ts", gap_s)
+        .groupBy("user_id", "session_idx")
+        .agg(F.min("ts").alias("session_start"), F.max("ts").alias("session_end"),
+             F.count(F.lit(1)).alias("n_events"))
+        .withColumn("last_idx", F.max("session_idx").over(Window.partitionBy("user_id")))
+    )
+    closed = sessions.filter(
+        (F.col("session_idx") < F.col("last_idx"))
+        | (F.unix_millis("session_end") + gap_s * 1000 < final_wm_ms)
+    )
+    want = sorted(tuple(r) for r in closed.select(
+        "user_id", "session_start", "session_end", "n_events").collect())
+    # some last sessions must close by timeout alone, or that path is untested
+    assert closed.filter(F.col("session_idx") == F.col("last_idx")).count() > 0
+    assert got == want
 
 
 def test_stream_stream_interval_join_matches_batch(spark, events_dir, tmp_path):
