@@ -40,38 +40,8 @@ def asof_join_backward(
     same right row even when some of its payload values are genuinely
     NULL (per-column fills would back-fill those from older rows).
     """
-    lcols = left.columns
-    payload_type = StructType(
-        [StructField(c, right.schema[c].dataType) for c in payload_cols]
-    )
-    l = left.select(
-        F.col(left_key).alias("_k"),
-        F.col(left_ts).cast("timestamp").alias("_t"),
-        F.lit(1).alias("_side"),
-        *[F.col(c) for c in lcols],
-        F.lit(None).cast(payload_type).alias("_p"),
-    )
-    r = right.select(
-        F.col(right_key).alias("_k"),
-        F.col(right_ts).cast("timestamp").alias("_t"),
-        F.lit(0).alias("_side"),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in lcols],
-        F.struct(*[F.col(c).alias(c) for c in payload_cols]).alias("_p"),
-    )
-    # right rows sort before left rows at equal time → "<=" semantics;
-    # explicit tiebreaks make equal-time right rows deterministic.
-    order = [F.col("_t"), F.col("_side")] + [F.col("_p").getField(c) for c in right_tiebreak]
-    w = (
-        Window.partitionBy("_k")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    unioned = l.unionByName(r)
-    filled = unioned.withColumn("_pf", F.last(F.col("_p"), ignorenulls=True).over(w))
-    return filled.filter(F.col("_side") == 1).select(
-        *[F.col(c) for c in lcols],
-        *[F.col("_pf").getField(c).alias(f"{payload_prefix}{c}") for c in payload_cols],
-    )
+    return _asof_join(left, right, left_key, right_key, left_ts, right_ts,
+                      payload_cols, payload_prefix, right_tiebreak, forward=False)
 
 
 def asof_join_forward(
@@ -96,6 +66,12 @@ def asof_join_forward(
     the LOWEST tiebreak (the tiebreak sorts descending so the window's
     ``last`` lands on the minimum).
     """
+    return _asof_join(left, right, left_key, right_key, left_ts, right_ts,
+                      payload_cols, payload_prefix, right_tiebreak, forward=True)
+
+
+def _asof_join(left, right, left_key, right_key, left_ts, right_ts,
+               payload_cols, payload_prefix, right_tiebreak, forward: bool) -> DataFrame:
     lcols = left.columns
     payload_type = StructType(
         [StructField(c, right.schema[c].dataType) for c in payload_cols]
@@ -114,8 +90,14 @@ def asof_join_forward(
         *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in lcols],
         F.struct(*[F.col(c).alias(c) for c in payload_cols]).alias("_p"),
     )
-    order = [F.col("_t").desc(), F.col("_side")] + [
-        F.col("_p").getField(c).desc() for c in right_tiebreak
+    # right rows sort before left rows at equal time → inclusive
+    # semantics; explicit tiebreaks make equal-time right rows
+    # deterministic. Forward sorts time and tiebreaks descending.
+    def directed(c):
+        return c.desc() if forward else c
+
+    order = [directed(F.col("_t")), F.col("_side")] + [
+        directed(F.col("_p").getField(c)) for c in right_tiebreak
     ]
     w = (
         Window.partitionBy("_k")

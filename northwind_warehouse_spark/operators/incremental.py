@@ -9,7 +9,8 @@ it describes, so data and watermark can never disagree and reading the
 audit state starts no Spark job. The high-watermark predicate is a plain
 timestamp filter, so it pushes down to the parquet scan (min/max
 row-group stats skip old files entirely — this is the whole point at
-100 TB).
+100 TB). ``scd2_fold_commit`` is the one step that applies a change
+slice to an SCD2 dimension and commits it with its watermark.
 """
 
 from __future__ import annotations
@@ -21,6 +22,7 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from northwind_warehouse_spark.operators.scd2 import scd2_from_change_stream, scd2_merge
 from northwind_warehouse_spark.sources.versioned import VersionedTable, naive_utc
 
 EPOCH_LOW = datetime(1900, 1, 1)
@@ -30,8 +32,6 @@ EPOCH_LOW = datetime(1900, 1, 1)
 class AuditEntry:
     entity: str
     hwm_date: datetime
-    driver_table: str
-    business_key: str
     is_processed: bool
     is_initialized: bool
     last_processed_date: datetime
@@ -51,16 +51,13 @@ class AuditControl:
         """No-op: an entity with no commit already reads as 1900-01-01."""
 
     def get(self, entity: str) -> AuditEntry:
-        """The watermark and commit time of the entity's latest version;
-        the manifest records no driver table or business key."""
+        """The watermark and commit time of the entity's latest version."""
         versions = VersionedTable(self.spark, self.lake, entity).versions()
-        latest = versions[-1] if versions else {}
-        if not latest.get("watermark"):
-            return AuditEntry(entity, EPOCH_LOW, "", "", False, bool(versions), EPOCH_LOW)
-        return AuditEntry(
-            entity, datetime.fromisoformat(latest["watermark"]), "", "", True, True,
-            naive_utc(datetime.fromisoformat(latest["committed_at"])),
-        )
+        hwm = _committed_watermark(versions)
+        if hwm is None:
+            return AuditEntry(entity, EPOCH_LOW, False, bool(versions), EPOCH_LOW)
+        return AuditEntry(entity, hwm, True, True,
+                          naive_utc(datetime.fromisoformat(versions[-1]["committed_at"])))
 
     # kept only so perfbench's tracer still resolves it by name
     def update(self, entity: str, hwm_date: datetime, processed_at: datetime | None = None) -> None:
@@ -68,9 +65,38 @@ class AuditControl:
             "the watermark commits with its data: pass watermark= to VersionedTable.write")
 
 
+def _committed_watermark(versions: list[dict]) -> datetime | None:
+    """The ``watermark`` of the latest manifest entry (naive UTC), or
+    None when there is no entry or it records none."""
+    wm = versions[-1].get("watermark") if versions else None
+    return datetime.fromisoformat(wm) if wm else None
+
+
 def high_watermark_filter(df: DataFrame, ts_col: str, hwm: str | datetime) -> DataFrame:
     """Rows strictly after the watermark — a pushdown-able predicate."""
     return df.filter(F.col(ts_col) > F.lit(hwm))
+
+
+def scd2_fold_commit(vt: VersionedTable, changes: DataFrame, spec: dict) -> int | None:
+    """Fold the change rows after ``vt``'s committed watermark into its
+    SCD2 dimension (``spec``: the keyword arguments of ``scd2_merge``)
+    and commit it with the newest change ``ts`` as its watermark in one
+    manifest entry; returns the new version id. The slice's ``max(ts)``
+    is also its emptiness check: an empty slice commits nothing."""
+    ts = spec["ts_col"]
+    versions = vt.versions()
+    changes = high_watermark_filter(
+        changes.select(*spec["key_cols"], ts, *spec["attr_cols"], *spec.get("tiebreak_cols", ())),
+        ts, _committed_watermark(versions) or EPOCH_LOW,
+    )
+    new_hwm = changes.agg(F.max(ts)).collect()[0][0]
+    if new_hwm is None:
+        return None
+    if versions:
+        dim = scd2_merge(vt.read(), changes, **spec)
+    else:
+        dim = scd2_from_change_stream(changes, **spec)
+    return vt.write(dim, watermark=new_hwm)
 
 
 def incremental_merge_by_key(
@@ -101,8 +127,6 @@ def processing_date_range(
         "end_date": target_date,
         "hwm_date": entry.hwm_date,
         "is_processed": entry.is_processed,
-        "driver_table": entry.driver_table,
-        "business_key": entry.business_key,
         "needs_processing": needs,
         "total_days": (target_date - start).days + 1 if needs else 0,
     }

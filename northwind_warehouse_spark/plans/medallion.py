@@ -390,6 +390,16 @@ def oracle_dim_supplier() -> str:
 # ---------------------------------------------------------------------------
 
 
+def users_scd2_spec() -> dict:
+    """The users dim's SCD2 spec, as keyword arguments of
+    ``scd2_from_change_stream`` / ``scd2_merge``: one place for the
+    registered build, the warehouse pipeline and the streaming sink."""
+    return dict(key_cols=["user_id"], ts_col="ts",
+                hash_col=surrogate_key("event_type", num_str("value")),
+                attr_cols=["event_type", "value"], tiebreak_cols=["event_id"],
+                sk_name="user_sk")
+
+
 def scd2_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2 user dimension from the events change stream.
 
@@ -404,15 +414,7 @@ def scd2_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = spread_scan(load(spark, sf_dir, "events"), spark, sf_dir,
                     "events", "user_id").select(
         "event_id", "user_id", "ts", "event_type", "value")
-    return scd2_from_change_stream(
-        e,
-        key_cols=["user_id"],
-        ts_col="ts",
-        hash_col=surrogate_key("event_type", num_str("value")),
-        attr_cols=["event_type", "value"],
-        tiebreak_cols=["event_id"],
-        sk_name="user_sk",
-    )
+    return scd2_from_change_stream(e, **users_scd2_spec())
 
 
 def oracle_scd2_users() -> str:
@@ -478,6 +480,29 @@ def oracle_snapshot_users() -> str:
 # ---------------------------------------------------------------------------
 
 
+def lookup_customer(spark: SparkSession, sf_dir: str, rel: DataFrame, key: str) -> DataFrame:
+    """``rel`` with ``customer_sk``, ``nation_name`` and ``region_name``
+    looked up in dim_customer by ``rel[key]``; a key with no customer
+    falls back to sk(0) and 'Not Found' (reference:
+    models/dwh/fact_order.sql, macros/fact_order_fail_lookup.sql).
+    ``rel`` must not carry those three columns."""
+    d = dim_customer(spark, sf_dir).select(
+        F.col("customer_id").alias("_cid"), "customer_sk", "nation_name", "region_name")
+    # rows-gated hint (r13): dim_customer's optimizer estimate is
+    # join-product-inflated (~1.6e12 bytes for 15k rows at sf0.1) and
+    # declines the broadcast; the footer row count is exact.
+    return (
+        rel.join(maybe_broadcast_rows(d, table_rows(sf_dir, "customer") + 2),
+                 F.col(key) == F.col("_cid"), "left")
+        .drop("_cid")
+        .withColumns({
+            "customer_sk": F.coalesce("customer_sk", surrogate_key(F.lit(0))),
+            "nation_name": F.coalesce("nation_name", F.lit("Not Found")),
+            "region_name": F.coalesce("region_name", F.lit("Not Found")),
+        })
+    )
+
+
 def fact_orders(spark: SparkSession, sf_dir: str, *, spread: bool = True) -> DataFrame:
     """orders + dim_customer SK lookup with dummy fallback.
 
@@ -491,21 +516,11 @@ def fact_orders(spark: SparkSession, sf_dir: str, *, spread: bool = True) -> Dat
     o = load(spark, sf_dir, "orders")
     if spread:
         o = spread_scan(o, spark, sf_dir, "orders", "o_orderkey")
-    d = dim_customer(spark, sf_dir).select("customer_id", "customer_sk", "nation_name", "region_name")
-    fallback = surrogate_key(F.lit(0))
-    # rows-gated hint (r13): dim_customer's optimizer estimate is
-    # join-product-inflated (~1.6e12 bytes for 15k rows at sf0.1), so
-    # the estimate gate silently declined and this join planned as SMJ
-    # with a full orders shuffle+sort; the footer row count is exact.
     return (
-        o.join(maybe_broadcast_rows(d, table_rows(sf_dir, "customer") + 2),
-               o.o_custkey == d.customer_id, "left")
+        lookup_customer(spark, sf_dir, o, "o_custkey")
         .select(
-            F.col("o_orderkey").alias("order_id"),
-            F.coalesce("customer_sk", fallback).alias("customer_sk"),
-            F.col("o_custkey").alias("customer_id"),
-            F.coalesce("nation_name", F.lit("Not Found")).alias("nation_name"),
-            F.coalesce("region_name", F.lit("Not Found")).alias("region_name"),
+            F.col("o_orderkey").alias("order_id"), "customer_sk",
+            F.col("o_custkey").alias("customer_id"), "nation_name", "region_name",
             F.col("o_orderstatus").alias("order_status"),
             F.col("o_totalprice").alias("total_price"),
             F.col("o_orderdate").cast("date").alias("order_date"),

@@ -3,38 +3,34 @@ equivalent of ``dbt run`` on the reference project.
 
 Flow per run (reference: models/* + macros/audit_management/*):
   1. staging: conform raw tables → lake;
-  2. dims: read the dim's high watermark from its latest manifest entry,
-     incremental SCD2 merge of the newer change rows (only affected keys
-     recomputed), and commit the new version together with its new
-     watermark (the newest change ``ts``, or the parent's if there is
-     none) in one manifest entry;
+  2. dims: ``scd2_fold_commit`` reads the dim's high watermark from its
+     latest manifest entry, SCD2-merges the newer change rows (only
+     affected keys recomputed) and commits the new version together
+     with its new watermark (the newest change ``ts``) in one manifest
+     entry; an empty change slice commits no version;
   3. facts: re-resolve existing rows still on the dummy customer SK
-     against the current dim_customer (reference:
+     with the same customer lookup ``fact_orders`` uses (reference:
      macros/fact_order_fail_lookup.sql), upsert the incoming orders by
      ``order_id`` and commit one version (partitioned by order_year for
      pruning).
 
 Each stage has one commit point, its manifest entry: a crash anywhere
 before it leaves the table and its watermark as they were. Idempotent:
-re-running with no new data commits versions equal to the previous ones
-(merge of empty changes = existing), mirroring dbt's incremental
-materialization semantics.
+re-running with no new data commits no dim version and a fact version
+equal to the previous one, mirroring dbt's incremental materialization
+semantics.
 """
 
 from __future__ import annotations
-
-from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from northwind_warehouse_spark.catalog import load
-from northwind_warehouse_spark.functions.hashing import num_str, surrogate_key
-from northwind_warehouse_spark.operators.joins import maybe_broadcast
+from northwind_warehouse_spark.functions.hashing import surrogate_key
 from northwind_warehouse_spark.operators.incremental import (
-    AuditControl, high_watermark_filter, incremental_merge_by_key,
+    AuditControl, incremental_merge_by_key, scd2_fold_commit,
 )
-from northwind_warehouse_spark.operators.scd2 import scd2_from_change_stream, scd2_merge
 from northwind_warehouse_spark.plans import medallion
 from northwind_warehouse_spark.sources.lake import read_table, write_table
 from northwind_warehouse_spark.sources.versioned import VersionedTable
@@ -57,9 +53,6 @@ class WarehousePipeline:
     def _vt(self, name: str) -> VersionedTable:
         return VersionedTable(self.spark, self.lake, name)
 
-    def _exists(self, name: str) -> bool:
-        return bool(self._vt(name).versions())
-
     # -- stages ------------------------------------------------------------
 
     def run_staging(self, sf_dir: str) -> None:
@@ -70,64 +63,31 @@ class WarehousePipeline:
         ):
             write_table(builder(self.spark, sf_dir), self._path(name))
 
-    def _user_changes(self, sf_dir: str, hwm: datetime) -> DataFrame:
-        e = load(self.spark, sf_dir, "events").select(
-            "event_id", "user_id", "ts", "event_type", "value"
-        )
-        return high_watermark_filter(e, "ts", hwm)
-
     def run_dim_users(self, sf_dir: str) -> None:
-        entity = self.DIM_USERS
-        hwm = self.audit.get(entity).hwm_date
-        changes = self._user_changes(sf_dir, hwm)
-        hash_col = surrogate_key("event_type", num_str("value"))
-        kwargs = dict(
-            key_cols=["user_id"], ts_col="ts", hash_col=hash_col,
-            attr_cols=["event_type", "value"], tiebreak_cols=["event_id"],
-            sk_name="user_sk",
-        )
-        vt = self._vt(entity)
-        if self._exists(entity):
-            dim = scd2_merge(vt.read(), changes, **kwargs)
-        else:
-            dim = scd2_from_change_stream(changes, **kwargs)
-        new_hwm = changes.agg(F.max("ts")).collect()[0][0]
-        # each run commits an immutable version with its watermark in one
-        # manifest swap — no read/overwrite conflict, past runs stay
-        # reproducible (time travel)
-        vt.write(dim, watermark=new_hwm or hwm)
+        scd2_fold_commit(self._vt(self.DIM_USERS), load(self.spark, sf_dir, "events"),
+                         medallion.users_scd2_spec())
 
     def run_fact_orders(self, sf_dir: str) -> None:
-        entity = self.FACT_ORDERS
         fact = medallion.fact_orders(self.spark, sf_dir).withColumn(
             "order_year", F.year("order_date")
         )
-        vt = self._vt(entity)
-        if self._exists(entity):
-            existing = self.refresh_failed_lookups(
-                vt.read(), medallion.dim_customer(self.spark, sf_dir))
+        vt = self._vt(self.FACT_ORDERS)
+        if vt.versions():
+            existing = self.refresh_failed_lookups(vt.read(), sf_dir)
             fact = incremental_merge_by_key(existing, fact, ["order_id"])
         vt.write(fact, partition_by=("order_year",))
 
-    def refresh_failed_lookups(self, fact: DataFrame, dim: DataFrame) -> DataFrame:
+    def refresh_failed_lookups(self, fact: DataFrame, sf_dir: str) -> DataFrame:
         """``fact`` with its rows still on the dummy customer SK
-        re-resolved against ``dim`` (reference:
+        re-resolved against ``sf_dir``'s customers (reference:
         macros/fact_order_fail_lookup.sql) — e.g. after a late-arriving
         dimension load. Lazy: the caller's commit runs it."""
-        dummy_sk = surrogate_key(F.lit(0))
-        failed = fact.filter(F.col("customer_sk") == dummy_sk)
-        dim = dim.select(
-            F.col("customer_id").alias("_cid"), F.col("customer_sk").alias("_sk"),
-            F.col("nation_name").alias("_nn"), F.col("region_name").alias("_rn"),
-        )
-        repaired = (
-            failed.join(maybe_broadcast(dim), failed.customer_id == F.col("_cid"), "left")
-            .withColumn("customer_sk", F.coalesce("_sk", dummy_sk))
-            .withColumn("nation_name", F.coalesce("_nn", F.lit("Not Found")))
-            .withColumn("region_name", F.coalesce("_rn", F.lit("Not Found")))
-            .drop("_cid", "_sk", "_nn", "_rn")
-        )
-        return fact.filter(F.col("customer_sk") != dummy_sk).unionByName(repaired)
+        failed = F.col("customer_sk") == surrogate_key(F.lit(0))
+        repaired = medallion.lookup_customer(
+            self.spark, sf_dir,
+            fact.filter(failed).drop("customer_sk", "nation_name", "region_name"),
+            "customer_id")
+        return fact.filter(~failed).unionByName(repaired)
 
     def run(self, sf_dir: str) -> None:
         self.run_staging(sf_dir)

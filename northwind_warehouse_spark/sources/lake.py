@@ -10,11 +10,14 @@ partition columns so downstream scans prune:
 - dims stay unpartitioned single-digit-GB tables that broadcast.
 
 Writers go through a staging-temp + atomic-ish rename-free overwrite
-(Spark's own committer); readers re-apply schemas so drift is caught at
-the boundary, mirroring dbt's `on_schema_change: sync_all_columns`.
+(Spark's own committer); ``read_table_evolved`` fills columns that old
+files lack, mirroring dbt's `on_schema_change: sync_all_columns`.
 """
 
 from __future__ import annotations
+
+import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,31 +39,13 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def read_csv(spark: SparkSession, path: str, schema: str, header: bool = True) -> DataFrame:
-    """Schema-enforced CSV ingestion (no inference jobs at scale)."""
-    return spark.read.schema(schema).option("header", str(header).lower()).csv(path)
-
-
-def read_json(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    return spark.read.schema(schema).json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.orc(path)
-
-
-def write_orc(
-    df: DataFrame,
-    path: str,
-    partition_by: tuple[str, ...] = (),
-    mode: str = "overwrite",
-) -> None:
-    """ORC interchange (Hive-ecosystem consumers); same partition-pruning
-    contract as the parquet writer."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
+def _swap_dir(path: str, tmp: str) -> None:
+    """Replace directory ``path`` with the freshly written ``tmp``: two
+    renames, then the old copy is removed."""
+    old = path.rstrip("/") + "__old"
+    shutil.move(path, old)
+    shutil.move(tmp, path)
+    shutil.rmtree(old)
 
 
 def compact_table(
@@ -83,9 +68,6 @@ def compact_table(
     (Parity note: table-format engines do this as OPTIMIZE/rewrite; this
     is the plain-parquet-lake equivalent, reference-free.)
     """
-    import os
-    import shutil
-
     def _count_files(p: str) -> int:
         n = 0
         for root, _dirs, files in os.walk(p):
@@ -103,10 +85,7 @@ def compact_table(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(tmp)
-    old = path.rstrip("/") + "__old"
-    shutil.move(path, old)
-    shutil.move(tmp, path)
-    shutil.rmtree(old)
+    _swap_dir(path, tmp)
     return {"files_before": before, "files_after": _count_files(path)}
 
 
@@ -140,8 +119,6 @@ def forget_keys(
     for write — on a 100 TB lake a single-user delete rewrites a few
     files, not the table. Each rewrite lands via atomic directory swap.
     Returns the partitions rewritten."""
-    import shutil
-
     df = spark.read.parquet(path)
     affected = sorted(
         r[0]
@@ -152,10 +129,7 @@ def forget_keys(
         kept = spark.read.parquet(part_dir).filter(~F.col(key_col).isin(keys))
         tmp = part_dir + "__rewriting"
         kept.write.mode("overwrite").parquet(tmp)
-        old = part_dir + "__old"
-        shutil.move(part_dir, old)
-        shutil.move(tmp, part_dir)
-        shutil.rmtree(old)
+        _swap_dir(part_dir, tmp)
     return {"partitions_rewritten": len(affected), "partition_values": affected}
 
 
@@ -180,8 +154,6 @@ def cluster_table(
     shuffle (the range exchange); atomic directory swap as in
     ``compact_table``. Returns per-file key-span audit info.
     """
-    import shutil
-
     df = spark.read.parquet(path)
     cols = [F.col(c) for c in cluster_by]
     clustered = df.repartitionByRange(*cols).sortWithinPartitions(*cols)
@@ -192,10 +164,7 @@ def cluster_table(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(tmp)
-    old = path.rstrip("/") + "__old"
-    shutil.move(path, old)
-    shutil.move(tmp, path)
-    shutil.rmtree(old)
+    _swap_dir(path, tmp)
     return file_key_spans(path, cluster_by[0])
 
 
@@ -203,8 +172,6 @@ def file_key_spans(path: str, key: str) -> dict:
     """Audit helper: per parquet file, the (min, max) span of ``key``
     from footer statistics only (no data read) — the evidence that a
     clustered table actually prunes."""
-    import os
-
     import pyarrow.parquet as pq
 
     spans = {}

@@ -60,6 +60,13 @@ class VersionedTable:
     def versions(self) -> list[dict]:
         return self._manifest()
 
+    def _commit_manifest(self, manifest: list[dict]) -> None:
+        """Atomically replace the manifest: tmp file, then ``os.replace``."""
+        tmp = self.manifest_path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(manifest, f, indent=2)
+        os.replace(tmp, self.manifest_path)
+
     # -- write -------------------------------------------------------------
 
     def write(
@@ -88,10 +95,7 @@ class VersionedTable:
             "watermark": naive_utc(watermark).isoformat() if watermark else None,
         })
         os.makedirs(self.dir, exist_ok=True)
-        tmp = self.manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=2)
-        os.replace(tmp, self.manifest_path)  # atomic manifest swap
+        self._commit_manifest(manifest)
         return version
 
     # -- read --------------------------------------------------------------
@@ -131,11 +135,7 @@ class VersionedTable:
         if not cutoff:
             return []
         dropped = {m["version"] for m in cutoff}
-        kept = [m for m in manifest if m["version"] not in dropped]
-        tmp = self.manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(kept, f, indent=2)
-        os.replace(tmp, self.manifest_path)
+        self._commit_manifest([m for m in manifest if m["version"] not in dropped])
         for m in cutoff:
             shutil.rmtree(m["path"], ignore_errors=True)
         return sorted(dropped)

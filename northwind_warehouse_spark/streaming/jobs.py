@@ -183,40 +183,24 @@ def scd2_streaming_merge(
 ):
     """Streaming SCD2 dimension maintenance.
 
-    Each micro-batch of change events is folded into the versioned
-    dimension with ``scd2_merge`` (foreachBatch — the canonical shape
-    for merge-style sinks Structured Streaming doesn't natively offer).
-    Every batch commits an immutable version, so the dimension's full
-    history of states is time-travelable; the checkpoint guarantees each
-    batch folds exactly once.
+    Each micro-batch of change events is folded in by
+    ``scd2_fold_commit``, the batch pipeline's own step (foreachBatch —
+    the canonical shape for merge-style sinks Structured Streaming
+    doesn't natively offer): it skips rows at or before the dim's
+    committed watermark and commits an immutable version together with
+    the batch's newest ``ts`` as the new watermark, so the history of
+    states is time-travelable and a replayed batch folds nothing twice.
 
     Invariant (tested): streaming the events in arbitrary micro-batches
     produces the same dimension as one batch build over all events.
     """
-    from northwind_warehouse_spark.functions.hashing import num_str, surrogate_key
-    from northwind_warehouse_spark.operators.scd2 import (
-        scd2_from_change_stream, scd2_merge,
-    )
+    from northwind_warehouse_spark.operators.incremental import scd2_fold_commit
+    from northwind_warehouse_spark.plans.medallion import users_scd2_spec
     from northwind_warehouse_spark.sources.versioned import VersionedTable
 
-    kwargs = dict(
-        key_cols=["user_id"], ts_col="ts",
-        attr_cols=["event_type", "value"], tiebreak_cols=["event_id"],
-        sk_name="user_sk",
-    )
-
     def fold(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        vt = VersionedTable(spark, lake_dir, table)
-        hash_col = surrogate_key("event_type", num_str("value"))
-        changes = batch.select("event_id", "user_id", "ts", "event_type", "value")
-        if changes.isEmpty():
-            return
-        if vt.versions():
-            dim = scd2_merge(vt.read(), changes, hash_col=hash_col, **kwargs)
-        else:
-            dim = scd2_from_change_stream(changes, hash_col=hash_col, **kwargs)
-        vt.write(dim)
+        scd2_fold_commit(VersionedTable(batch.sparkSession, lake_dir, table), batch,
+                         users_scd2_spec())
 
     q = (
         events.writeStream.foreachBatch(fold)

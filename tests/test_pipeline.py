@@ -94,8 +94,10 @@ def test_pipeline_runs_and_is_idempotent(spark, tmp_path):
     assert datetime.fromisoformat(p._vt(p.DIM_USERS).versions()[-1]["watermark"]) == want_hwm
     assert p.audit.get(p.DIM_USERS).hwm_date == want_hwm
 
-    # second run with no new data: nothing changes
+    # second run with no new data: nothing changes, and the empty change
+    # slice commits no dim version
     p.run(SF_SMOKE)
+    assert len(p._vt(p.DIM_USERS).versions()) == 1
     assert _dim_rows(p.table(p.DIM_USERS)) == dim1
     assert _fact_rows(p.table(p.FACT_ORDERS)) == fact1
     assert p.audit.get(p.DIM_USERS).hwm_date == want_hwm
@@ -162,6 +164,51 @@ def test_crash_between_steps_commits_nothing(spark, tmp_path, monkeypatch):
     clean.run(SF_SMOKE)
     assert _dim_rows(p.table(p.DIM_USERS)) == _dim_rows(clean.table(clean.DIM_USERS))
     assert p.audit.get(p.DIM_USERS).hwm_date == _max_event_ts(spark, SF_SMOKE)
+
+
+def test_late_arriving_customers_are_repaired(spark, tmp_path):
+    """Orders of customers missing from the first run's customer table
+    land on the dummy SK; once those customers arrive, the next run
+    re-resolves the orders to their real SK, nation and region."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from northwind_warehouse_spark.functions.hashing import surrogate_key
+    from northwind_warehouse_spark.plans.medallion import dim_customer
+    from northwind_warehouse_spark.plans.pipeline import WarehousePipeline
+
+    # a third of the customers arrive late, beside the other tables unchanged
+    early = tmp_path / "early"
+    early.mkdir()
+    for f in os.listdir(SF_SMOKE):
+        if f != "customer.parquet":
+            os.symlink(os.path.join(SF_SMOKE, f), early / f)
+    cust = pq.read_table(os.path.join(SF_SMOKE, "customer.parquet"))
+    late_ids = {k for k in cust["c_custkey"].to_pylist() if k % 3 == 1}
+    pq.write_table(cust.filter(pa.array([k not in late_ids for k in cust["c_custkey"].to_pylist()])),
+                   early / "customer.parquet")
+
+    dummy = spark.range(1).select(surrogate_key(F.lit(0))).first()[0]
+    p = WarehousePipeline(spark, str(tmp_path / "lake"))
+    p.run(str(early))
+    first = [r for r in p.table(p.FACT_ORDERS).collect() if r.customer_id in late_ids]
+    assert first and all(
+        (r.customer_sk, r.nation_name, r.region_name) == (dummy, "Not Found", "Not Found")
+        for r in first)
+
+    p.run(SF_SMOKE)
+    want = {r.customer_id: (r.customer_sk, r.nation_name, r.region_name)
+            for r in dim_customer(spark, SF_SMOKE).collect()}
+    fact = p.table(p.FACT_ORDERS).collect()
+    late = [r for r in fact if r.customer_id in late_ids]
+    assert len(late) == len(first)
+    assert all((r.customer_sk, r.nation_name, r.region_name) == want[r.customer_id] for r in late)
+    # customer 0 is real, and its SK equals the dummy SK md5('0')
+    assert not [r.order_id for r in fact
+                if r.customer_sk == dummy and r.customer_id in want and r.customer_id != 0]
+    assert len(p._vt(p.FACT_ORDERS).versions()) == 2  # one version per run
 
 
 def test_corpus_pipeline_pack_manifest(spark, tmp_path):

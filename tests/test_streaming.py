@@ -166,6 +166,15 @@ def test_scd2_streaming_merge_equals_batch_build(spark, tmp_path):
     )
     assert got == want
 
+    # the sink commits its watermark with the dim, like a batch run
+    from datetime import datetime
+
+    from northwind_warehouse_spark.operators.incremental import AuditControl
+
+    wm = vt.versions()[-1]["watermark"]
+    assert wm and datetime.fromisoformat(wm) == e.agg(F.max("ts")).collect()[0][0]
+    assert AuditControl(spark, f"{lake}/_audit/audit_control").get("dim_users").is_processed
+
 
 def test_sessionize_stream_runs(spark, events_dir, tmp_path):
     """An availableNow run terminates on its own and emits exactly the
