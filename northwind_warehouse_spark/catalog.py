@@ -11,6 +11,7 @@ directly: filters and column pruning push all the way down.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -30,30 +31,51 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-_PINNED_SESSIONS: "weakref.WeakSet[SparkSession]" = None  # type: ignore[assignment]
+# Spark's inferred schema per session, keyed by a file's footer schema
+# plus the session confs that steer parquet schema conversion
+_SCHEMAS: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
 
 
-def _pin_session_confs(spark: SparkSession) -> None:
-    """Pin the confs a vanilla (driver-built) session needs, once per
-    session: nanos-as-long parquet reads and UTC timestamp semantics so
-    results don't depend on the host JVM's default zone. Cached in a
-    WeakSet — repeated load() calls cost zero py4j round-trips."""
-    global _PINNED_SESSIONS
-    if _PINNED_SESSIONS is None:
-        import weakref
-
-        _PINNED_SESSIONS = weakref.WeakSet()
-    if spark not in _PINNED_SESSIONS:
+def _session_schemas(spark: SparkSession) -> dict:
+    """The session's schema memo. Its first call pins the confs a
+    vanilla (driver-built) session needs: nanos-as-long parquet reads
+    and UTC timestamp semantics so results don't depend on the host
+    JVM's default zone."""
+    memo = _SCHEMAS.get(spark)
+    if memo is None:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-        _PINNED_SESSIONS.add(spark)
+        memo = _SCHEMAS[spark] = {}
+    return memo
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job
+    once the session has seen the file's footer schema under the same
+    inference confs: the schema Spark inferred then is passed back to
+    it. A footer never seen before infers, once."""
+    memo = _session_schemas(spark)
+    layout = _footer(path)[1]
+    if layout is None:
+        return spark.read.parquet(path)
+    key = (layout, *(spark.conf.get(c) for c in _INFER_CONFS))
+    if key not in memo:
+        df = spark.read.parquet(path)
+        memo[key] = df.schema
+        return df
+    return spark.read.schema(memo[key]).parquet(path)
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     if table not in TABLES:
         raise KeyError(f"unknown table {table!r}; expected one of {TABLES}")
-    _pin_session_confs(spark)
-    df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{table}.parquet")
+    df = read_parquet(spark, f"{sf_dir.rstrip('/')}/{table}.parquet")
     if table == "events":
         # ts is TIMESTAMP(NANOS) in the file. How it surfaces depends on
         # session confs we may not control (the driver builds its own
@@ -69,13 +91,43 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
         if isinstance(dt, LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif isinstance(dt, TimestampNTZType):
-            # wall clock is UTC by construction; session tz is pinned UTC
-            # above, so the cast reinterprets the same instant
+            # wall clock is UTC by construction; read_parquet pinned the
+            # session tz to UTC, so the cast reinterprets the same instant
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 
-_ROW_COUNTS: dict[tuple[str, int, int], int] = {}
+_FOOTERS: dict[tuple[str, int, int], tuple[int, tuple | None]] = {}
+_SPARK_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer(path: str) -> tuple[int, tuple | None]:
+    """(rows, layout) of the parquet file, or directory of part files,
+    at ``path``, read from the parquet footers with no Spark job
+    and cached for the process lifetime under (path, mtime_ns, size).
+    ``layout`` is what Spark infers a schema from: the parquet schema
+    and the Spark schema a Spark writer stored; it is None when the part
+    files disagree or sit in partition subdirectories, whose schema
+    depends on more than the footers."""
+    st = os.stat(path)
+    key = (path, st.st_mtime_ns, st.st_size)
+    if key not in _FOOTERS:
+        import pyarrow.parquet as pq
+
+        if os.path.isdir(path):
+            # Spark's file listing rule: names starting with _ or . are not data
+            files = [os.path.join(root, n) for root, _, names in os.walk(path)
+                     for n in names if not n.startswith(("_", "."))]
+            flat = all(os.path.dirname(f) == path for f in files)
+        else:
+            files, flat = [path], True
+        metas = [pq.read_metadata(f) for f in files]
+        # the schema's text after its first line, which is the object's address
+        layouts = {(str(m.schema).partition("\n")[2], (m.metadata or {}).get(_SPARK_SCHEMA))
+                   for m in metas}
+        _FOOTERS[key] = (sum(m.num_rows for m in metas),
+                         layouts.pop() if flat and len(layouts) == 1 else None)
+    return _FOOTERS[key]
 
 
 def table_rows(sf_dir: str, table: str) -> int:
@@ -97,14 +149,7 @@ def table_rows(sf_dir: str, table: str) -> int:
     files are replaced)."""
     if table not in TABLES:
         raise KeyError(f"unknown table {table!r}; expected one of {TABLES}")
-    path = f"{sf_dir.rstrip('/')}/{table}.parquet"
-    st = os.stat(path)
-    key = (path, st.st_mtime_ns, st.st_size)
-    if key not in _ROW_COUNTS:
-        import pyarrow.dataset as ds
-
-        _ROW_COUNTS[key] = ds.dataset(path, format="parquet").count_rows()
-    return _ROW_COUNTS[key]
+    return _footer(f"{sf_dir.rstrip('/')}/{table}.parquet")[0]
 
 
 def register_views(spark: SparkSession, sf_dir: str, suffix: str = "") -> list[str]:

@@ -104,9 +104,10 @@ def incremental_merge_by_key(
 ) -> DataFrame:
     """Upsert semantics of the reference's dbt incremental materialization
     (unique_key merge): incoming rows replace existing rows with the same
-    business key. Expressed as anti-join + union (one shuffle each side).
+    business key. Expressed as anti-join + union; the anti-join needs no
+    distinct keys, so a small ``incoming`` is broadcast with no shuffle.
     """
-    return existing.join(incoming.select(*key_cols).distinct(), on=key_cols, how="left_anti").unionByName(incoming)
+    return existing.join(incoming.select(*key_cols), on=key_cols, how="left_anti").unionByName(incoming)
 
 
 def processing_date_range(

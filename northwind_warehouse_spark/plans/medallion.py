@@ -71,8 +71,8 @@ def oracle_stg_customer() -> str:
     """
 
 
-def stg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load(spark, sf_dir, "orders")
+def _conformed_orders(o: DataFrame) -> DataFrame:
+    """``orders`` under the warehouse's column names."""
     return o.select(
         F.col("o_orderkey").alias("order_id"),
         F.col("o_custkey").alias("customer_id"),
@@ -80,10 +80,17 @@ def stg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").alias("total_price"),
         F.col("o_orderdate").cast("date").alias("order_date"),
         F.col("o_orderpriority").alias("order_priority"),
+    )
+
+
+def stg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = _conformed_orders(load(spark, sf_dir, "orders"))
+    return o.select(
+        "*",
         F.lit("I").alias("op"),
         surrogate_key(
-            "o_orderkey", "o_custkey", "o_orderstatus", num_str("o_totalprice"),
-            F.col("o_orderdate").cast("date"), "o_orderpriority",
+            "order_id", "customer_id", "order_status", num_str("total_price"),
+            "order_date", "order_priority",
         ).alias("row_hash"),
     )
 
@@ -480,14 +487,18 @@ def oracle_snapshot_users() -> str:
 # ---------------------------------------------------------------------------
 
 
+CUSTOMER_LOOKUP_COLS = ("customer_sk", "nation_name", "region_name")
+
+
 def lookup_customer(spark: SparkSession, sf_dir: str, rel: DataFrame, key: str) -> DataFrame:
-    """``rel`` with ``customer_sk``, ``nation_name`` and ``region_name``
-    looked up in dim_customer by ``rel[key]``; a key with no customer
-    falls back to sk(0) and 'Not Found' (reference:
-    models/dwh/fact_order.sql, macros/fact_order_fail_lookup.sql).
-    ``rel`` must not carry those three columns."""
+    """``rel`` with ``CUSTOMER_LOOKUP_COLS`` (``customer_sk``,
+    ``nation_name``, ``region_name``) looked up in dim_customer by
+    ``rel[key]``; a key with no customer falls back to sk(0) and 'Not
+    Found' (reference: models/dwh/fact_order.sql,
+    macros/fact_order_fail_lookup.sql). ``rel`` must not carry those
+    three columns."""
     d = dim_customer(spark, sf_dir).select(
-        F.col("customer_id").alias("_cid"), "customer_sk", "nation_name", "region_name")
+        F.col("customer_id").alias("_cid"), *CUSTOMER_LOOKUP_COLS)
     # rows-gated hint (r13): dim_customer's optimizer estimate is
     # join-product-inflated (~1.6e12 bytes for 15k rows at sf0.1) and
     # declines the broadcast; the footer row count is exact.
@@ -500,6 +511,19 @@ def lookup_customer(spark: SparkSession, sf_dir: str, rel: DataFrame, key: str) 
             "nation_name": F.coalesce("nation_name", F.lit("Not Found")),
             "region_name": F.coalesce("region_name", F.lit("Not Found")),
         })
+    )
+
+
+def fact_order_rows(orders: DataFrame) -> DataFrame:
+    """The fact_orders row of conformed orders (``stg_orders``' column
+    names) that carry ``CUSTOMER_LOOKUP_COLS``: the one projection of
+    ``fact_orders`` and of the warehouse pipeline's fact upsert."""
+    return orders.select(
+        "order_id", "customer_sk", "customer_id", "nation_name", "region_name",
+        "order_status", "total_price", "order_date",
+        (F.year("order_date") * 10000 + F.month("order_date") * 100 + F.dayofmonth("order_date"))
+        .cast("int").alias("date_key"),
+        "order_priority",
     )
 
 
@@ -516,19 +540,7 @@ def fact_orders(spark: SparkSession, sf_dir: str, *, spread: bool = True) -> Dat
     o = load(spark, sf_dir, "orders")
     if spread:
         o = spread_scan(o, spark, sf_dir, "orders", "o_orderkey")
-    return (
-        lookup_customer(spark, sf_dir, o, "o_custkey")
-        .select(
-            F.col("o_orderkey").alias("order_id"), "customer_sk",
-            F.col("o_custkey").alias("customer_id"), "nation_name", "region_name",
-            F.col("o_orderstatus").alias("order_status"),
-            F.col("o_totalprice").alias("total_price"),
-            F.col("o_orderdate").cast("date").alias("order_date"),
-            (F.year("o_orderdate") * 10000 + F.month("o_orderdate") * 100 + F.dayofmonth("o_orderdate"))
-            .cast("int").alias("date_key"),
-            F.col("o_orderpriority").alias("order_priority"),
-        )
-    )
+    return fact_order_rows(lookup_customer(spark, sf_dir, _conformed_orders(o), "customer_id"))
 
 
 def oracle_fact_orders() -> str:

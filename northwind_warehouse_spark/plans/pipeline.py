@@ -2,17 +2,20 @@
 equivalent of ``dbt run`` on the reference project.
 
 Flow per run (reference: models/* + macros/audit_management/*):
-  1. staging: conform raw tables → lake;
+  1. staging: build the batch's conformed relations — ``stg_orders``
+     for the fact, the events change rows for the dim — lazily; staging
+     writes nothing, and with schema-known loads (``catalog.read_parquet``)
+     it starts no Spark job;
   2. dims: ``scd2_fold_commit`` reads the dim's high watermark from its
      latest manifest entry, SCD2-merges the newer change rows (only
      affected keys recomputed) and commits the new version together
      with its new watermark (the newest change ``ts``) in one manifest
      entry; an empty change slice commits no version;
-  3. facts: re-resolve existing rows still on the dummy customer SK
-     with the same customer lookup ``fact_orders`` uses (reference:
-     macros/fact_order_fail_lookup.sql), upsert the incoming orders by
-     ``order_id`` and commit one version (partitioned by order_year for
-     pruning).
+  3. facts: upsert the incoming orders by ``order_id``; they enter
+     unresolved, and ONE customer lookup per batch resolves them
+     together with the existing rows still on the dummy customer SK
+     (reference: macros/fact_order_fail_lookup.sql); commit one version
+     (partitioned by order_year for pruning).
 
 Each stage has one commit point, its manifest entry: a crash anywhere
 before it leaves the table and its watermark as they were. Idempotent:
@@ -47,52 +50,51 @@ class WarehousePipeline:
         self.lake = lake_dir.rstrip("/")
         self.audit = AuditControl(spark, f"{self.lake}/_audit/audit_control")
 
-    def _path(self, name: str) -> str:
-        return f"{self.lake}/{name}"
-
     def _vt(self, name: str) -> VersionedTable:
         return VersionedTable(self.spark, self.lake, name)
 
     # -- stages ------------------------------------------------------------
 
-    def run_staging(self, sf_dir: str) -> None:
-        for name, builder in (
-            ("stg_customer", medallion.stg_customer),
-            ("stg_orders", medallion.stg_orders),
-            ("stg_lineitem", medallion.stg_lineitem),
-        ):
-            write_table(builder(self.spark, sf_dir), self._path(name))
+    def run_staging(self, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+        """The batch's conformed relations, lazy and unwritten:
+        ``stg_orders`` for the fact and the events change rows for the
+        dim. Schema-known loads make this step start no Spark job."""
+        return medallion.stg_orders(self.spark, sf_dir), load(self.spark, sf_dir, "events")
 
-    def run_dim_users(self, sf_dir: str) -> None:
-        scd2_fold_commit(self._vt(self.DIM_USERS), load(self.spark, sf_dir, "events"),
-                         medallion.users_scd2_spec())
+    def run_dim_users(self, events: DataFrame) -> None:
+        scd2_fold_commit(self._vt(self.DIM_USERS), events, medallion.users_scd2_spec())
 
-    def run_fact_orders(self, sf_dir: str) -> None:
-        fact = medallion.fact_orders(self.spark, sf_dir).withColumn(
-            "order_year", F.year("order_date")
-        )
+    def run_fact_orders(self, orders: DataFrame, sf_dir: str) -> None:
         vt = self._vt(self.FACT_ORDERS)
-        if vt.versions():
-            existing = self.refresh_failed_lookups(vt.read(), sf_dir)
-            fact = incremental_merge_by_key(existing, fact, ["order_id"])
+        fact = self.refresh_failed_lookups(vt.read() if vt.versions() else None, orders, sf_dir)
         vt.write(fact, partition_by=("order_year",))
 
-    def refresh_failed_lookups(self, fact: DataFrame, sf_dir: str) -> DataFrame:
-        """``fact`` with its rows still on the dummy customer SK
-        re-resolved against ``sf_dir``'s customers (reference:
-        macros/fact_order_fail_lookup.sql) — e.g. after a late-arriving
-        dimension load. Lazy: the caller's commit runs it."""
-        failed = F.col("customer_sk") == surrogate_key(F.lit(0))
+    def refresh_failed_lookups(self, fact: DataFrame | None, orders: DataFrame,
+                               sf_dir: str) -> DataFrame:
+        """``fact`` (None before the first commit) upserted by
+        ``order_id`` with ``orders`` (``stg_orders`` rows), which enter
+        unresolved; one customer lookup against ``sf_dir`` then resolves
+        them together with the rows still on the dummy customer SK, e.g.
+        after a late-arriving dimension load (reference:
+        models/dwh/fact_order.sql, macros/fact_order_fail_lookup.sql).
+        Rows already resolved are kept as they are. Lazy: the caller's
+        commit runs it."""
+        lookup = medallion.CUSTOMER_LOOKUP_COLS
+        incoming = medallion.fact_order_rows(
+            orders.withColumns({c: F.lit(None).cast("string") for c in lookup})
+        ).withColumn("order_year", F.year("order_date"))
+        if fact is not None:
+            incoming = incremental_merge_by_key(fact, incoming, ["order_id"])
+        sk = F.col("customer_sk")
+        unresolved = sk.isNull() | (sk == surrogate_key(F.lit(0)))
         repaired = medallion.lookup_customer(
-            self.spark, sf_dir,
-            fact.filter(failed).drop("customer_sk", "nation_name", "region_name"),
-            "customer_id")
-        return fact.filter(~failed).unionByName(repaired)
+            self.spark, sf_dir, incoming.filter(unresolved).drop(*lookup), "customer_id")
+        return incoming.filter(~unresolved).unionByName(repaired)
 
     def run(self, sf_dir: str) -> None:
-        self.run_staging(sf_dir)
-        self.run_dim_users(sf_dir)
-        self.run_fact_orders(sf_dir)
+        orders, events = self.run_staging(sf_dir)
+        self.run_dim_users(events)
+        self.run_fact_orders(orders, sf_dir)
 
     # -- reads -------------------------------------------------------------
 

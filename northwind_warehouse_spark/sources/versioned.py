@@ -10,13 +10,17 @@ pinned to version N sees identical bytes forever, regardless of later
 writes.
 
 Layout:
-    <root>/<table>/_manifest.json   # [{version, committed_at, path, watermark}]
+    <root>/<table>/_manifest.json   # [{version, committed_at, path, watermark, schema}]
     <root>/<table>/v=<n>/ ... parquet ...
 
 A manifest entry is the only commit point of a version: its data
 directory and its source ``watermark`` (the newest source timestamp the
 version has absorbed, naive UTC ISO, or null) land in the same atomic
 ``os.replace`` of the manifest — the ``txn`` action of Delta Lake's log.
+``schema`` is the written DataFrame's schema as Spark's JSON; reads pass
+it to Spark, so a version read starts no schema-inference job, as a
+Delta reader takes the schema from the log. An entry without it (written
+before the field existed) reads by inference.
 
 Write amplification is per-version (full snapshots, like the reference's
 materialized tables) — incremental formats (Delta/Iceberg) swap in
@@ -31,6 +35,7 @@ import shutil
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _aware_utc(ts: datetime) -> datetime:
@@ -93,6 +98,7 @@ class VersionedTable:
             "committed_at": _aware_utc(committed_at or datetime.now(timezone.utc)).isoformat(),
             "path": path,
             "watermark": naive_utc(watermark).isoformat() if watermark else None,
+            "schema": df.schema.jsonValue(),
         })
         os.makedirs(self.dir, exist_ok=True)
         self._commit_manifest(manifest)
@@ -112,7 +118,13 @@ class VersionedTable:
             if not matches:
                 raise KeyError(f"version {version} not found in {self.dir}")
             entry = matches[0]
-        return self.spark.read.parquet(entry["path"])
+        return self._read(entry)
+
+    def _read(self, entry: dict) -> DataFrame:
+        reader = self.spark.read
+        if "schema" in entry:
+            reader = reader.schema(StructType.fromJson(entry["schema"]))
+        return reader.parquet(entry["path"])
 
     def vacuum(self, keep_last: int = 1, older_than: datetime | None = None) -> list[int]:
         """Retention cleanup: drop version directories beyond the newest
@@ -149,7 +161,7 @@ class VersionedTable:
         ]
         if not eligible:
             raise KeyError(f"no version of {self.dir} existed at {ts.isoformat()}")
-        return self.spark.read.parquet(eligible[-1]["path"])
+        return self._read(eligible[-1])
 
 
 def table_diff(old: DataFrame, new: DataFrame, key_cols: list[str]) -> DataFrame:

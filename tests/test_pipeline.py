@@ -110,7 +110,8 @@ def test_pipeline_runs_and_is_idempotent(spark, tmp_path):
     latest = versions[-1]["path"]
     years = [d for d in os.listdir(latest) if d.startswith("order_year=")]
     assert len(years) >= 5
-    assert not os.path.exists(tmp_path / "lake" / "_audit")
+    # staging writes nothing: the lake holds the two committed tables only
+    assert sorted(os.listdir(tmp_path / "lake")) == sorted([p.DIM_USERS, p.FACT_ORDERS])
 
     # time travel: the first run's fact version is still readable
     assert _fact_rows(p.table(p.FACT_ORDERS, version=versions[0]["version"])) == fact1
@@ -209,6 +210,58 @@ def test_late_arriving_customers_are_repaired(spark, tmp_path):
     assert not [r.order_id for r in fact
                 if r.customer_sk == dummy and r.customer_id in want and r.customer_id != 0]
     assert len(p._vt(p.FACT_ORDERS).versions()) == 2  # one version per run
+
+
+def test_stuck_order_redelivered_with_its_customer_resolves_once(spark, tmp_path):
+    """An order stuck on the dummy SK is re-delivered with a new status
+    in the batch that also brings its customer: it ends as exactly one
+    row, with the new status and the customer's real SK. The re-delivered
+    row wins over the stuck one, and the one lookup of the batch
+    resolves it."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from northwind_warehouse_spark.functions.hashing import surrogate_key
+    from northwind_warehouse_spark.plans.pipeline import WarehousePipeline
+
+    orders = pq.read_table(os.path.join(SF_SMOKE, "orders.parquet"))
+    cust = pq.read_table(os.path.join(SF_SMOKE, "customer.parquet"))
+    order_id, cid = next((o, c) for o, c in zip(orders["o_orderkey"].to_pylist(),
+                                                orders["o_custkey"].to_pylist()) if c != 0)
+
+    def batch(name, tables):
+        d = tmp_path / name
+        d.mkdir()
+        for f in os.listdir(SF_SMOKE):
+            t = f.removesuffix(".parquet")
+            if t in tables:
+                pq.write_table(tables[t], d / f)
+            else:
+                os.symlink(os.path.join(SF_SMOKE, f), d / f)
+        return str(d)
+
+    early = batch("early", {"customer": cust.filter(pc.not_equal(cust["c_custkey"], cid))})
+    one = orders.filter(pc.equal(orders["o_orderkey"], order_id))
+    redelivered = one.set_column(one.schema.get_field_index("o_orderstatus"), "o_orderstatus",
+                                 pa.array(["Z"], one.schema.field("o_orderstatus").type))
+    late = batch("late", {"orders": redelivered})
+
+    dummy = spark.range(1).select(surrogate_key(F.lit(0))).first()[0]
+    real = spark.range(1).select(surrogate_key(F.lit(cid))).first()[0]
+    p = WarehousePipeline(spark, str(tmp_path / "lake"))
+    p.run(early)
+    [stuck] = p.table(p.FACT_ORDERS).filter(F.col("order_id") == order_id).collect()
+    assert stuck.customer_sk == dummy and stuck.order_status != "Z"
+
+    p.run(late)
+    fact = p.table(p.FACT_ORDERS)
+    [row] = fact.filter(F.col("order_id") == order_id).collect()
+    assert (row.order_status, row.customer_sk) == ("Z", real)
+    assert row.nation_name != "Not Found"
+    assert fact.count() == orders.num_rows
 
 
 def test_corpus_pipeline_pack_manifest(spark, tmp_path):

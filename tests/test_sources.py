@@ -2,7 +2,14 @@
 
 from __future__ import annotations
 
+import shutil
+import uuid
+from contextlib import contextmanager
+from datetime import datetime, timezone
+
 from pyspark.sql import functions as F
+
+from tests.conftest import SF_ORACLE, SF_SMOKE
 
 
 def test_write_partitioned_prunes(spark, tmp_path):
@@ -232,6 +239,10 @@ def test_nanos_timestamp_with_submicro_residue_floors(spark, tmp_path):
     try:
         with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
             spark.read.parquet(str(nanos_dir / "events.parquet")).collect()
+        # the schema memo is keyed on the conf: the long schema memoized
+        # under nanosAsLong=true is not reused, load infers and fails alike
+        with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+            load(spark, str(nanos_dir), "events")
 
         # branch 3: µs TIMESTAMP_NTZ (the real testdata shape) loads exact
         ntz_dir = tmp_path / "ntz"
@@ -259,14 +270,14 @@ def test_table_rows_matches_spark_count_and_caches(spark):
     directory-of-part-files layout scale_smoke writes."""
     import os
 
-    from northwind_warehouse_spark.catalog import _ROW_COUNTS, load, table_rows
+    from northwind_warehouse_spark.catalog import _FOOTERS, load, table_rows
 
     for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         for t in ("embeddings", "orders"):
             assert table_rows(sf, t) == load(spark, sf, t).count()
             path = f"{sf}/{t}.parquet"
             st = os.stat(path)
-            assert (path, st.st_mtime_ns, st.st_size) in _ROW_COUNTS
+            assert (path, st.st_mtime_ns, st.st_size) in _FOOTERS
 
     # directory layout + rewrite invalidation: a table rewritten
     # in-process must be re-counted (stale counts fed occupancy-scaled
@@ -286,6 +297,73 @@ def test_table_rows_matches_spark_count_and_caches(spark):
 
     with pytest.raises(KeyError):
         table_rows("/root/testdata/sf0.001", "not_a_table")
+
+
+@contextmanager
+def _jobs(spark):
+    """The ids of the Spark jobs the block starts, read back from its
+    own job group."""
+    sc = spark.sparkContext
+    group = f"jobs-probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs probe")
+    ids: list[int] = []
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_loaded_and_versioned_schemas_equal_inference(spark, tmp_path):
+    """catalog.read_parquet (under load) and VersionedTable reads hand
+    Spark a schema instead of inferring it: that schema equals
+    ``spark.read.parquet(path).schema`` under the same confs, for every
+    testdata table and for a Spark-written partitioned version."""
+    from northwind_warehouse_spark.catalog import TABLES, read_parquet
+    from northwind_warehouse_spark.sources.versioned import VersionedTable
+
+    for sf in (SF_SMOKE, SF_ORACLE):
+        for t in TABLES:
+            path = f"{sf}/{t}.parquet"
+            for _ in range(2):  # inferred, then memoized
+                assert read_parquet(spark, path).schema == spark.read.parquet(path).schema, path
+
+    vt = VersionedTable(spark, str(tmp_path), "fact")
+    orders = read_parquet(spark, f"{SF_SMOKE}/orders.parquet")
+    vt.write(orders.select("o_orderkey", F.year("o_orderdate").alias("o_year"), "o_totalprice",
+                           F.lit("I").alias("op")),
+             partition_by=("o_year",))
+    want = spark.read.parquet(vt.versions()[-1]["path"]).schema
+    assert vt.read().schema == want
+    assert vt.read_asof(datetime.now(timezone.utc)).schema == want
+    assert [f.name for f in want] == ["o_orderkey", "o_totalprice", "op", "o_year"]
+
+
+def test_schema_known_load_and_version_read_start_no_job(spark, tmp_path):
+    """A file whose footer schema the session has seen loads with no
+    Spark job, even under a new path; a VersionedTable read, pinned or
+    as-of, starts none either. The control: inference on the same copy
+    does start a job, so the probe can see one."""
+    from northwind_warehouse_spark.catalog import load
+    from northwind_warehouse_spark.sources.versioned import VersionedTable
+
+    src = tmp_path / "batch"
+    src.mkdir()
+    shutil.copy(f"{SF_SMOKE}/events.parquet", src / "events.parquet")
+    load(spark, str(src), "events")
+
+    with _jobs(spark) as inferred:
+        spark.read.parquet(str(src / "events.parquet"))
+    assert inferred
+
+    vt = VersionedTable(spark, str(tmp_path / "lake"), "t")
+    vt.write(load(spark, str(src), "events"))
+    with _jobs(spark) as started:
+        events = load(spark, str(src), "events")
+        latest, pinned = vt.read(), vt.read(version=0)
+        asof = vt.read_asof(datetime.now(timezone.utc))
+    assert started == []
+    assert latest.schema == pinned.schema == asof.schema == events.schema
 
 
 def test_scale_replicator_keeps_pair_growth_linear(spark, tmp_path, monkeypatch):

@@ -85,6 +85,34 @@ def test_vacuum_retention(spark, tmp_path):
     assert [m["version"] for m in t.versions()] == [3]
 
 
+def test_entry_without_schema_reads_by_inference(spark, tmp_path):
+    """A manifest entry in the format that predates the ``schema`` field
+    still reads, latest, pinned and as-of, by schema inference."""
+    import json
+
+    from northwind_warehouse_spark.sources.versioned import VersionedTable
+
+    t = VersionedTable(spark, str(tmp_path), "t")
+    df = spark.range(4).select("id", (F.col("id") % 2).cast("int").alias("part"))
+    t.write(df, committed_at=_utc(2024, 1, 1), partition_by=("part",))
+    t.write(df.filter("id < 3"), committed_at=_utc(2024, 2, 1), partition_by=("part",))
+    schema = t.read().schema
+    with open(t.manifest_path) as f:
+        manifest = json.load(f)
+    for entry in manifest:
+        del entry["schema"]
+    with open(t.manifest_path, "w") as f:
+        json.dump(manifest, f)
+
+    def rows(d):
+        return sorted(tuple(r) for r in d.collect())
+
+    assert t.read().schema == schema
+    assert rows(t.read()) == [(0, 0), (1, 1), (2, 0)]
+    assert rows(t.read(version=0)) == rows(t.read_asof(_utc(2024, 1, 15))) == [
+        (0, 0), (1, 1), (2, 0), (3, 1)]
+
+
 def test_crashed_commit_does_not_wedge_the_table(spark, tmp_path, monkeypatch):
     """A commit that dies after writing its ``v=<n>`` directory but before
     the manifest swap leaves that directory unreferenced. The next write
