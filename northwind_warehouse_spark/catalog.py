@@ -61,7 +61,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     inference confs: the schema Spark inferred then is passed back to
     it. A footer never seen before infers, once."""
     memo = _session_schemas(spark)
-    layout = _footer(path)[1]
+    layout = _footer(path)[2]
     if layout is None:
         return spark.read.parquet(path)
     key = (layout, *(spark.conf.get(c) for c in _INFER_CONFS))
@@ -97,14 +97,14 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return df
 
 
-_FOOTERS: dict[tuple[str, int, int], tuple[int, tuple | None]] = {}
+_FOOTERS: dict[tuple[str, int, int], tuple[int, int, tuple | None]] = {}
 _SPARK_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def _footer(path: str) -> tuple[int, tuple | None]:
-    """(rows, layout) of the parquet file, or directory of part files,
-    at ``path``, read from the parquet footers with no Spark job
-    and cached for the process lifetime under (path, mtime_ns, size).
+def _footer(path: str) -> tuple[int, int, tuple | None]:
+    """(rows, row groups, layout) of the parquet file, or directory of
+    part files, at ``path``, read from the parquet footers with no Spark
+    job and cached for the process lifetime under (path, mtime_ns, size).
     ``layout`` is what Spark infers a schema from: the parquet schema
     and the Spark schema a Spark writer stored; it is None when the part
     files disagree or sit in partition subdirectories, whose schema
@@ -125,7 +125,7 @@ def _footer(path: str) -> tuple[int, tuple | None]:
         # the schema's text after its first line, which is the object's address
         layouts = {(str(m.schema).partition("\n")[2], (m.metadata or {}).get(_SPARK_SCHEMA))
                    for m in metas}
-        _FOOTERS[key] = (sum(m.num_rows for m in metas),
+        _FOOTERS[key] = (sum(m.num_rows for m in metas), sum(m.num_row_groups for m in metas),
                          layouts.pop() if flat and len(layouts) == 1 else None)
     return _FOOTERS[key]
 

@@ -4,13 +4,15 @@ Re-expresses the reference's audit machinery
 (reference: macros/audit_management/{generate_audit_table,initialized_audit,
 updating_audit,get_audit_info}.sql) over the lake's own commits: an
 entity's high watermark is the ``watermark`` of its latest
-``VersionedTable`` manifest entry, committed atomically with the data
-it describes, so data and watermark can never disagree and reading the
-audit state starts no Spark job. The high-watermark predicate is a plain
+``VersionedTable`` log entry, committed put-if-absent together with the
+data it describes, so data and watermark can never disagree and reading
+the audit state starts no Spark job. The high-watermark predicate is a plain
 timestamp filter, so it pushes down to the parquet scan (min/max
 row-group stats skip old files entirely — this is the whole point at
 100 TB). ``scd2_fold_commit`` is the one step that applies a change
-slice to an SCD2 dimension and commits it with its watermark.
+slice to an SCD2 dimension and commits it with its watermark; a fold
+that loses its version id to a concurrent writer re-folds on the
+winner's version.
 """
 
 from __future__ import annotations
@@ -38,9 +40,9 @@ class AuditEntry:
 
 
 class AuditControl:
-    """Read-only audit view of ``<lake>/<entity>/_manifest.json``, where
-    ``<lake>`` is the directory holding ``path``'s ``_audit/``. Dates are
-    naive UTC."""
+    """Read-only audit view of the latest entry in ``<lake>/<entity>/_log/``,
+    where ``<lake>`` is the directory holding ``path``'s ``_audit/``. Dates
+    are naive UTC."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -52,12 +54,12 @@ class AuditControl:
 
     def get(self, entity: str) -> AuditEntry:
         """The watermark and commit time of the entity's latest version."""
-        versions = VersionedTable(self.spark, self.lake, entity).versions()
-        hwm = _committed_watermark(versions)
+        entry = VersionedTable(self.spark, self.lake, entity).latest()
+        hwm = _committed_watermark(entry)
         if hwm is None:
-            return AuditEntry(entity, EPOCH_LOW, False, bool(versions), EPOCH_LOW)
+            return AuditEntry(entity, EPOCH_LOW, False, entry is not None, EPOCH_LOW)
         return AuditEntry(entity, hwm, True, True,
-                          naive_utc(datetime.fromisoformat(versions[-1]["committed_at"])))
+                          naive_utc(datetime.fromisoformat(entry["committed_at"])))
 
     # kept only so perfbench's tracer still resolves it by name
     def update(self, entity: str, hwm_date: datetime, processed_at: datetime | None = None) -> None:
@@ -65,10 +67,10 @@ class AuditControl:
             "the watermark commits with its data: pass watermark= to VersionedTable.write")
 
 
-def _committed_watermark(versions: list[dict]) -> datetime | None:
-    """The ``watermark`` of the latest manifest entry (naive UTC), or
-    None when there is no entry or it records none."""
-    wm = versions[-1].get("watermark") if versions else None
+def _committed_watermark(entry: dict | None) -> datetime | None:
+    """The ``watermark`` of a log entry (naive UTC), or None when there
+    is no entry or it records none."""
+    wm = entry and entry["watermark"]
     return datetime.fromisoformat(wm) if wm else None
 
 
@@ -81,22 +83,23 @@ def scd2_fold_commit(vt: VersionedTable, changes: DataFrame, spec: dict) -> int 
     """Fold the change rows after ``vt``'s committed watermark into its
     SCD2 dimension (``spec``: the keyword arguments of ``scd2_merge``)
     and commit it with the newest change ``ts`` as its watermark in one
-    manifest entry; returns the new version id. The slice's ``max(ts)``
-    is also its emptiness check: an empty slice commits nothing."""
+    log entry; returns the new version id. The slice's ``max(ts)`` is
+    also its emptiness check: a slice with nothing after the watermark
+    commits nothing. A fold that loses its version id re-folds the rows
+    after the winner's watermark on the winner's dimension."""
     ts = spec["ts_col"]
-    versions = vt.versions()
-    changes = high_watermark_filter(
-        changes.select(*spec["key_cols"], ts, *spec["attr_cols"], *spec.get("tiebreak_cols", ())),
-        ts, _committed_watermark(versions) or EPOCH_LOW,
-    )
+    changes = changes.select(*spec["key_cols"], ts, *spec["attr_cols"], *spec.get("tiebreak_cols", ()))
+    # any non-empty slice after a watermark holds the overall newest ts
     new_hwm = changes.agg(F.max(ts)).collect()[0][0]
-    if new_hwm is None:
-        return None
-    if versions:
-        dim = scd2_merge(vt.read(), changes, **spec)
-    else:
-        dim = scd2_from_change_stream(changes, **spec)
-    return vt.write(dim, watermark=new_hwm)
+
+    def fold(dim: DataFrame | None, entry: dict | None) -> DataFrame | None:
+        hwm = _committed_watermark(entry)
+        if new_hwm is None or (hwm is not None and naive_utc(new_hwm) <= hwm):
+            return None
+        rows = high_watermark_filter(changes, ts, hwm or EPOCH_LOW)
+        return scd2_merge(dim, rows, **spec) if dim is not None else scd2_from_change_stream(rows, **spec)
+
+    return vt.update(fold, watermark=new_hwm)
 
 
 def incremental_merge_by_key(

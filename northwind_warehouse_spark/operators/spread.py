@@ -28,9 +28,9 @@ runs measure the same plan at their own width.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
+
+from northwind_warehouse_spark.catalog import _footer, table_rows
 
 # Below this row count the single-task map work is too small for an
 # extra exchange to pay for itself (measured: the win on 600k-row
@@ -38,25 +38,13 @@ from pyspark.sql import DataFrame, SparkSession
 # sub-10k-row SCAN with cheap map work just adds a shuffle barrier).
 MIN_SPREAD_ROWS = 50_000
 
-_SPLIT_CACHE: dict[tuple[str, int, int], int] = {}
-
 
 def scan_splits(path: str) -> int:
     """Total parquet row groups under ``path`` (file or directory of
-    part files) — the scan's real parallelism capacity — from footer
-    metadata only (no Spark job). Cached on (path, mtime_ns, size) like
-    catalog.table_rows, so in-process rewrites invalidate naturally."""
-    st = os.stat(path)
-    key = (path, st.st_mtime_ns, st.st_size)
-    if key not in _SPLIT_CACHE:
-        import pyarrow.dataset as ds
-        import pyarrow.parquet as pq
-
-        total = 0
-        for frag in ds.dataset(path, format="parquet").get_fragments():
-            total += pq.ParquetFile(frag.path).metadata.num_row_groups
-        _SPLIT_CACHE[key] = max(total, 1)
-    return _SPLIT_CACHE[key]
+    part files) — the scan's real parallelism capacity — from the footer
+    read ``catalog.table_rows`` caches (no Spark job, one read per file
+    and (mtime_ns, size), so in-process rewrites invalidate naturally)."""
+    return max(_footer(path)[1], 1)
 
 
 def spread_scan(
@@ -88,8 +76,6 @@ def spread_scan(
     were single-threaded end to end on single-row-group inputs);
     pointless (and mildly costly) where the first operation is a wide
     shuffle anyway."""
-    from northwind_warehouse_spark.catalog import table_rows
-
     try:
         rows = table_rows(sf_dir, table)
         path = f"{sf_dir.rstrip('/')}/{table}.parquet"

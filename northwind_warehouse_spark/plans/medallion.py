@@ -208,7 +208,11 @@ def oracle_dim_date() -> str:
 # ---------------------------------------------------------------------------
 
 
-def _dummy_rows(spark: SparkSession, cols: list[tuple[str, str]], not_found: list, not_applicable: list) -> DataFrame:
+def _with_dummies(spark: SparkSession, base: DataFrame, not_found: list, not_applicable: list,
+                  sk: str) -> DataFrame:
+    """``base`` plus its "Not Found" (id 0) and "Not Applicable" (id -1)
+    members, each only when ``base`` lacks its id (its first column),
+    with the surrogate key ``sk``. The dummies take ``base``'s types."""
     # Literal projection over range(2), NOT createDataFrame: an
     # RDD-backed DataFrame surfaces as `Scan ExistingRDD` with UNKNOWN
     # stats (sizeInBytes ~ Long.Max), which poisons the size estimate of
@@ -218,12 +222,14 @@ def _dummy_rows(spark: SparkSession, cols: list[tuple[str, str]], not_found: lis
     # full fact-side shuffle+sort (measured r13: fact_lineitem 2 SMJ →
     # 2 BHJ, zero fact exchanges). range() carries exact row stats, so
     # the gate sees the dim's true size and decides honestly at every
-    # scale.
-    projs = [
+    # scale. The .distinct() keeps the anti join off a broadcast of the
+    # whole base: without it a dim_customer build runs 8 Spark jobs, not 5.
+    key = base.columns[0]
+    dummies = spark.range(2).select(*[
         F.when(F.col("id") == 0, F.lit(nf)).otherwise(F.lit(na)).cast(t).alias(n)
-        for (n, t), nf, na in zip(cols, not_found, not_applicable)
-    ]
-    return spark.range(2).select(*projs)
+        for (n, t), nf, na in zip(base.dtypes, not_found, not_applicable)
+    ]).join(base.select(key).distinct(), key, "left_anti")
+    return base.unionByName(dummies).withColumn(sk, surrogate_key(key))
 
 
 def dim_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -246,25 +252,11 @@ def dim_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("r_name", F.lit("Not Found")).alias("region_name"),
         )
     )
-    cols = [
-        ("customer_id", "bigint"), ("customer_name", "string"), ("mkt_segment", "string"),
-        ("acct_balance", "double"), ("nation_name", "string"), ("region_name", "string"),
-    ]
-    dummies = _dummy_rows(
-        spark, cols,
+    return _with_dummies(
+        spark, base,
         [0, "Not Found", "Not Found", 0.0, "Not Found", "Not Found"],
         [-1, "Not Applicable", "Not Applicable", 0.0, "Not Applicable", "Not Applicable"],
-    )
-    # real ids start at 0 in the testdata; shift real keys by +1 like the
-    # reference shifts none — instead keep ids verbatim and let the dummy 0
-    # coexist only when absent in the source (reference uses '0'/-1 ids that
-    # never occur in Northwind). Testdata has a real customer 0, so the
-    # Not-Found member uses -2 semantics via filtering: we only add dummies
-    # whose id is not present.
-    present = base.select("customer_id").distinct()
-    dummies = dummies.join(present, "customer_id", "left_anti")
-    return base.unionByName(dummies).withColumn(
-        "customer_sk", surrogate_key("customer_id")
+        "customer_sk",
     )
 
 
@@ -302,18 +294,12 @@ def dim_part(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_size").alias("part_size"),
         F.col("p_retailprice").alias("retail_price"),
     )
-    cols = [
-        ("part_id", "bigint"), ("part_name", "string"), ("brand", "string"),
-        ("part_type", "string"), ("part_size", "int"), ("retail_price", "double"),
-    ]
-    dummies = _dummy_rows(
-        spark, cols,
+    return _with_dummies(
+        spark, base,
         [0, "Not Found", "Not Found", "Not Found", 0, 0.0],
         [-1, "Not Applicable", "Not Applicable", "Not Applicable", -1, -1.0],
+        "part_sk",
     )
-    present = base.select("part_id").distinct()
-    dummies = dummies.join(present, "part_id", "left_anti")
-    return base.unionByName(dummies).withColumn("part_sk", surrogate_key("part_id"))
 
 
 def oracle_dim_part() -> str:
@@ -353,18 +339,12 @@ def dim_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("r_name", F.lit("Not Found")).alias("region_name"),
         )
     )
-    cols = [
-        ("supplier_id", "bigint"), ("supplier_name", "string"), ("acct_balance", "double"),
-        ("nation_name", "string"), ("region_name", "string"),
-    ]
-    dummies = _dummy_rows(
-        spark, cols,
+    return _with_dummies(
+        spark, base,
         [0, "Not Found", 0.0, "Not Found", "Not Found"],
         [-1, "Not Applicable", 0.0, "Not Applicable", "Not Applicable"],
+        "supplier_sk",
     )
-    present = base.select("supplier_id").distinct()
-    dummies = dummies.join(present, "supplier_id", "left_anti")
-    return base.unionByName(dummies).withColumn("supplier_sk", surrogate_key("supplier_id"))
 
 
 def oracle_dim_supplier() -> str:

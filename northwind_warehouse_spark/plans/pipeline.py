@@ -7,21 +7,24 @@ Flow per run (reference: models/* + macros/audit_management/*):
      writes nothing, and with schema-known loads (``catalog.read_parquet``)
      it starts no Spark job;
   2. dims: ``scd2_fold_commit`` reads the dim's high watermark from its
-     latest manifest entry, SCD2-merges the newer change rows (only
-     affected keys recomputed) and commits the new version together
-     with its new watermark (the newest change ``ts``) in one manifest
-     entry; an empty change slice commits no version;
+     latest log entry, SCD2-merges the newer change rows (only affected
+     keys recomputed) and commits the new version together with its new
+     watermark (the newest change ``ts``) in one log entry; an empty
+     change slice commits no version;
   3. facts: upsert the incoming orders by ``order_id``; they enter
      unresolved, and ONE customer lookup per batch resolves them
      together with the existing rows still on the dummy customer SK
      (reference: macros/fact_order_fail_lookup.sql); commit one version
      (partitioned by order_year for pruning).
 
-Each stage has one commit point, its manifest entry: a crash anywhere
-before it leaves the table and its watermark as they were. Idempotent:
-re-running with no new data commits no dim version and a fact version
-equal to the previous one, mirroring dbt's incremental materialization
-semantics.
+Each stage has one commit point, its log entry, created put-if-absent:
+a crash anywhere before it leaves the table and its watermark as they
+were. Both stages are ``VersionedTable.update`` steps, so a stage that
+loses its version id to a concurrent writer (the streaming SCD2 sink
+on the same dim) rebuilds on the winner's version instead of dropping
+either commit. Idempotent: re-running with no new data commits no dim
+version and a fact version equal to the previous one, mirroring dbt's
+incremental materialization semantics.
 """
 
 from __future__ import annotations
@@ -65,9 +68,9 @@ class WarehousePipeline:
         scd2_fold_commit(self._vt(self.DIM_USERS), events, medallion.users_scd2_spec())
 
     def run_fact_orders(self, orders: DataFrame, sf_dir: str) -> None:
-        vt = self._vt(self.FACT_ORDERS)
-        fact = self.refresh_failed_lookups(vt.read() if vt.versions() else None, orders, sf_dir)
-        vt.write(fact, partition_by=("order_year",))
+        self._vt(self.FACT_ORDERS).update(
+            lambda fact, _: self.refresh_failed_lookups(fact, orders, sf_dir),
+            partition_by=("order_year",))
 
     def refresh_failed_lookups(self, fact: DataFrame | None, orders: DataFrame,
                                sf_dir: str) -> DataFrame:

@@ -9,18 +9,22 @@ partition columns so downstream scans prune:
   queries touch only matching directories at 100 TB;
 - dims stay unpartitioned single-digit-GB tables that broadcast.
 
-Writers go through a staging-temp + atomic-ish rename-free overwrite
-(Spark's own committer); ``read_table_evolved`` fills columns that old
-files lack, mirroring dbt's `on_schema_change: sync_all_columns`.
+``write_table`` is a plain Spark overwrite; ``compact_table``,
+``cluster_table`` and ``forget_keys`` commit a new version of a
+``VersionedTable`` on its put-if-absent log (a race with another writer
+raises ``FileExistsError``). ``read_table_evolved`` fills columns that
+old files lack, mirroring dbt's `on_schema_change: sync_all_columns`.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
+from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from northwind_warehouse_spark.sources.versioned import VersionedTable
 
 
 def write_table(
@@ -39,54 +43,44 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def _swap_dir(path: str, tmp: str) -> None:
-    """Replace directory ``path`` with the freshly written ``tmp``: two
-    renames, then the old copy is removed."""
-    old = path.rstrip("/") + "__old"
-    shutil.move(path, old)
-    shutil.move(tmp, path)
-    shutil.rmtree(old)
+def _rewrite(vt: VersionedTable, fill) -> None:
+    """Commit the version after ``vt``'s latest, written by ``fill(path,
+    rows, entry)`` from that version; its schema and watermark carry over."""
+    entry = vt.latest()
+    df = vt.read(entry and entry["version"])  # an empty table raises here
+    wm = entry["watermark"]
+    vt.commit(entry["version"], lambda path: fill(path, df, entry), df.schema,
+              datetime.fromisoformat(wm) if wm else None)
 
 
-def compact_table(
-    spark: SparkSession,
-    path: str,
-    partition_by: tuple[str, ...] = (),
-    max_records_per_file: int = 1_000_000,
-) -> dict:
-    """Small-files compaction: rewrite a (possibly partitioned) parquet
-    table so each partition holds few right-sized files.
+def _count_files(p: str) -> int:
+    return sum(n.endswith(".parquet") for _root, _dirs, files in os.walk(p) for n in files)
+
+
+def compact_table(vt: VersionedTable, partition_by: tuple[str, ...] = (),
+                  max_records_per_file: int = 1_000_000) -> dict:
+    """Small-files compaction: rewrite the latest version of a (possibly
+    partitioned) table so each partition holds few right-sized files.
 
     Streaming ingest and fine-grained incremental merges leave lakes
     littered with KB-scale files; at 100 TB the resulting footer/open
     overhead dominates scan time. The rewrite is one shuffle
     (repartition on the partition columns so each partition is written
     by one task), bounded per-file row counts via maxRecordsPerFile, and
-    an atomic directory swap so readers never see a half-compacted
-    table. Returns before/after file counts.
-
-    (Parity note: table-format engines do this as OPTIMIZE/rewrite; this
-    is the plain-parquet-lake equivalent, reference-free.)
+    one commit of a new version, so readers never see a half-compacted
+    table (the OPTIMIZE of table formats). Returns before/after file
+    counts.
     """
-    def _count_files(p: str) -> int:
-        n = 0
-        for root, _dirs, files in os.walk(p):
-            n += sum(1 for f in files if f.endswith(".parquet"))
-        return n
+    stats = {}
 
-    before = _count_files(path)
-    df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + "__compacting"
-    writer = (
-        (df.repartition(*[F.col(c) for c in partition_by]) if partition_by else df.coalesce(1))
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", str(max_records_per_file))
-    )
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
-    _swap_dir(path, tmp)
-    return {"files_before": before, "files_after": _count_files(path)}
+    def fill(path: str, df: DataFrame, entry: dict) -> None:
+        compacted = df.repartition(*[F.col(c) for c in partition_by]) if partition_by else df.coalesce(1)
+        (compacted.write.option("maxRecordsPerFile", str(max_records_per_file))
+         .partitionBy(*partition_by).parquet(path))
+        stats.update(files_before=_count_files(entry["path"]), files_after=_count_files(path))
+
+    _rewrite(vt, fill)
+    return stats
 
 
 def read_table_evolved(spark: SparkSession, path: str, defaults: dict | None = None) -> DataFrame:
@@ -102,47 +96,42 @@ def read_table_evolved(spark: SparkSession, path: str, defaults: dict | None = N
     return df
 
 
-def forget_keys(
-    spark: SparkSession,
-    path: str,
-    key_col: str,
-    keys: list,
-    partition_col: str,
-) -> dict:
-    """Compliance delete (GDPR/right-to-be-forgotten): remove every row
-    whose ``key_col`` is in ``keys``, rewriting ONLY the partitions that
-    contain them.
+def forget_keys(vt: VersionedTable, key_col: str, keys: list, partition_col: str) -> dict:
+    """Compliance delete (GDPR/right-to-be-forgotten): commit a version
+    of the table without any row whose ``key_col`` is in ``keys``,
+    rewriting ONLY the partitions that contain them.
 
     The partition discovery is a pushdown-able filter + distinct over
     the partition column (reads just the affected column, prunes via
-    row-group stats); untouched partition directories are never opened
-    for write — on a 100 TB lake a single-user delete rewrites a few
-    files, not the table. Each rewrite lands via atomic directory swap.
-    Returns the partitions rewritten."""
-    df = spark.read.parquet(path)
-    affected = sorted(
-        r[0]
-        for r in df.filter(F.col(key_col).isin(keys)).select(partition_col).distinct().collect()
-    )
-    for v in affected:
-        part_dir = f"{path}/{partition_col}={v}"
-        kept = spark.read.parquet(part_dir).filter(~F.col(key_col).isin(keys))
-        tmp = part_dir + "__rewriting"
-        kept.write.mode("overwrite").parquet(tmp)
-        _swap_dir(part_dir, tmp)
-    return {"partitions_rewritten": len(affected), "partition_values": affected}
+    row-group stats); the new version hard-links the files of every
+    untouched partition — on a 100 TB lake a single-user delete rewrites
+    a few files, not the table. Returns the partitions rewritten (none
+    when no row matches: the version then only hard-links)."""
+    doomed, affected = F.col(key_col).isin(keys), []
+
+    def fill(path: str, df: DataFrame, entry: dict) -> None:
+        affected.extend(sorted(r[0] for r in df.filter(doomed).select(partition_col).distinct().collect()))
+        rewritten = {f"{partition_col}={v}" for v in affected}
+        if not rewritten <= set(os.listdir(entry["path"])):  # a value Spark escapes in a path
+            raise ValueError(f"partitions {sorted(rewritten)} are not all directories of {entry['path']}")
+        (df.filter(F.col(partition_col).isin(affected) & ~doomed)
+         .write.partitionBy(partition_col).parquet(path))
+        for root, _dirs, files in os.walk(entry["path"]):
+            rel = os.path.relpath(root, entry["path"])
+            if rel != "." and rel.split(os.sep)[0] not in rewritten:
+                os.makedirs(os.path.join(path, rel), exist_ok=True)
+                for f in files:
+                    os.link(os.path.join(root, f), os.path.join(path, rel, f))
+
+    _rewrite(vt, fill)
+    return {"partitions_rewritten": len(affected), "partition_values": [str(v) for v in affected]}
 
 
-def cluster_table(
-    spark: SparkSession,
-    path: str,
-    cluster_by: tuple[str, ...],
-    partition_by: tuple[str, ...] = (),
-    max_records_per_file: int = 1_000_000,
-) -> dict:
-    """Cluster-sort a parquet table on ``cluster_by`` so row-group
-    min/max statistics become selective (the plain-lake analog of
-    OPTIMIZE ... ZORDER for the single-key case).
+def cluster_table(vt: VersionedTable, cluster_by: tuple[str, ...],
+                  partition_by: tuple[str, ...] = (), max_records_per_file: int = 1_000_000) -> dict:
+    """Cluster-sort the latest version of a table on ``cluster_by`` so
+    row-group min/max statistics become selective (the plain-lake analog
+    of OPTIMIZE ... ZORDER for the single-key case).
 
     A lake table written in ingest order has every row group spanning
     the full key domain, so a point/range predicate on the key reads
@@ -151,21 +140,19 @@ def cluster_table(
     per-row-group-narrow key ranges: a key predicate then prunes to
     O(selectivity) row groups via footer stats alone — at 100 TB the
     difference between scanning a file and scanning the table. One
-    shuffle (the range exchange); atomic directory swap as in
+    shuffle (the range exchange), one commit of a new version as in
     ``compact_table``. Returns per-file key-span audit info.
     """
-    df = spark.read.parquet(path)
-    cols = [F.col(c) for c in cluster_by]
-    clustered = df.repartitionByRange(*cols).sortWithinPartitions(*cols)
-    tmp = path.rstrip("/") + "__clustering"
-    writer = clustered.write.mode("overwrite").option(
-        "maxRecordsPerFile", str(max_records_per_file)
-    )
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
-    _swap_dir(path, tmp)
-    return file_key_spans(path, cluster_by[0])
+    cols, audit = [F.col(c) for c in cluster_by], {}
+
+    def fill(path: str, df: DataFrame, entry: dict) -> None:
+        (df.repartitionByRange(*cols).sortWithinPartitions(*cols)
+         .write.option("maxRecordsPerFile", str(max_records_per_file))
+         .partitionBy(*partition_by).parquet(path))
+        audit.update(file_key_spans(path, cluster_by[0]))
+
+    _rewrite(vt, fill)
+    return audit
 
 
 def file_key_spans(path: str, key: str) -> dict:
@@ -176,19 +163,11 @@ def file_key_spans(path: str, key: str) -> dict:
 
     spans = {}
     for root, _dirs, files in os.walk(path):
-        for fname in files:
-            if not fname.endswith(".parquet"):
-                continue
-            fpath = os.path.join(root, fname)
-            meta = pq.ParquetFile(fpath).metadata
-            lo, hi = None, None
-            for rg in range(meta.num_row_groups):
-                rgm = meta.row_group(rg)
-                for ci in range(rgm.num_columns):
-                    col = rgm.column(ci)
-                    if col.path_in_schema == key and col.statistics is not None:
-                        s = col.statistics
-                        lo = s.min if lo is None else min(lo, s.min)
-                        hi = s.max if hi is None else max(hi, s.max)
-            spans[os.path.relpath(fpath, path)] = (lo, hi)
+        for fpath in (os.path.join(root, f) for f in files if f.endswith(".parquet")):
+            meta = pq.read_metadata(fpath)
+            stats = [c.statistics for rg in map(meta.row_group, range(meta.num_row_groups))
+                     for c in map(rg.column, range(rg.num_columns))
+                     if c.path_in_schema == key and c.statistics is not None]
+            spans[os.path.relpath(fpath, path)] = (
+                min((s.min for s in stats), default=None), max((s.max for s in stats), default=None))
     return {"files": len(spans), "spans": spans}

@@ -2,40 +2,44 @@
 
 The reference's intermediate models query Snowflake time travel
 (``AT (TIMESTAMP => ...)``, reference: models/intermediate/
-stg_dim_customer.sql:72) to reprocess historical states. The lake-native
-equivalent: every write creates an immutable version directory plus a
-manifest entry; reads resolve a version id or an as-of timestamp to its
-directory. This also gives training jobs snapshot isolation — a run
-pinned to version N sees identical bytes forever, regardless of later
-writes.
+stg_dim_customer.sql:72) to reprocess historical states. Here every
+write commits an immutable version; reads resolve a version id or an
+as-of timestamp to it, so a run pinned to version N sees identical bytes
+forever, regardless of later writes.
 
 Layout:
-    <root>/<table>/_manifest.json   # [{version, committed_at, path, watermark, schema}]
-    <root>/<table>/v=<n>/ ... parquet ...
+    <root>/<table>/_log/<n>.json          # {version, committed_at, path, watermark, schema}
+    <root>/<table>/v=<n>/<writer>/ ... parquet ...
 
-A manifest entry is the only commit point of a version: its data
-directory and its source ``watermark`` (the newest source timestamp the
-version has absorbed, naive UTC ISO, or null) land in the same atomic
-``os.replace`` of the manifest — the ``txn`` action of Delta Lake's log.
-``schema`` is the written DataFrame's schema as Spark's JSON; reads pass
-it to Spark, so a version read starts no schema-inference job, as a
-Delta reader takes the schema from the log. An entry without it (written
-before the field existed) reads by inference.
-
-Write amplification is per-version (full snapshots, like the reference's
-materialized tables) — incremental formats (Delta/Iceberg) swap in
-cleanly, the read API is unchanged.
+Version ``n`` commits by creating ``_log/<n>.json`` put-if-absent, as
+Delta Lake names each log record by its version: the writer fills a data
+directory of its own under ``v=<n>/``, writes the entry there and
+hard-links it into the log. ``os.link`` fails when the name exists, so
+one writer wins each ``n``; a loser removes its directory, and
+``update`` rebuilds on the winner's version. The entry is the only
+commit point: the data and its source ``watermark`` (the newest source
+timestamp absorbed, naive UTC ISO, or null) land together or not at
+all. Reads pass Spark the entry's ``schema``, so they infer nothing.
+Versions are full snapshots, like the reference's materialized tables.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
+import time
+import uuid
+from contextlib import suppress
 from datetime import datetime, timezone
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+# vacuum spares an unreferenced data directory younger than this: a writer may be filling it
+ORPHAN_AGE_S = 3600.0
 
 
 def _aware_utc(ts: datetime) -> datetime:
@@ -52,113 +56,130 @@ class VersionedTable:
     def __init__(self, spark: SparkSession, root: str, table: str):
         self.spark = spark
         self.dir = os.path.join(root, table)
-        self.manifest_path = os.path.join(self.dir, "_manifest.json")
+        self.log = os.path.join(self.dir, "_log")
 
-    # -- manifest ----------------------------------------------------------
+    # -- log ---------------------------------------------------------------
 
-    def _manifest(self) -> list[dict]:
-        if not os.path.exists(self.manifest_path):
-            return []
-        with open(self.manifest_path) as f:
+    def _ids(self) -> list[int]:
+        return sorted(int(os.path.basename(p)[:-5]) for p in glob.glob(os.path.join(self.log, "*.json")))
+
+    def _entry(self, version: int) -> dict:
+        with open(os.path.join(self.log, f"{version}.json")) as f:
             return json.load(f)
 
     def versions(self) -> list[dict]:
-        return self._manifest()
+        return [self._entry(v) for v in self._ids()]
 
-    def _commit_manifest(self, manifest: list[dict]) -> None:
-        """Atomically replace the manifest: tmp file, then ``os.replace``."""
-        tmp = self.manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=2)
-        os.replace(tmp, self.manifest_path)
+    def latest(self) -> dict | None:
+        ids = self._ids()
+        return self._entry(ids[-1]) if ids else None
 
     # -- write -------------------------------------------------------------
 
-    def write(
-        self,
-        df: DataFrame,
-        committed_at: datetime | None = None,
-        partition_by: tuple[str, ...] = (),
-        watermark: datetime | None = None,
-    ) -> int:
-        """Commit a new immutable version, with the source ``watermark``
-        it has absorbed; returns its id."""
-        manifest = self._manifest()
-        version = (manifest[-1]["version"] + 1) if manifest else 0
-        path = os.path.join(self.dir, f"v={version}")
-        # no entry references v=<version>: it can only be left by a commit
-        # that crashed before its manifest swap
-        shutil.rmtree(path, ignore_errors=True)
-        writer = df.write.mode("errorifexists")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
-        manifest.append({
-            "version": version,
-            "committed_at": _aware_utc(committed_at or datetime.now(timezone.utc)).isoformat(),
-            "path": path,
-            "watermark": naive_utc(watermark).isoformat() if watermark else None,
-            "schema": df.schema.jsonValue(),
-        })
-        os.makedirs(self.dir, exist_ok=True)
-        self._commit_manifest(manifest)
+    def commit(self, base: int, fill: Callable[[str], None], schema: StructType,
+               watermark: datetime | None = None, committed_at: datetime | None = None) -> int:
+        """Commit version ``base + 1``, its data written by ``fill(path)`` to
+        a directory of this writer's own. If another writer holds that version
+        or ``vacuum`` dropped ``base``, removes it and raises FileExistsError."""
+        version = base + 1
+        path = os.path.join(self.dir, f"v={version}", uuid.uuid4().hex)
+        fill(path)
+        staged = os.path.join(path, "_entry.json")  # Spark skips "_" names
+        with open(staged, "w") as f:
+            json.dump({"version": version, "path": path, "schema": schema.jsonValue(),
+                       "committed_at": _aware_utc(committed_at or datetime.now(timezone.utc)).isoformat(),
+                       "watermark": naive_utc(watermark).isoformat() if watermark else None}, f)
+        os.makedirs(self.log, exist_ok=True)
+        try:
+            if base >= 0 and not os.path.exists(os.path.join(self.log, f"{base}.json")):
+                raise FileExistsError(f"{self.dir}: version {base} and so {version} were vacuumed")
+            os.link(staged, os.path.join(self.log, f"{version}.json"))
+        except FileExistsError:
+            shutil.rmtree(path)
+            raise
+        os.unlink(staged)
         return version
+
+    def write(self, df: DataFrame, committed_at: datetime | None = None,
+              partition_by: tuple[str, ...] = (), watermark: datetime | None = None,
+              base: int | None = None) -> int:
+        """Commit ``df`` as a new immutable version, with the source
+        ``watermark`` it has absorbed; returns its id. ``base`` is the
+        version ``df`` was built from (-1: none); if another writer has
+        committed after it, raises ``FileExistsError``. Without ``base``,
+        ``df`` follows whichever version is latest."""
+        def fill(path: str) -> None:
+            df.write.mode("errorifexists").partitionBy(*partition_by).parquet(path)
+
+        while True:
+            try:
+                return self.commit((self._ids() or [-1])[-1] if base is None else base,
+                                   fill, df.schema, watermark, committed_at)
+            except FileExistsError:
+                if base is not None:
+                    raise
+
+    def update(self, build: Callable[[DataFrame | None, dict | None], DataFrame | None],
+               partition_by: tuple[str, ...] = (), watermark: datetime | None = None) -> int | None:
+        """Read-modify-commit: ``build(latest, entry)`` maps the latest
+        version and its entry (None, None for an empty table) to the next
+        version, or to None to commit nothing. Returns the committed id.
+        A writer that loses the id rebuilds on the winner's version."""
+        while True:
+            entry = self.latest()
+            df = build(self._read(entry) if entry else None, entry)
+            if df is None:
+                return None
+            with suppress(FileExistsError):
+                return self.write(df, partition_by=partition_by, watermark=watermark,
+                                  base=entry["version"] if entry else -1)
 
     # -- read --------------------------------------------------------------
 
     def read(self, version: int | None = None) -> DataFrame:
         """Latest version, or a pinned version id."""
-        manifest = self._manifest()
-        if not manifest:
+        ids = self._ids()
+        if not ids:
             raise FileNotFoundError(f"no versions in {self.dir}")
-        if version is None:
-            entry = manifest[-1]
-        else:
-            matches = [m for m in manifest if m["version"] == version]
-            if not matches:
-                raise KeyError(f"version {version} not found in {self.dir}")
-            entry = matches[0]
-        return self._read(entry)
+        if version is not None and version not in ids:
+            raise KeyError(f"version {version} not found in {self.dir}")
+        return self._read(self._entry(ids[-1] if version is None else version))
 
     def _read(self, entry: dict) -> DataFrame:
-        reader = self.spark.read
-        if "schema" in entry:
-            reader = reader.schema(StructType.fromJson(entry["schema"]))
-        return reader.parquet(entry["path"])
+        return self.spark.read.schema(StructType.fromJson(entry["schema"])).parquet(entry["path"])
 
     def vacuum(self, keep_last: int = 1, older_than: datetime | None = None) -> list[int]:
-        """Retention cleanup: drop version directories beyond the newest
+        """Retention cleanup: drop the versions beyond the newest
         ``keep_last`` (and, if ``older_than`` is given, only those also
         committed strictly before it). The latest version is never
-        deleted. Returns the dropped version ids.
+        dropped. Returns the dropped version ids.
 
-        Mirrors Delta/Iceberg VACUUM / expire_snapshots: storage for a
-        full-snapshot versioned table grows linearly with commits, so at
-        warehouse scale retention is not optional. The manifest is
-        rewritten atomically BEFORE directories are removed — a crash
-        between the two leaves unreferenced files (harmless, re-vacuumable),
-        never a manifest pointing at deleted data."""
-        manifest = self._manifest()
-        keep_last = max(1, keep_last)
-        cutoff = manifest[:-keep_last] if keep_last < len(manifest) else []
-        if older_than is not None:
-            cutoff = [m for m in cutoff
-                      if datetime.fromisoformat(m["committed_at"]) < _aware_utc(older_than)]
-        if not cutoff:
-            return []
-        dropped = {m["version"] for m in cutoff}
-        self._commit_manifest([m for m in manifest if m["version"] not in dropped])
-        for m in cutoff:
+        Mirrors Delta/Iceberg VACUUM / expire_snapshots. Each entry goes
+        BEFORE its data, so a crash leaves unreferenced files, never an
+        entry pointing at deleted data. Data directories no entry
+        references (a crashed or losing writer's) go once they are
+        ``ORPHAN_AGE_S`` old."""
+        versions = self.versions()
+        dropped = [m for m in versions[:-max(1, keep_last)] if older_than is None
+                   or datetime.fromisoformat(m["committed_at"]) < _aware_utc(older_than)]
+        for m in dropped:
+            os.unlink(os.path.join(self.log, f"{m['version']}.json"))
             shutil.rmtree(m["path"], ignore_errors=True)
-        return sorted(dropped)
+        # writer directories are uuid-named: the name alone identifies one
+        live = {os.path.basename(m["path"]) for m in versions if m not in dropped}
+        for d in glob.glob(os.path.join(self.dir, "v=*", "*")):
+            if os.path.basename(d) not in live and os.path.getmtime(d) < time.time() - ORPHAN_AGE_S:
+                shutil.rmtree(d, ignore_errors=True)
+        for d in glob.glob(os.path.join(self.dir, "v=*")):
+            with suppress(OSError):  # only an empty one goes
+                os.rmdir(d)
+        return [m["version"] for m in dropped]
 
     def read_asof(self, ts: datetime) -> DataFrame:
         """The newest version committed at or before ``ts`` — the
         ``AT (TIMESTAMP => ...)`` semantics of the reference."""
-        eligible = [
-            m for m in self._manifest()
-            if datetime.fromisoformat(m["committed_at"]) <= _aware_utc(ts)
-        ]
+        eligible = [m for m in self.versions()
+                    if datetime.fromisoformat(m["committed_at"]) <= _aware_utc(ts)]
         if not eligible:
             raise KeyError(f"no version of {self.dir} existed at {ts.isoformat()}")
         return self._read(eligible[-1])

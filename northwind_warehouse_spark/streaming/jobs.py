@@ -190,6 +190,8 @@ def scd2_streaming_merge(
     committed watermark and commits an immutable version together with
     the batch's newest ``ts`` as the new watermark, so the history of
     states is time-travelable and a replayed batch folds nothing twice.
+    A batch pipeline run may fold the same dim at the same time: the
+    fold that loses a version id re-folds on the winner's version.
 
     Invariant (tested): streaming the events in arbitrary micro-batches
     produces the same dimension as one batch build over all events.
@@ -382,14 +384,12 @@ def kmv_distinct_stream(
     from northwind_warehouse_spark.sources.versioned import VersionedTable
 
     def fold(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        vt = VersionedTable(spark, lake_dir, table)
         if batch.isEmpty():
             return
         hashes = sketch.kmv_hashes(batch, "user_id", ["event_type"])
-        if vt.versions():
-            hashes = vt.read().unionByName(hashes)
-        vt.write(sketch.kmv_bottom_k(hashes, ["event_type"], k=k))
+        VersionedTable(batch.sparkSession, lake_dir, table).update(
+            lambda state, _: sketch.kmv_bottom_k(
+                hashes if state is None else state.unionByName(hashes), ["event_type"], k=k))
 
     q = (
         events.writeStream.foreachBatch(fold)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from datetime import datetime
+
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -76,8 +78,6 @@ def test_pipeline_runs_and_is_idempotent(spark, tmp_path):
     """Two runs over the same input commit one fact version each and
     change nothing. sf0.001 has a real customer 0, whose SK equals the
     dummy SK: its orders re-resolve to identical rows, not a repair."""
-    from datetime import datetime
-
     from northwind_warehouse_spark.plans.pipeline import WarehousePipeline
 
     p = WarehousePipeline(spark, str(tmp_path / "lake"))
@@ -117,19 +117,14 @@ def test_pipeline_runs_and_is_idempotent(spark, tmp_path):
     assert _fact_rows(p.table(p.FACT_ORDERS, version=versions[0]["version"])) == fact1
 
 
-def test_crash_between_steps_commits_nothing(spark, tmp_path, monkeypatch):
-    """A run that dies at the dim's manifest swap leaves the dim's latest
-    entry and its watermark as they were; the re-run then builds the
-    same dim as a run that never crashed."""
+def _half_events_dir(tmp_path):
+    """An sf dir with the first half of the events, beside the other
+    tables unchanged."""
     import os
 
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
-    import pytest
 
-    from northwind_warehouse_spark.plans.pipeline import WarehousePipeline
-
-    # the first half of the events, beside the other tables unchanged
     half = tmp_path / "half"
     half.mkdir()
     for f in os.listdir(SF_SMOKE):
@@ -138,22 +133,35 @@ def test_crash_between_steps_commits_nothing(spark, tmp_path, monkeypatch):
     ev = pq.read_table(os.path.join(SF_SMOKE, "events.parquet"))
     pq.write_table(ev.filter(pc.less_equal(ev["ts"], pc.max(ev["ts"].slice(0, len(ev) // 2)))),
                    half / "events.parquet")
+    return str(half)
 
+
+def test_crash_between_steps_commits_nothing(spark, tmp_path, monkeypatch):
+    """A run that dies at the link of the dim's log entry leaves the dim's
+    latest entry and its watermark as they were; the re-run then builds
+    the same dim as a run that never crashed."""
+    import os
+
+    import pytest
+
+    from northwind_warehouse_spark.plans.pipeline import WarehousePipeline
+
+    half = _half_events_dir(tmp_path)
     p = WarehousePipeline(spark, str(tmp_path / "lake"))
-    p.run(str(half))
+    p.run(half)
     dim_vt = p._vt(p.DIM_USERS)
     entry0, hwm0 = dim_vt.versions()[-1], p.audit.get(p.DIM_USERS).hwm_date
-    assert hwm0 == _max_event_ts(spark, str(half)) < _max_event_ts(spark, SF_SMOKE)
+    assert hwm0 == _max_event_ts(spark, half) < _max_event_ts(spark, SF_SMOKE)
 
-    real_replace = os.replace
+    real_link = os.link
 
-    def crash_on_dim_swap(src, dst):
-        if dst == dim_vt.manifest_path:
-            raise OSError("crash at the dim's manifest swap")
-        real_replace(src, dst)
+    def crash_on_dim_commit(src, dst):
+        if dst.startswith(dim_vt.log):
+            raise OSError("crash at the dim's log link")
+        real_link(src, dst)
 
     with monkeypatch.context() as m:
-        m.setattr(os, "replace", crash_on_dim_swap)
+        m.setattr(os, "link", crash_on_dim_commit)
         with pytest.raises(OSError):
             p.run(SF_SMOKE)
     assert dim_vt.versions()[-1] == entry0
@@ -161,10 +169,72 @@ def test_crash_between_steps_commits_nothing(spark, tmp_path, monkeypatch):
 
     p.run(SF_SMOKE)
     clean = WarehousePipeline(spark, str(tmp_path / "clean"))
-    clean.run(str(half))
+    clean.run(half)
     clean.run(SF_SMOKE)
     assert _dim_rows(p.table(p.DIM_USERS)) == _dim_rows(clean.table(clean.DIM_USERS))
     assert p.audit.get(p.DIM_USERS).hwm_date == _max_event_ts(spark, SF_SMOKE)
+
+
+def test_fold_that_loses_its_version_refolds_on_the_winner(spark, tmp_path, monkeypatch):
+    """Another writer commits the events up to a split while a fold of the
+    later events is being built on the empty table: the fold loses
+    version 0, re-folds on the winner's dim as version 1, and the dim
+    equals one build over all the events."""
+    from northwind_warehouse_spark.catalog import load
+    from northwind_warehouse_spark.operators.incremental import scd2_fold_commit
+    from northwind_warehouse_spark.plans.medallion import scd2_users, users_scd2_spec
+    from northwind_warehouse_spark.sources.versioned import VersionedTable
+
+    lake = str(tmp_path / "lake")
+    events = load(spark, SF_SMOKE, "events")
+    real_write = VersionedTable.write
+
+    def racing_write(self, df, **kwargs):
+        monkeypatch.setattr(VersionedTable, "write", real_write)
+        assert scd2_fold_commit(VersionedTable(spark, lake, "dim"),
+                                events.filter(F.col("ts") <= SPLIT_TS), users_scd2_spec()) == 0
+        return real_write(self, df, **kwargs)
+
+    monkeypatch.setattr(VersionedTable, "write", racing_write)
+    vt = VersionedTable(spark, lake, "dim")
+    assert scd2_fold_commit(vt, events.filter(F.col("ts") > SPLIT_TS), users_scd2_spec()) == 1
+    assert [v["version"] for v in vt.versions()] == [0, 1]
+    assert _dim_rows(vt.read()) == _dim_rows(scd2_users(spark, SF_SMOKE))
+    assert datetime.fromisoformat(vt.versions()[-1]["watermark"]) == _max_event_ts(spark, SF_SMOKE)
+
+
+def test_batch_run_racing_streaming_sink_equals_serial_run(spark, tmp_path):
+    """A pipeline run and the streaming SCD2 sink fold the same events
+    into the same dim at once; the lake ends as a serial run leaves it,
+    with neither writer raising."""
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from northwind_warehouse_spark.catalog import load
+    from northwind_warehouse_spark.plans.pipeline import WarehousePipeline
+    from northwind_warehouse_spark.streaming.jobs import scd2_streaming_merge
+
+    e = load(spark, SF_SMOKE, "events")
+    src = str(tmp_path / "src")
+    bounds = [None, "2024-01-08", "2024-01-16", "2024-01-24", None]
+    for lo, hi in zip(bounds, bounds[1:]):
+        part = e.filter(F.col("ts") >= lo) if lo else e
+        part.filter(F.col("ts") < hi if hi else F.lit(True)).coalesce(1).write.mode("append").parquet(src)
+        time.sleep(1.1)  # distinct mod-times: the file source keeps the time order
+    stream = spark.readStream.schema(e.schema).option("maxFilesPerTrigger", 1).parquet(src)
+
+    lake = str(tmp_path / "lake")
+    p = WarehousePipeline(spark, lake)
+    with ThreadPoolExecutor(1) as pool:
+        sink = pool.submit(scd2_streaming_merge, stream, lake, p.DIM_USERS, str(tmp_path / "ckpt"))
+        p.run(SF_SMOKE)
+        sink.result(timeout=600)
+
+    serial = WarehousePipeline(spark, str(tmp_path / "serial"))
+    serial.run(SF_SMOKE)
+    assert _dim_rows(p.table(p.DIM_USERS)) == _dim_rows(serial.table(serial.DIM_USERS))
+    assert _fact_rows(p.table(p.FACT_ORDERS)) == _fact_rows(serial.table(serial.FACT_ORDERS))
+    assert p.audit.get(p.DIM_USERS).hwm_date == serial.audit.get(serial.DIM_USERS).hwm_date
 
 
 def test_late_arriving_customers_are_repaired(spark, tmp_path):

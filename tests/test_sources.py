@@ -30,27 +30,32 @@ def test_write_partitioned_prunes(spark, tmp_path):
 
 
 def test_compact_table_reduces_files_preserves_data(spark, tmp_path):
+    """Compaction commits a version with fewer files, the same rows, the
+    same partition layout and the compacted version's watermark."""
+    import os
+
     from northwind_warehouse_spark.catalog import load
     from northwind_warehouse_spark.sources.lake import compact_table
-    from tests.conftest import SF_SMOKE
+    from northwind_warehouse_spark.sources.versioned import VersionedTable
 
-    path = str(tmp_path / "frag_events")
+    vt = VersionedTable(spark, str(tmp_path), "frag_events")
     e = load(spark, SF_SMOKE, "events").withColumn("event_date", F.col("ts").cast("date"))
     # simulate streaming ingest fragmentation: many tiny files per partition
-    e.repartition(40).write.partitionBy("event_date").parquet(path)
-    before = spark.read.parquet(path)
+    vt.write(e.repartition(40), partition_by=("event_date",), watermark=datetime(2024, 2, 1))
+    before = vt.read()
     n_rows = before.count()
     checksum = before.agg(F.sum(F.crc32(F.col("event_id").cast("string")))).collect()[0][0]
 
-    stats = compact_table(spark, path, partition_by=("event_date",))
+    stats = compact_table(vt, partition_by=("event_date",))
     assert stats["files_after"] < stats["files_before"]
 
-    after = spark.read.parquet(path)
+    after = vt.read()
+    assert [v["version"] for v in vt.versions()] == [0, 1]
     assert after.count() == n_rows
     assert after.agg(F.sum(F.crc32(F.col("event_id").cast("string")))).collect()[0][0] == checksum
+    assert vt.latest()["watermark"] == "2024-02-01T00:00:00"
     # partition layout intact → pruning still applies
-    import os
-    assert any(d.startswith("event_date=") for d in os.listdir(path))
+    assert any(d.startswith("event_date=") for d in os.listdir(vt.latest()["path"]))
 
 
 def test_read_table_evolved_fills_defaults(spark, tmp_path):
@@ -86,17 +91,18 @@ def test_processing_date_range_macro_parity(spark, tmp_path):
 
 
 def test_forget_keys_rewrites_only_affected_partitions(spark, tmp_path):
-    """GDPR delete: target user vanishes, untouched partitions' files are
-    byte-identical (never rewritten), total counts reconcile."""
+    """GDPR delete: the target user vanishes from the new version, the
+    files of untouched partitions are hard links of the old version's
+    (never rewritten), and the counts reconcile."""
     import os
 
     from northwind_warehouse_spark.catalog import load
     from northwind_warehouse_spark.sources.lake import forget_keys
-    from tests.conftest import SF_SMOKE
+    from northwind_warehouse_spark.sources.versioned import VersionedTable
 
-    path = str(tmp_path / "events_lake")
+    vt = VersionedTable(spark, str(tmp_path), "events_lake")
     e = load(spark, SF_SMOKE, "events").withColumn("event_date", F.col("ts").cast("date"))
-    e.write.partitionBy("event_date").parquet(path)
+    vt.write(e, partition_by=("event_date",))
 
     victim = e.select("user_id").first().user_id
     victim_days = {
@@ -105,26 +111,43 @@ def test_forget_keys_rewrites_only_affected_partitions(spark, tmp_path):
     n_total = e.count()
     n_victim = e.filter(F.col("user_id") == victim).count()
 
-    def file_state(skip_days):
-        out = {}
+    def file_state():
+        path, out = vt.latest()["path"], {}
         for root, _dirs, files in os.walk(path):
             day = os.path.basename(root).removeprefix("event_date=")
-            if day in skip_days:
+            if day in victim_days:
                 continue
             for f in files:
                 if f.endswith(".parquet"):
-                    p = os.path.join(root, f)
-                    out[p] = os.path.getmtime(p)
+                    out[os.path.relpath(os.path.join(root, f), path)] = os.stat(os.path.join(root, f)).st_ino
         return out
 
-    before = file_state(victim_days)
-    stats = forget_keys(spark, path, "user_id", [victim], "event_date")
-    assert set(stats["partition_values"]) == {str(d) for d in victim_days} or stats["partitions_rewritten"] == len(victim_days)
+    before = file_state()
+    stats = forget_keys(vt, "user_id", [victim], "event_date")
+    assert set(stats["partition_values"]) == victim_days
+    assert stats["partitions_rewritten"] == len(victim_days)
 
-    after = spark.read.parquet(path)
+    after = vt.read()
     assert after.filter(F.col("user_id") == victim).count() == 0
     assert after.count() == n_total - n_victim
-    assert file_state(victim_days) == before  # untouched partitions untouched
+    assert vt.read(version=0).count() == n_total  # the old version is intact
+    assert file_state() == before  # untouched partitions: the same files
+
+
+def test_forget_keys_refuses_partition_values_spark_escapes(spark, tmp_path):
+    """A partition value that Spark escapes in its directory name cannot
+    be matched to that directory: forget_keys raises and commits nothing
+    instead of hard-linking the forgotten rows into the new version."""
+    import pytest
+
+    from northwind_warehouse_spark.sources.lake import forget_keys
+    from northwind_warehouse_spark.sources.versioned import VersionedTable
+
+    vt = VersionedTable(spark, str(tmp_path), "t")
+    vt.write(spark.createDataFrame([(1, "a:b"), (2, "c")], "k long, p string"), partition_by=("p",))
+    with pytest.raises(ValueError, match="not all directories"):
+        forget_keys(vt, "k", [1], "p")
+    assert [v["version"] for v in vt.versions()] == [0]
 
 
 def test_cluster_table_disjoint_file_key_ranges(spark, tmp_path):
@@ -132,20 +155,21 @@ def test_cluster_table_disjoint_file_key_ranges(spark, tmp_path):
     spans (footer stats only) while preserving the data — the property
     that makes row-group pruning effective at scale."""
     from northwind_warehouse_spark.sources.lake import cluster_table, file_key_spans
+    from northwind_warehouse_spark.sources.versioned import VersionedTable
 
-    path = str(tmp_path / "tbl")
+    vt = VersionedTable(spark, str(tmp_path), "tbl")
     df = spark.range(0, 10_000).select(
         (F.col("id") * 7919 % 10_000).alias("k"),  # ingest order != key order
         F.col("id").alias("payload"),
     )
-    df.repartition(8).write.parquet(path)
+    vt.write(df.repartition(8))
 
-    before = file_key_spans(path, "k")
+    before = file_key_spans(vt.latest()["path"], "k")
     # unclustered: every file spans ~the full key domain
     assert all(hi - lo > 9_000 for lo, hi in before["spans"].values())
 
-    expected = sorted(r["payload"] for r in spark.read.parquet(path).collect())
-    audit = cluster_table(spark, path, cluster_by=("k",), max_records_per_file=2_000)
+    expected = sorted(r["payload"] for r in vt.read().collect())
+    audit = cluster_table(vt, cluster_by=("k",), max_records_per_file=2_000)
 
     spans = sorted(audit["spans"].values())
     assert audit["files"] >= 4
@@ -154,8 +178,9 @@ def test_cluster_table_disjoint_file_key_ranges(spark, tmp_path):
     # …and pairwise disjoint (globally range-partitioned)
     for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
         assert hi1 <= lo2
-    # data preserved
-    got = sorted(r["payload"] for r in spark.read.parquet(path).collect())
+    # data preserved, in the version the audit describes
+    assert audit == file_key_spans(vt.latest()["path"], "k")
+    got = sorted(r["payload"] for r in vt.read().collect())
     assert got == expected
 
 

@@ -85,38 +85,10 @@ def test_vacuum_retention(spark, tmp_path):
     assert [m["version"] for m in t.versions()] == [3]
 
 
-def test_entry_without_schema_reads_by_inference(spark, tmp_path):
-    """A manifest entry in the format that predates the ``schema`` field
-    still reads, latest, pinned and as-of, by schema inference."""
-    import json
-
-    from northwind_warehouse_spark.sources.versioned import VersionedTable
-
-    t = VersionedTable(spark, str(tmp_path), "t")
-    df = spark.range(4).select("id", (F.col("id") % 2).cast("int").alias("part"))
-    t.write(df, committed_at=_utc(2024, 1, 1), partition_by=("part",))
-    t.write(df.filter("id < 3"), committed_at=_utc(2024, 2, 1), partition_by=("part",))
-    schema = t.read().schema
-    with open(t.manifest_path) as f:
-        manifest = json.load(f)
-    for entry in manifest:
-        del entry["schema"]
-    with open(t.manifest_path, "w") as f:
-        json.dump(manifest, f)
-
-    def rows(d):
-        return sorted(tuple(r) for r in d.collect())
-
-    assert t.read().schema == schema
-    assert rows(t.read()) == [(0, 0), (1, 1), (2, 0)]
-    assert rows(t.read(version=0)) == rows(t.read_asof(_utc(2024, 1, 15))) == [
-        (0, 0), (1, 1), (2, 0), (3, 1)]
-
-
 def test_crashed_commit_does_not_wedge_the_table(spark, tmp_path, monkeypatch):
-    """A commit that dies after writing its ``v=<n>`` directory but before
-    the manifest swap leaves that directory unreferenced. The next write
-    must reuse the id and commit, not fail on the leftover forever."""
+    """A commit that dies at the log link, after writing its data, leaves
+    that data unreferenced and the table as it was. The next write takes
+    the same id and commits, and so does every write after it."""
     import os
 
     from northwind_warehouse_spark.sources.versioned import VersionedTable
@@ -125,13 +97,13 @@ def test_crashed_commit_does_not_wedge_the_table(spark, tmp_path, monkeypatch):
     assert t.write(spark.range(3), watermark=datetime(2024, 1, 1)) == 0
 
     def crash(*args, **kwargs):
-        raise OSError("crash before the manifest swap")
+        raise OSError("crash at the log link")
 
     with monkeypatch.context() as m:
-        m.setattr(os, "replace", crash)
+        m.setattr(os, "link", crash)
         with pytest.raises(OSError):
             t.write(spark.range(5), watermark=datetime(2024, 1, 2))
-    assert os.path.isdir(os.path.join(str(tmp_path), "t", "v=1"))
+    assert len(os.listdir(os.path.join(str(tmp_path), "t", "v=1"))) == 1
     assert [(v["version"], v["watermark"]) for v in t.versions()] == [(0, "2024-01-01T00:00:00")]
     assert t.read().count() == 3
 
@@ -139,3 +111,180 @@ def test_crashed_commit_does_not_wedge_the_table(spark, tmp_path, monkeypatch):
         v = t.write(spark.range(n), watermark=datetime(2024, 1, 3))
         assert t.read().count() == n and t.versions()[-1]["version"] == v
     assert [v["version"] for v in t.versions()] == [0, 1, 2]
+
+
+def test_vacuum_removes_unreferenced_data_once_old(spark, tmp_path, monkeypatch):
+    """A crashed writer's data directory stays while it is younger than
+    ``ORPHAN_AGE_S``, since a live writer may still be filling it, and
+    goes once it is older; committed data stays however old it is."""
+    import glob
+    import os
+    import time
+
+    from northwind_warehouse_spark.sources import versioned
+
+    t = versioned.VersionedTable(spark, str(tmp_path), "t")
+    t.write(spark.range(3))
+    with monkeypatch.context() as m:
+        m.setattr(os, "link", lambda *a: (_ for _ in ()).throw(OSError("crash")))
+        with pytest.raises(OSError):
+            t.write(spark.range(5))
+    [orphan] = glob.glob(str(tmp_path / "t" / "v=1" / "*"))
+    assert t.vacuum() == [] and os.path.isdir(orphan)
+
+    old = time.time() - versioned.ORPHAN_AGE_S - 1
+    for d in (orphan, t.latest()["path"]):
+        os.utime(d, (old, old))
+    assert t.vacuum() == []
+    assert not os.path.exists(os.path.dirname(orphan))
+    assert t.read().count() == 3
+
+
+def test_writer_whose_base_was_vacuumed_rebuilds_on_the_latest(spark, tmp_path):
+    """While a read-modify-write builds on version 0, two writers commit
+    versions 1 and 2 and a vacuum drops 0 and 1. The builder must not
+    re-create the dropped id 1 below the latest, which would lose its
+    commit: it rebuilds on version 2 and commits 3."""
+    from northwind_warehouse_spark.sources.versioned import VersionedTable
+
+    t = VersionedTable(spark, str(tmp_path), "t")
+    t.write(spark.range(1))
+    bases = []
+
+    def build(prev, entry):
+        bases.append(entry["version"])
+        if len(bases) == 1:
+            t.write(spark.range(2))
+            t.write(spark.range(3))
+            t.vacuum(keep_last=1)
+        return spark.range(100, 101)
+
+    assert t.update(build) == 3
+    assert bases == [0, 2] and [v["version"] for v in t.versions()] == [2, 3]
+
+
+def _crash_at_step(monkeypatch, root, k):
+    """Make the ``k``-th filesystem step under ``root`` raise: a Spark data
+    write, an entry write, a directory creation, a link, an unlink, a
+    directory removal. Returns the list the steps taken are named in."""
+    import builtins
+    import json
+    import os
+    import shutil
+
+    from pyspark.sql import DataFrameWriter
+
+    steps = []
+
+    def crashing(owner, name):
+        real = getattr(owner, name)
+
+        def step(*args, **kwargs):
+            if any(str(getattr(a, "name", a)).startswith(root) for a in args):
+                steps.append(name)
+                if len(steps) == k:
+                    raise OSError(f"crash at step {k}: {name}")
+            return real(*args, **kwargs)
+        monkeypatch.setattr(owner, name, step)
+
+    for owner, name in ((DataFrameWriter, "parquet"), (json, "dump"), (os, "makedirs"),
+                        (os, "link"), (os, "unlink"), (os, "rmdir"), (shutil, "rmtree"),
+                        (builtins, "open")):
+        crashing(owner, name)
+    return steps
+
+
+def _state(t):
+    return ([v["version"] for v in t.versions()],
+            sorted(r.id for r in t.read().collect()) if t.versions() else None)
+
+
+@pytest.mark.parametrize("op", ["first write", "write", "vacuum"])
+def test_crash_at_each_step_leaves_state_before_or_after(spark, tmp_path, monkeypatch, op):
+    """A crash at any filesystem step of a write or a vacuum leaves every
+    listed version readable, and the table equal to its state before or
+    after the operation; the operation then runs to completion."""
+    from northwind_warehouse_spark.sources.versioned import VersionedTable
+
+    def setup(root):
+        t = VersionedTable(spark, root, "t")
+        for n in range({"first write": 0, "write": 2, "vacuum": 2}[op]):
+            t.write(spark.range(n + 1))
+        return t
+
+    def run(t):
+        if op == "vacuum":
+            t.vacuum(keep_last=1)
+        else:
+            t.write(spark.range(10))
+
+    clean = setup(str(tmp_path / "clean"))
+    before = _state(clean)
+    run(clean)
+    after = _state(clean)
+    for k in range(1, 100):
+        root = str(tmp_path / f"crash{k}")
+        t = setup(root)
+        with monkeypatch.context() as m:
+            steps = _crash_at_step(m, root, k)
+            try:
+                run(t)
+            except OSError:
+                pass
+        assert _state(t) in (before, after), (k, steps)
+        for v in t.versions():
+            t.read(version=v["version"]).collect()
+        run(t)
+        assert _state(t)[1] == after[1] and (op != "vacuum" or _state(t) == after)
+        if len(steps) < k:  # the operation ran with no step left to crash
+            break
+    assert k > 3
+
+
+def _race(n_writers, rounds, commit):
+    """Run ``commit(writer, round)`` from ``n_writers`` threads at once,
+    ``rounds`` times each, with the interpreter switching threads often;
+    the returned ids in one flat list."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(n_writers) as pool:
+            futures = [pool.submit(lambda w: [commit(w, r) for r in range(rounds)], w)
+                       for w in range(n_writers)]
+            return [v for f in futures for v in f.result(timeout=600)]
+    finally:
+        sys.setswitchinterval(interval)
+
+
+def test_concurrent_read_modify_writes_commit_once_each(spark, tmp_path):
+    """4 threads × 3 read-modify-write commits on one table: none raises,
+    each returned id is one committed entry, and the latest version holds
+    every writer's contribution, so no commit was lost."""
+    from northwind_warehouse_spark.sources.versioned import VersionedTable
+
+    t = VersionedTable(spark, str(tmp_path), "t")
+
+    def commit(w, r):
+        mine = spark.range(1).select(F.lit(w * 3 + r).alias("c"))
+        return t.update(lambda prev, _: mine if prev is None else prev.unionByName(mine))
+
+    ids = _race(4, 3, commit)
+    assert sorted(ids) == [m["version"] for m in t.versions()] == list(range(12))
+    assert sorted(r.c for r in t.read().collect()) == list(range(12))
+
+
+def test_concurrent_blind_writes_commit_once_each(spark, tmp_path):
+    """More writers than cores, 2 plain writes each, on one table: every
+    write commits its own version and returns its id."""
+    import os
+
+    from northwind_warehouse_spark.sources.versioned import VersionedTable
+
+    n = min(os.cpu_count() or 4, 8) + 2
+    t = VersionedTable(spark, str(tmp_path), "t")
+    ids = _race(n, 2, lambda w, r: t.write(spark.range(w * 2 + r + 1)))
+    assert sorted(ids) == [m["version"] for m in t.versions()] == list(range(2 * n))
+    assert sorted(t.read(version=v).count() for v in ids) == list(range(1, 2 * n + 1))
