@@ -42,6 +42,29 @@ def get_spark(app_name: str = "northwind_warehouse_spark",
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Compile each query once per session. Per round, the 10-query
+        # perfbench analyst mix needs 158 generated classes (186 with
+        # stage numbers in class names); at the default cache of 100
+        # entries every warm query recompiled 13-34 classes at ~10 ms
+        # each, and each warehouse batch 28 (4 now: its watermark literal
+        # is inlined into the code). A static conf: it only takes effect
+        # when this call creates the SparkContext, not on a session that
+        # already exists.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # AQE numbers whole-stage codegen stages in the order their query
+        # stages finish, which varies between runs, so a stage number in
+        # the class name makes each new order new code (fact_lineitem
+        # compiled 4 classes on some warm runs). Plans still print the
+        # numbers; generated class names no longer carry them.
+        .config("spark.sql.codegen.useIdInClassName", "false")
+        # Skip PySpark's per-call origin capture: every pyspark.sql
+        # function call otherwise walks the Python stack and makes py4j
+        # round trips (building fact_lineitem: 169k Python calls -> 61k).
+        # This gives up only the Python call-site fragment of ANSI
+        # runtime error messages, which nothing in the package reads.
+        # PySpark reads the flag once per process, from the session
+        # active at the first function call.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         # testdata events.parquet carries TIMESTAMP(NANOS); read as long and
         # convert in catalog.load (Spark has no native nanos timestamp).

@@ -11,6 +11,9 @@ Layout:
     <root>/<table>/_log/<n>.json          # {version, committed_at, path, watermark, schema}
     <root>/<table>/v=<n>/<writer>/ ... parquet ...
 
+An entry's ``path`` is relative to ``<root>/<table>``, so a lake moved
+to another directory still reads.
+
 Version ``n`` commits by creating ``_log/<n>.json`` put-if-absent, as
 Delta Lake names each log record by its version: the writer fills a data
 directory of its own under ``v=<n>/``, writes the entry there and
@@ -64,8 +67,12 @@ class VersionedTable:
         return sorted(int(os.path.basename(p)[:-5]) for p in glob.glob(os.path.join(self.log, "*.json")))
 
     def _entry(self, version: int) -> dict:
+        """Log entry ``version``, its ``path`` resolved against the table
+        directory (an absolute one, as older entries hold, stays as is)."""
         with open(os.path.join(self.log, f"{version}.json")) as f:
-            return json.load(f)
+            entry = json.load(f)
+        entry["path"] = os.path.join(self.dir, entry["path"])
+        return entry
 
     def versions(self) -> list[dict]:
         return [self._entry(v) for v in self._ids()]
@@ -82,11 +89,12 @@ class VersionedTable:
         a directory of this writer's own. If another writer holds that version
         or ``vacuum`` dropped ``base``, removes it and raises FileExistsError."""
         version = base + 1
-        path = os.path.join(self.dir, f"v={version}", uuid.uuid4().hex)
+        rel = os.path.join(f"v={version}", uuid.uuid4().hex)
+        path = os.path.join(self.dir, rel)
         fill(path)
         staged = os.path.join(path, "_entry.json")  # Spark skips "_" names
         with open(staged, "w") as f:
-            json.dump({"version": version, "path": path, "schema": schema.jsonValue(),
+            json.dump({"version": version, "path": rel, "schema": schema.jsonValue(),
                        "committed_at": _aware_utc(committed_at or datetime.now(timezone.utc)).isoformat(),
                        "watermark": naive_utc(watermark).isoformat() if watermark else None}, f)
         os.makedirs(self.log, exist_ok=True)

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -201,6 +202,33 @@ def test_fold_that_loses_its_version_refolds_on_the_winner(spark, tmp_path, monk
     assert [v["version"] for v in vt.versions()] == [0, 1]
     assert _dim_rows(vt.read()) == _dim_rows(scd2_users(spark, SF_SMOKE))
     assert datetime.fromisoformat(vt.versions()[-1]["watermark"]) == _max_event_ts(spark, SF_SMOKE)
+
+
+@pytest.mark.xfail(strict=True, raises=AssertionError,
+                   reason="scd2_fold_commit drops a change row whose ts is not after the dim's "
+                          "committed watermark, so a late event is never folded (ROADMAP item 2)")
+def test_late_event_is_folded_into_the_dim(spark, tmp_path):
+    """User 7 changes on Jan 2, but that event arrives in the batch after
+    the one holding Jan 1, Jan 3 and Jan 5: the dim must still equal one
+    build over both batches, with 3 versions of user 7."""
+    from northwind_warehouse_spark.operators.incremental import scd2_fold_commit
+    from northwind_warehouse_spark.operators.scd2 import scd2_from_change_stream
+    from northwind_warehouse_spark.plans.medallion import users_scd2_spec
+    from northwind_warehouse_spark.sources.versioned import VersionedTable
+
+    schema = "event_id long, user_id long, ts timestamp, event_type string, value double"
+    first = spark.createDataFrame([(1, 7, datetime(2024, 1, 1), "a", 1.0),
+                                   (2, 7, datetime(2024, 1, 3), "a", 1.0),
+                                   (3, 8, datetime(2024, 1, 5), "a", 1.0)], schema)
+    late = spark.createDataFrame([(4, 7, datetime(2024, 1, 2), "b", 2.0)], schema)
+    vt = VersionedTable(spark, str(tmp_path), "dim")
+    for batch in (first, late):
+        scd2_fold_commit(vt, batch, users_scd2_spec())
+
+    want = scd2_from_change_stream(first.unionByName(late), **users_scd2_spec())
+    assert want.filter(F.col("user_id") == 7).count() == 3
+    assert vt.read().filter(F.col("user_id") == 7).count() == 3
+    assert _dim_rows(vt.read()) == _dim_rows(want)
 
 
 def test_batch_run_racing_streaming_sink_equals_serial_run(spark, tmp_path):

@@ -85,6 +85,34 @@ def test_vacuum_retention(spark, tmp_path):
     assert [m["version"] for m in t.versions()] == [3]
 
 
+def test_moved_lake_reads_and_vacuums(spark, tmp_path):
+    """A lake moved to another directory keeps every version readable:
+    entries locate their data relative to the table, and an entry from
+    before that, holding an absolute path, still reads."""
+    import json
+    import os
+
+    from northwind_warehouse_spark.sources.versioned import VersionedTable
+
+    t = VersionedTable(spark, str(tmp_path / "a"), "t")
+    t.write(spark.range(3), committed_at=_utc(2024, 1, 1))
+    t.write(spark.range(5), committed_at=_utc(2024, 2, 1))
+    os.rename(tmp_path / "a", tmp_path / "b")
+
+    t = VersionedTable(spark, str(tmp_path / "b"), "t")
+    assert [v["version"] for v in t.versions()] == [0, 1]
+    assert t.read().count() == 5
+    assert t.read_asof(_utc(2024, 1, 15)).count() == 3
+    old = t.versions()[0]["path"]
+    assert t.vacuum() == [0] and not os.path.exists(old)
+    assert t.read().count() == 5
+
+    log = tmp_path / "b" / "t" / "_log" / "1.json"
+    entry = json.loads(log.read_text())
+    log.write_text(json.dumps({**entry, "path": str(tmp_path / "b" / "t" / entry["path"])}))
+    assert t.read().count() == 5
+
+
 def test_crashed_commit_does_not_wedge_the_table(spark, tmp_path, monkeypatch):
     """A commit that dies at the log link, after writing its data, leaves
     that data unreferenced and the table as it was. The next write takes
