@@ -1253,20 +1253,19 @@ def oracle_dedup_chunks() -> str:
 IVF_N_CENTROIDS = 8
 _IVF_QUERY_LO, _IVF_QUERY_HI = 8, 18  # 10 query vectors, disjoint from centroids
 
-# trained-codebook store: the coarse quantizer is an INDEX ARTIFACT
-# refreshed with the corpus, not a per-query (or per-SESSION)
-# computation. The k-row trained codebook is published once per
-# (corpus file identity, centroid count) to _IVF_CB_ROOT — round-8
-# verdict #1: keying on applicationId forced every new session to
-# re-train over the corpus sample, the exact cost the stored artifact
-# exists to amortize — and every later session ADOPTS the stored
-# parquet (zero training jobs; the trainer is deterministic, so stored
-# ≡ retrained). The in-process dict only memoizes the per-session
-# persisted DataFrame handle; its entries carry the owning
-# applicationId so a handle from a stopped session is never served,
-# and superseded entries (corpus rewrite) are unpersisted and evicted
-# rather than left pinning stale lineage (round-8 advice).
-_TRAINED_CBS: dict[tuple, tuple[str, object]] = {}
+# Stored codebooks: the coarse quantizer and the PQ subspace codebook
+# are INDEX ARTIFACTS refreshed with the corpus, not per-query (or
+# per-session) computations. Each is committed once per (corpus file
+# identity, parameters) to its versioned table under the artifact root
+# (sources/index_store.py), and every later session ADOPTS the stored
+# parquet: zero training jobs, no corpus-wide lottery scan for the PQ
+# codebook (the builders are deterministic, so stored ≡ retrained).
+# _STORED_ARTIFACTS memoizes one persisted DataFrame handle per
+# (root, corpus path, parameters) slot, tagged with the owning
+# applicationId and identity: a handle from a stopped session is never
+# served, and a superseded one (corpus rewrite) is unpersisted when its
+# slot is refilled rather than left pinning stale lineage.
+_STORED_ARTIFACTS: dict[tuple, tuple[str, str, DataFrame]] = {}
 # All cross-session index artifacts (coarse codebooks, PQ codebooks,
 # the stored IVF-PQ index) live under ONE parameterized root —
 # $SPARK_GRAFT_INDEX_ROOT, read once at import exactly like catalog.py's
@@ -1276,6 +1275,7 @@ _TRAINED_CBS: dict[tuple, tuple[str, object]] = {}
 # no configuration.
 _INDEX_ROOT = os.environ.get("SPARK_GRAFT_INDEX_ROOT", "/tmp")
 _IVF_CB_ROOT = os.path.join(_INDEX_ROOT, "nws_ivf_cb")
+_PQ_CB_ROOT = os.path.join(_INDEX_ROOT, "nws_pq_cb")
 
 
 def _corpus_identity(sf_dir: str, table: str = "embeddings") -> tuple[str, int, int]:
@@ -1286,83 +1286,45 @@ def _corpus_identity(sf_dir: str, table: str = "embeddings") -> tuple[str, int, 
     return path, st.st_mtime_ns, st.st_size
 
 
-def _trained_cb(spark: SparkSession, sf_dir: str, n_centroids: int):
+def _stored_artifact(spark: SparkSession, sf_dir: str, root: str, params: str, build):
+    """The stored artifact ``build(embeddings)`` of the corpus under
+    ``root``, keyed by corpus path and ``params``: committed by the first
+    session to see this corpus version, adopted by every later one, and
+    persisted once per session."""
     import hashlib as _hl
 
     from northwind_warehouse_spark.sources import index_store
 
     path, mtime_ns, size = _corpus_identity(sf_dir)
-    fkey = (path, mtime_ns, size, n_centroids)
+    identity = _hl.md5(f"{path}|{mtime_ns}|{size}|{params}".encode()).hexdigest()[:12]
+    slot = (root, path, params)
     app = spark.sparkContext.applicationId
-    cur = _TRAINED_CBS.get(fkey)
-    if cur is not None and cur[0] == app:
-        return cur[1]
-    tag = _hl.md5(f"{path}|{mtime_ns}|{size}|k={n_centroids}".encode()).hexdigest()[:12]
-    if not index_store.is_published(_IVF_CB_ROOT, tag):
-        trained = sim.ivf_train_codebook(
-            load(spark, sf_dir, "embeddings"), n_centroids=n_centroids
-        )
-        index_store.publish_parquet(trained, _IVF_CB_ROOT, tag)
-        trained.unpersist()
+    cur = _STORED_ARTIFACTS.get(slot)
+    if cur is not None and cur[:2] == (app, identity):
+        return cur[2]
+    vt = index_store.table(spark, root, f"{path}|{params}")
+    entry = index_store.publish(vt, identity, lambda: build(load(spark, sf_dir, "embeddings")))
     # serve from the STORED artifact in every session, including the
-    # builder's (one code path; the k-row read replaces the training
+    # builder's (one code path; the small read replaces the training
     # lineage, which also shrinks every serving plan)
-    cb = spark.read.parquet(os.path.join(_IVF_CB_ROOT, tag)).persist()
-    index_store.vacuum_superseded(_IVF_CB_ROOT, f"{path}|k={n_centroids}", tag)
-    # evict superseded/stale entries for this (corpus path, k): a
-    # rewrite changed (mtime, size), or the owning session is gone —
-    # either way unpersist the pinned handle instead of leaking it
-    for k in [
-        k for k in _TRAINED_CBS
-        if (k[0], k[3]) == (path, n_centroids) and (k != fkey or _TRAINED_CBS[k][0] != app)
-    ]:
+    df = vt.read(entry["version"]).persist()
+    if cur is not None:
         try:
-            _TRAINED_CBS.pop(k)[1].unpersist()
+            cur[2].unpersist()
         except Exception:
             pass
-    _TRAINED_CBS[fkey] = (app, cb)
-    return cb
+    _STORED_ARTIFACTS[slot] = (app, identity, df)
+    return df
 
 
-# PQ subspace codebook store — same lifecycle as _trained_cb: published
-# once per corpus identity (the builder is deterministic), adopted by
-# every later session. Without it, a fresh serving session would re-run
-# the corpus-wide lottery scan pq_codebook performs just to rebuild a
-# PQ_NC-row artifact.
-_PQ_CBS: dict[tuple, tuple[str, object]] = {}
-_PQ_CB_ROOT = os.path.join(_INDEX_ROOT, "nws_pq_cb")
+def _trained_cb(spark: SparkSession, sf_dir: str, n_centroids: int):
+    return _stored_artifact(spark, sf_dir, _IVF_CB_ROOT, f"k={n_centroids}",
+                            lambda e: sim.ivf_train_codebook(e, n_centroids=n_centroids))
 
 
 def _stored_pq_cb(spark: SparkSession, sf_dir: str):
-    import hashlib as _hl
-
-    from northwind_warehouse_spark.sources import index_store
-
-    path, mtime_ns, size = _corpus_identity(sf_dir)
-    fkey = (path, mtime_ns, size, sim.PQ_M, sim.PQ_NC)
-    app = spark.sparkContext.applicationId
-    cur = _PQ_CBS.get(fkey)
-    if cur is not None and cur[0] == app:
-        return cur[1]
-    tag = _hl.md5(
-        f"{path}|{mtime_ns}|{size}|m={sim.PQ_M}|nc={sim.PQ_NC}".encode()
-    ).hexdigest()[:12]
-    if not index_store.is_published(_PQ_CB_ROOT, tag):
-        index_store.publish_parquet(
-            sim.pq_codebook(load(spark, sf_dir, "embeddings")), _PQ_CB_ROOT, tag
-        )
-    pqcb = spark.read.parquet(os.path.join(_PQ_CB_ROOT, tag)).persist()
-    index_store.vacuum_superseded(_PQ_CB_ROOT, path, tag)
-    for k in [
-        k for k in _PQ_CBS
-        if k[0] == path and (k != fkey or _PQ_CBS[k][0] != app)
-    ]:
-        try:
-            _PQ_CBS.pop(k)[1].unpersist()
-        except Exception:
-            pass
-    _PQ_CBS[fkey] = (app, pqcb)
-    return pqcb
+    return _stored_artifact(spark, sf_dir, _PQ_CB_ROOT, f"m={sim.PQ_M}|nc={sim.PQ_NC}",
+                            sim.pq_codebook)
 
 
 # flat-probe CENTROID-ARRAY cache — the quantizer structure a FAISS
@@ -1370,7 +1332,7 @@ def _stored_pq_cb(spark: SparkSession, sf_dir: str):
 # probe scans is a pure function of the trained codebook, but
 # rebuilding it is a k-row aggregate PER QUERY CALL — per-serve work
 # that grows with the occupancy-scaled k. Same session discipline as
-# _TRAINED_CBS: persisted handles keyed by (corpus identity, k),
+# _STORED_ARTIFACTS: persisted handles keyed by (corpus identity, k),
 # tagged with the owning applicationId, superseded/stale entries
 # unpersisted and evicted. No on-disk artifact: the relation derives
 # from the already-persisted k-row codebook in one tiny job, so
@@ -4875,8 +4837,8 @@ def _gate_eval_ids(sf_dir: str, k: int) -> tuple[int, int]:
 
 class IndexRecallGateError(RuntimeError):
     """Raised when a freshly built IVF-PQ index fails the publish-time
-    recall floor; nothing is published and no manifest entry is
-    written — the store never serves an index that flunked its gate."""
+    recall floor; nothing is written or committed — the store never
+    serves an index that flunked its gate."""
 
 
 def _ivfpq_params(sf_dir: str) -> tuple[int, int]:
@@ -4905,7 +4867,17 @@ def _ivfpq_identity_tag(sf_dir: str) -> str:
     ).hexdigest()[:12]
 
 
-_IVFPQ_SCHEMA_DDL = "vec_id BIGINT, cell_id BIGINT, codes ARRAY<INT>, gen INT"
+def _ivfpq_store(spark: SparkSession, sf_dir: str):
+    """The stored IVF-PQ index's versioned table and bucket layout."""
+    from northwind_warehouse_spark.sources import index_store
+
+    path, _, _ = _corpus_identity(sf_dir)
+    _, nb = _ivfpq_params(sf_dir)
+    spec = index_store.BucketSpec(
+        "vec_id BIGINT, cell_id BIGINT, codes ARRAY<INT>, gen INT",
+        ("cell_id",), ("cell_id", "vec_id"), nb, "gen",
+    )
+    return index_store.table(spark, _IVFPQ_ROOT, path), spec
 
 
 def _publish_recall_gate(
@@ -4985,23 +4957,22 @@ def _publish_recall_gate(
 
 def _ivfpq_table(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, str]:
     """The stored IVF-PQ index table for a corpus — ALL generations,
-    ``gen`` column included. Serve if any session has published it,
-    build-publish-and-gate otherwise (sources/index_store.py: identity
-    tag, atomic publish, DDL adoption with partition recovery,
-    manifest-first locked vacuum; revision RESOLUTION serves a
-    compacted ``-r<N>`` rewrite when one is manifested). The build is
+    ``gen`` column included. Serve the latest version of the corpus's
+    versioned index table if it holds this corpus identity (a compacted
+    version included), build-gate-and-commit otherwise
+    (sources/index_store.py: identity entry, put-if-absent commit, DDL
+    adoption with partition recovery). The build is
     ONE corpus scan under the occupancy-scaled TWO-LEVEL route
     (k = max(8, n/128) trained centroids via ivf_assign_two_level —
     n·2√k dot products; the same route the maintain stream's
     ivf_assign_stream uses, so maintained ≡ rebuilt holds end to end
     instead of only for two-level-built test tables, the round-9
     advice gap), PQ-encoded, recall-GATED, and written bucketed-by-cell
-    partitioned-by-generation. Returns (table df, served tag)."""
+    partitioned-by-generation. Returns (table df, catalog table name)."""
     from northwind_warehouse_spark.sources import index_store
 
-    path, _, _ = _corpus_identity(sf_dir)
-    k, nb = _ivfpq_params(sf_dir)
-    tag = _ivfpq_identity_tag(sf_dir)
+    k, _ = _ivfpq_params(sf_dir)
+    vt, spec = _ivfpq_store(spark, sf_dir)
     built: dict = {}
 
     def _build() -> DataFrame:
@@ -5016,17 +4987,7 @@ def _ivfpq_table(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, str]:
 
     try:
         return index_store.ensure_bucketed_table(
-            spark,
-            "nws_ivfpq_index_",
-            _IVFPQ_ROOT,
-            tag,
-            _build,
-            schema_ddl=_IVFPQ_SCHEMA_DDL,
-            bucket_cols=["cell_id"],
-            sort_cols=["cell_id", "vec_id"],
-            n_buckets=nb,
-            manifest_key=path,
-            partition_col="gen",
+            spark, "nws_ivfpq_index_", vt, _ivfpq_identity_tag(sf_dir), _build, spec,
         )
     finally:
         if "assigned" in built:
@@ -5035,7 +4996,7 @@ def _ivfpq_table(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, str]:
 
 def _ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GENERATION 0 of the stored index — exactly what a rebuild of the
-    corpus file produces, which is the content identity the tag names
+    corpus file produces, which is the content identity the entry names
     and the contract every registered serving query (and its DuckDB
     oracle) relies on: streaming maintenance appends land in higher
     ``gen`` partitions and are PRUNED here at the directory level
@@ -5048,8 +5009,9 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ivfpq_index_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The maintained view of the stored index: generation 0 plus every
-    streamed append generation (the manifest records the current one).
-    Same bucketed table, so cell-grain plans are identical."""
+    streamed append generation (the ``gen=<N>`` partitions of the
+    served version). Same bucketed table, so cell-grain plans are
+    identical."""
     df, _ = _ivfpq_table(spark, sf_dir)
     return df.select("vec_id", "cell_id", "codes")
 
@@ -5057,26 +5019,23 @@ def _ivfpq_index_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ivfpq_maintain_from_stream(
     spark: SparkSession, sf_dir: str, incoming: DataFrame, checkpoint_dir: str
 ):
-    """Production maintenance entry point: bump the manifest GENERATION
-    first (a crash after the bump and before any append leaves an empty
-    generation — harmless; the reverse order could leave unrecorded
-    appends), then stream-append arriving vectors into the bumped
-    ``gen=<N>`` partition under the FROZEN stored quantizer
+    """Production maintenance entry point: stream-append arriving
+    vectors into the next GENERATION, the ``gen=<N>`` partition one past
+    the served version's highest, under the FROZEN stored quantizer
     (streaming/jobs.py::ivf_pq_index_maintain_stream). Registered
     queries keep serving gen 0 untouched; the maintained view picks the
     appends up immediately. Returns (query, generation)."""
     from northwind_warehouse_spark.sources import index_store
     from northwind_warehouse_spark.streaming.jobs import ivf_pq_index_maintain_stream
 
-    path, _, _ = _corpus_identity(sf_dir)
     k, nb = _ivfpq_params(sf_dir)
-    _, tag = _ivfpq_table(spark, sf_dir)
-    gen = index_store.bump_generation(_IVFPQ_ROOT, path)
+    _, table = _ivfpq_table(spark, sf_dir)
+    vt, _ = _ivfpq_store(spark, sf_dir)
+    gen = index_store.generation(vt.latest()) + 1
     cb = _trained_cb(spark, sf_dir, k)
     pqcb = _stored_pq_cb(spark, sf_dir)
     q = ivf_pq_index_maintain_stream(
-        incoming, k, cb, pqcb, f"nws_ivfpq_index_{tag}", checkpoint_dir,
-        n_buckets=nb, gen=gen,
+        incoming, k, cb, pqcb, table, checkpoint_dir, n_buckets=nb, gen=gen,
     )
     return q, gen
 
@@ -5086,26 +5045,16 @@ def ivfpq_compact_index(spark: SparkSession, sf_dir: str) -> dict:
     index back to one right-sized file per (generation, cell bucket)
     after streaming appends (sources/index_store.py::
     compact_bucketed_table — the OPTIMIZE step of the maintain-stream
-    story). The rewrite publishes as a NEW revision tag and retargets
-    the manifest crash-safely (round-9 advice: no in-place directory
-    swap); bucket contract and serving results preserved, asserted in
-    tests/test_index_store.py. Returns file counts and old/new tags."""
+    story). The rewrite commits the next version of the index table,
+    so readers of the old version keep their files until vacuum's
+    grace passes; bucket contract and serving results preserved,
+    asserted in tests/test_index_store.py. Returns file counts and the
+    old/new catalog table names."""
     from northwind_warehouse_spark.sources import index_store
 
-    path, _, _ = _corpus_identity(sf_dir)
-    _, nb = _ivfpq_params(sf_dir)
-    _ivfpq_table(spark, sf_dir)  # ensure built/adopted + manifested
-    return index_store.compact_bucketed_table(
-        spark,
-        "nws_ivfpq_index_",
-        _IVFPQ_ROOT,
-        path,
-        schema_ddl=_IVFPQ_SCHEMA_DDL,
-        bucket_cols=["cell_id"],
-        sort_cols=["cell_id", "vec_id"],
-        n_buckets=nb,
-        partition_col="gen",
-    )
+    _ivfpq_table(spark, sf_dir)  # ensure built or adopted
+    vt, spec = _ivfpq_store(spark, sf_dir)
+    return index_store.compact_bucketed_table(spark, "nws_ivfpq_index_", vt, spec)
 
 
 def _ivfpq_query_luts(spark: SparkSession, sf_dir: str, n_probe: int = 1) -> DataFrame:
@@ -5153,8 +5102,8 @@ def ann_ivfpq_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuilds its index inside the query DAG, which is the right demo
     shape but not the production one).
 
-    Build-once-per-CORPUS (round-8 verdict #1): the artifact tag is the
-    corpus file identity + index format — no session component — so the
+    Build-once-per-CORPUS (round-8 verdict #1): the artifact identity is
+    the corpus file identity + index format — no session component — so the
     first session ever to see a corpus version trains the coarse
     quantizer (k = max(8, n/128) trained centroids, the occupancy
     policy that keeps per-query candidate work ~constant instead of
@@ -5163,8 +5112,8 @@ def ann_ivfpq_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     PQ-encodes it in the same scan, gates the result on eval-batch
     recall, and publishes the (vec_id, cell_id, codes) index as a
     BUCKETED-BY-CELL, PARTITIONED-BY-GENERATION table
-    (sources/index_store.py: atomic publish, locked manifest-first
-    vacuum on rewrite), and every LATER session ADOPTS the stored
+    (sources/index_store.py: one put-if-absent commit on the index's
+    versioned table), and every LATER session ADOPTS the stored
     table, codebook and PQ codebook with zero build jobs
     (tests/test_index_store.py runs the second session in a fresh
     process and counts). Serving: the raw corpus is touched only for
@@ -5226,7 +5175,7 @@ def _ivfpq_adc_topk(idx: DataFrame, luts: DataFrame,
 def ann_ivfpq_from_index_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serving twin over the MAINTAINED view (gen 0 ∪ every streamed
     append generation) — deliberately NOT a registered query: gen-0 is
-    the oracle contract (the stored tag's content identity), while
+    the oracle contract (the stored index's content identity), while
     this reader is what a deployment serves BETWEEN full refreshes.
     Exists so the maintenance lifecycle has a measured serving number
     (tools/scale_smoke.py maintained-serving section: N appended
@@ -7483,7 +7432,7 @@ def knn_graph_cell_local(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the (vec_id, cell_id) relation the index store already
     persists; the stored table's gen-0 scan carries zero Exchange and
     its cell_id IS the two-level assignment, the content identity the
-    tag names, so the oracle is unchanged). MEASURED adopt (min-of-2
+    index entry names, so the oracle is unchanged). MEASURED adopt (min-of-2
     warm, r11): 2.27→1.95s at sf0.1, 5.0→4.31s at 10× — the remaining
     wall is the cap window + cap²-bounded scoring, not assignment.
     Raw embeddings join in by vec_id for the cosine scoring (the index
@@ -9329,7 +9278,7 @@ def ivf_cell_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
     grew with the corpus). Band arithmetic over ≤ ~40 rows. The
     oracle's assign0 chain is unchanged: stored gen-0 cell_id ≡ the
     two-level assignment of the corpus file, the content identity the
-    tag names."""
+    index entry names."""
     from pyspark.sql.window import Window
 
     sizes = (

@@ -8,7 +8,7 @@ as-of timestamp to it, so a run pinned to version N sees identical bytes
 forever, regardless of later writes.
 
 Layout:
-    <root>/<table>/_log/<n>.json          # {version, committed_at, path, watermark, schema}
+    <root>/<table>/_log/<n>.json          # {version, committed_at, path, watermark, schema, identity}
     <root>/<table>/v=<n>/<writer>/ ... parquet ...
 
 An entry's ``path`` is relative to ``<root>/<table>``, so a lake moved
@@ -84,10 +84,13 @@ class VersionedTable:
     # -- write -------------------------------------------------------------
 
     def commit(self, base: int, fill: Callable[[str], None], schema: StructType,
-               watermark: datetime | None = None, committed_at: datetime | None = None) -> int:
+               watermark: datetime | None = None, committed_at: datetime | None = None,
+               identity: str | None = None) -> int:
         """Commit version ``base + 1``, its data written by ``fill(path)`` to
-        a directory of this writer's own. If another writer holds that version
-        or ``vacuum`` dropped ``base``, removes it and raises FileExistsError."""
+        a directory of this writer's own; ``identity`` names what the data
+        was built from (``index_store`` records its artifact's source).
+        If another writer holds that version or ``vacuum`` dropped
+        ``base``, removes it and raises FileExistsError."""
         version = base + 1
         rel = os.path.join(f"v={version}", uuid.uuid4().hex)
         path = os.path.join(self.dir, rel)
@@ -96,7 +99,8 @@ class VersionedTable:
         with open(staged, "w") as f:
             json.dump({"version": version, "path": rel, "schema": schema.jsonValue(),
                        "committed_at": _aware_utc(committed_at or datetime.now(timezone.utc)).isoformat(),
-                       "watermark": naive_utc(watermark).isoformat() if watermark else None}, f)
+                       "watermark": naive_utc(watermark).isoformat() if watermark else None,
+                       "identity": identity}, f)
         os.makedirs(self.log, exist_ok=True)
         try:
             if base >= 0 and not os.path.exists(os.path.join(self.log, f"{base}.json")):
@@ -159,17 +163,21 @@ class VersionedTable:
     def vacuum(self, keep_last: int = 1, older_than: datetime | None = None) -> list[int]:
         """Retention cleanup: drop the versions beyond the newest
         ``keep_last`` (and, if ``older_than`` is given, only those also
-        committed strictly before it). The latest version is never
+        superseded strictly before it). The latest version is never
         dropped. Returns the dropped version ids.
 
-        Mirrors Delta/Iceberg VACUUM / expire_snapshots. Each entry goes
-        BEFORE its data, so a crash leaves unreferenced files, never an
-        entry pointing at deleted data. Data directories no entry
-        references (a crashed or losing writer's) go once they are
-        ``ORPHAN_AGE_S`` old."""
+        Mirrors Delta/Iceberg VACUUM / expire_snapshots. A version ages
+        from its successor's ``committed_at``, the moment it stopped
+        being the latest (Delta's remove timestamp): a reader that
+        resolved it as the latest just before then keeps its files for
+        the whole ``older_than`` grace. Each entry goes BEFORE its data,
+        so a crash leaves unreferenced files, never an entry pointing at
+        deleted data. Data directories no entry references (a crashed or
+        losing writer's) go once they are ``ORPHAN_AGE_S`` old."""
         versions = self.versions()
-        dropped = [m for m in versions[:-max(1, keep_last)] if older_than is None
-                   or datetime.fromisoformat(m["committed_at"]) < _aware_utc(older_than)]
+        dropped = [m for m, successor in zip(versions[:-max(1, keep_last)], versions[1:])
+                   if older_than is None
+                   or datetime.fromisoformat(successor["committed_at"]) < _aware_utc(older_than)]
         for m in dropped:
             os.unlink(os.path.join(self.log, f"{m['version']}.json"))
             shutil.rmtree(m["path"], ignore_errors=True)

@@ -504,11 +504,10 @@ def ivf_pq_index_maintain_stream(
     ``gen`` stamps the appends with a GENERATION and writes them into
     the ``gen=<N>`` partition of a generation-partitioned index table
     (the production layout — plans/llm.py::ivfpq_maintain_from_stream
-    bumps the manifest generation first and passes it here): the
-    identity-tagged gen-0 content stays byte-identical to a rebuild of
-    the corpus file while the maintained view unions the append
-    generations, keeping the tag's content identity honest after
-    maintenance. ``gen=None`` appends unpartitioned (standalone
+    passes the generation after the stored version's highest): the
+    gen-0 content its identity names stays byte-identical to a rebuild
+    of the corpus file while the maintained view unions the append
+    generations, keeping that identity honest after maintenance. ``gen=None`` appends unpartitioned (standalone
     bucketed tables, as the equality test builds).
 
     foreachBatch because bucketed writes are a batch-writer feature —

@@ -3,20 +3,21 @@ round-10 verdict #1-#5).
 
 The stored IVF-PQ index, trained coarse codebook and PQ codebook are
 artifacts of a CORPUS VERSION: built by whichever session first sees a
-corpus (occupancy-scaled two-level assignment, recall-GATED at
-publish), adopted — with zero build jobs — by every later session,
-maintained from the ingest stream as manifest-recorded GENERATIONS,
-compacted crash-safely into revision tags, and vacuumed manifest-first
-under a cross-process lock when a corpus rewrite supersedes them.
+corpus (occupancy-scaled two-level assignment, recall-GATED before it
+commits), adopted — with zero build jobs — by every later session,
+maintained from the ingest stream as GENERATIONS, and compacted or
+superseded by the next commit on the artifact's versioned-table log,
+whose vacuum keeps a superseded version through its grace.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 import subprocess
 import sys
+import time
+from datetime import datetime, timedelta, timezone
 from pathlib import Path
 
 import pytest
@@ -67,7 +68,7 @@ def test_second_session_adopts_index_with_zero_build_jobs(tmp_path):
     a FRESH process, empty catalog — serves the same corpus with ZERO
     builder invocations (no training, no PQ-codebook scan, no corpus
     encode) and byte-identical results, because it adopts the stored
-    artifacts by identity tag. Both sessions take the artifact root
+    artifacts by identity. Both sessions take the artifact root
     from $SPARK_GRAFT_INDEX_ROOT (round-10 verdict #4), proving the
     parameterized root end to end."""
     root = str(tmp_path / "idx_root")
@@ -143,14 +144,22 @@ def test_gate_eval_ids_are_non_seed(tmp_path):
         L._gate_eval_ids(empty, 8)
 
 
+def _index_table(idx_root: str, corpus_path: str):
+    from northwind_warehouse_spark.sources import index_store
+
+    return index_store.table(None, idx_root, corpus_path)
+
+
+def _hours(h: float):
+    return datetime.now(timezone.utc) + timedelta(hours=h)
+
+
 def test_corpus_rewrite_vacuums_superseded_artifacts(spark, tmp_path, monkeypatch):
     """Round-8 verdict #2 (+ round-10 #2 retention grace): rewriting
-    the corpus must (a) serve a NEW index tag, (b) drop the superseded
-    catalog table (manifest-first) while RETAINING its directory for
-    the gc grace window, and (c) unpersist + evict the stale
+    the corpus must (a) serve a NEW index version of the new identity,
+    (b) drop the superseded catalog table while vacuum RETAINS its files
+    through the grace period, and (c) unpersist + evict the stale
     trained-codebook handle instead of leaking its pinned lineage."""
-    import time
-
     import northwind_warehouse_spark.plans.llm as L
     from northwind_warehouse_spark.sources import index_store
 
@@ -159,197 +168,153 @@ def test_corpus_rewrite_vacuums_superseded_artifacts(spark, tmp_path, monkeypatc
     rows1 = L.ann_ivfpq_from_index(spark, sf_dir).collect()
     assert rows1
 
-    corpus_path = f"{sf_dir}/embeddings.parquet"
-    tag1 = index_store.read_manifest(str(tmp_path / "idx"))[corpus_path]
-    assert (tmp_path / "idx" / tag1 / "_SUCCESS").is_file()
+    vt = _index_table(str(tmp_path / "idx"), f"{sf_dir}/embeddings.parquet")
+    [v0] = vt.versions()
+    _, table1 = L._ivfpq_table(spark, sf_dir)
     k1, _ = L._ivfpq_params(sf_dir)
     cb1 = L._trained_cb(spark, sf_dir, k1)
     assert cb1.storageLevel.useMemory
 
-    # corpus refresh: fewer rows -> new (mtime, size) -> new tag
+    # corpus refresh: fewer rows -> new (mtime, size) -> new identity
     _write_corpus(tmp_path / "corpus", max_vec_id=50)
     rows2 = L.ann_ivfpq_from_index(spark, sf_dir).collect()
     assert rows2 and rows2 != rows1  # the rebuilt index reflects the rewrite
 
-    manifest = index_store.read_manifest(str(tmp_path / "idx"))
-    tag2 = manifest[corpus_path]
-    assert tag2 != tag1
-    # retention grace: the superseded dir is RETAINED (a concurrent
-    # adopted reader may still be scanning it) and only the age-guarded
-    # gc removes it
-    assert index_store.is_published(str(tmp_path / "idx"), tag1), (
-        "superseded index dir must stay servable through the grace window"
-    )
-    assert not spark.catalog.tableExists(f"nws_ivfpq_index_{tag1}"), (
-        "superseded catalog table leaked"
-    )
-    old_t = time.time() - 7200
-    os.utime(str(tmp_path / "idx" / tag1), (old_t, old_t))
-    assert tag1 in index_store.gc_unreferenced(str(tmp_path / "idx"))
-    assert not (tmp_path / "idx" / tag1).exists()
-    assert (tmp_path / "idx" / tag2 / "_SUCCESS").is_file()
+    _, v1 = vt.versions()
+    assert v1["identity"] == L._ivfpq_identity_tag(sf_dir) != v0["identity"]
+    assert not spark.catalog.tableExists(table1), "superseded catalog table leaked"
+    # retention grace: superseded a moment ago, so a reader that
+    # resolved v0 may still be scanning it
+    assert vt.vacuum(older_than=_hours(-1)) == []
+    assert os.path.isdir(v0["path"]), "superseded index must stay servable through the grace"
+    assert vt.vacuum(older_than=_hours(0.01)) == [0]
+    assert not os.path.exists(v0["path"]) and os.path.isdir(v1["path"])
     # a fresh corpus version starts un-maintained
-    assert index_store.manifest_generation(str(tmp_path / "idx"), corpus_path) == 0
+    assert index_store.generation(vt.latest()) == 0
     # stale codebook handle: unpersisted and evicted from the cache
     assert not cb1.storageLevel.useMemory, "stale trained-codebook still pinned"
-    stale = [
-        key for key, (_, df) in L._TRAINED_CBS.items()
-        if key[0] == corpus_path and df is cb1
-    ]
-    assert not stale, "stale trained-codebook entry not evicted"
-    # cleanup: drop the served table so later tests see a clean catalog
-    spark.sql(f"DROP TABLE IF EXISTS nws_ivfpq_index_{tag2}")
-
-
-def test_vacuum_is_manifest_first_with_retention_grace(tmp_path):
-    """index_store.vacuum_superseded writes the manifest FIRST (the
-    sources/versioned.py discipline) and RETAINS the superseded
-    directory under the gc retention grace (round-10 verdict #2: an
-    immediate rmtree could vanish a directory under a concurrent
-    reader that adopted the old tag): the old dir stays complete, its
-    mtime restarts the grace clock at supersession time, and only the
-    age-guarded gc_unreferenced removes it."""
-    import time
-
-    from northwind_warehouse_spark.sources import index_store
-
-    root = str(tmp_path / "store")
-    for tag in ("t1", "t2"):
-        os.makedirs(os.path.join(root, tag), exist_ok=True)
-        Path(root, tag, "_SUCCESS").touch()
-    # backdate t1's publish so the test can see vacuum RESTART the clock
-    old = time.time() - 7200
-    os.utime(os.path.join(root, "t1"), (old, old))
-
-    assert index_store.vacuum_superseded(root, "corpus", "t1") is None
-    assert index_store.read_manifest(root) == {"corpus": "t1"}
-    assert index_store.is_published(root, "t1")
-
-    # supersede: manifest points at t2; t1 RETAINED, complete, clock
-    # restarted (an hour-old artifact superseded NOW must not be
-    # instantly collectable)
-    retired = index_store.vacuum_superseded(root, "corpus", "t2")
-    assert retired == "t1"
-    assert index_store.read_manifest(root) == {"corpus": "t2"}
-    assert index_store.is_published(root, "t1"), "grace must keep t1 servable"
-    assert index_store.is_published(root, "t2")
-    assert index_store.gc_unreferenced(root, older_than_s=3600) == [], (
-        "just-superseded dir collected inside its grace window"
+    assert not any(df is cb1 for _, _, df in L._STORED_ARTIFACTS.values()), (
+        "stale trained-codebook entry not evicted"
     )
+    # cleanup: drop the served table so later tests see a clean catalog
+    spark.sql(f"DROP TABLE IF EXISTS {L._ivfpq_table(spark, sf_dir)[1]}")
 
-    # idempotent: re-vacuuming the current tag is a no-op
-    assert index_store.vacuum_superseded(root, "corpus", "t2") is None
-    assert index_store.is_published(root, "t2")
 
-    # aged past the grace, gc collects exactly the unreferenced tag
-    os.utime(os.path.join(root, "t1"), (old, old))
-    assert index_store.gc_unreferenced(root, older_than_s=3600) == ["t1"]
-    assert not os.path.exists(os.path.join(root, "t1"))
-    assert index_store.is_published(root, "t2")
+def test_vacuum_is_manifest_first_with_retention_grace(spark, tmp_path, monkeypatch):
+    """An artifact's log is its manifest. Vacuum keeps a superseded
+    version through the grace, counted from the commit that superseded
+    it, and never the latest. It drops a version's log entry before its
+    files: a vacuum that dies in between leaves unreferenced files that
+    a later vacuum collects, never an entry without its data."""
+    import shutil
+
+    from northwind_warehouse_spark.sources import index_store, versioned
+
+    vt = index_store.table(spark, str(tmp_path / "store"), "corpus")
+    t1 = index_store.publish(vt, "t1", lambda: spark.range(3))
+    t2 = index_store.publish(vt, "t2", lambda: spark.range(5))
+    # t1 was the latest until t2 committed, so no grace counted from
+    # then has passed, however old t1's own commit is
+    superseded_at = datetime.fromisoformat(t2["committed_at"])
+    assert vt.vacuum(older_than=superseded_at) == [], "collected inside its grace"
+    assert vt.read(t1["version"]).count() == 3
+
+    def crash(path, ignore_errors=False):
+        raise OSError("crash between the entry and its data")
+
+    with monkeypatch.context() as m:
+        m.setattr(shutil, "rmtree", crash)
+        with pytest.raises(OSError):
+            vt.vacuum(older_than=_hours(0.01))
+    assert vt.versions() == [t2] and os.path.isdir(t1["path"])
+    old = time.time() - versioned.ORPHAN_AGE_S - 1
+    os.utime(t1["path"], (old, old))
+    assert vt.vacuum(older_than=_hours(1)) == []  # the latest is never dropped
+    assert not os.path.exists(t1["path"])
+    assert vt.read().count() == 5
 
 
 def test_publish_parquet_is_atomic_and_idempotent(spark, tmp_path):
+    """``publish`` writes a plain parquet artifact by default. A second
+    publish of the served identity builds nothing, and a build or a
+    write that fails commits nothing: the entry is the only commit
+    point, so a half-written directory is never served."""
     from northwind_warehouse_spark.sources import index_store
 
-    root = str(tmp_path / "store")
-    df = spark.range(0, 10).selectExpr("id AS vec_id")
-    p1 = index_store.publish_parquet(df, root, "tag")
-    assert index_store.is_published(root, "tag")
-    mtime = os.stat(p1).st_mtime_ns
-    # second publish of the same tag is a no-op (another session's
-    # deterministic build already landed)
-    index_store.publish_parquet(spark.range(0, 99).selectExpr("id AS vec_id"), root, "tag")
-    assert os.stat(p1).st_mtime_ns == mtime
-    assert spark.read.parquet(p1).count() == 10
-    # no leftover temp build dirs
-    assert [d for d in os.listdir(root) if ".build-" in d] == []
+    vt = index_store.table(spark, str(tmp_path / "store"), "key")
+    entry = index_store.publish(vt, "ident", lambda: spark.range(0, 10).selectExpr("id AS vec_id"))
+    assert index_store.publish(vt, "ident", lambda: pytest.fail("rebuilt a stored identity")) == entry
+    assert vt.read(entry["version"]).count() == 10
+
+    def fail_build():
+        raise RuntimeError("build failed")
+
+    def half_write(df, path):
+        df.write.parquet(path)
+        raise RuntimeError("died after writing")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        index_store.publish(vt, "next", fail_build)
+    with pytest.raises(RuntimeError, match="died after writing"):
+        index_store.publish(vt, "next", lambda: spark.range(99), half_write)
+    assert vt.versions() == [entry]
+    assert index_store.publish(vt, "ident", lambda: pytest.fail("rebuilt")) == entry
 
 
-def test_promote_replaces_success_less_residue(spark, tmp_path):
-    """Round-9 advice: a final directory WITHOUT _SUCCESS is crash
-    residue (e.g. a partially rmtree'd vacuum leftover). _promote must
-    replace it with the fresh complete build instead of silently
-    discarding the good build and letting readers adopt partial data."""
-    from northwind_warehouse_spark.sources import index_store
+# Publishes one identity from a fresh process. Both processes build
+# before either commits (a file barrier), so their commits race for the
+# same version id; each builds rows naming itself, so the rows show
+# whose version a process serves.
+_PUBLISH_SCRIPT = r"""
+import json, os, sys, time
+from northwind_warehouse_spark.session import get_spark
+from northwind_warehouse_spark.sources import index_store
+root, me, barrier = sys.argv[1:4]
+spark = get_spark(f"nws-publish-{me}", shuffle_partitions=2)
+spark.sparkContext.setLogLevel("ERROR")
+vt = index_store.table(spark, root, "corpus|k=8")
 
-    root = str(tmp_path / "store")
-    residue = Path(root, "tag")
-    residue.mkdir(parents=True)
-    (residue / "part-00000-stale.parquet").write_bytes(b"partial")
-    assert not index_store.is_published(root, "tag")
+def build():
+    open(os.path.join(barrier, me), "w").close()
+    deadline = time.time() + 300
+    while len(os.listdir(barrier)) < 2 and time.time() < deadline:
+        time.sleep(0.05)
+    return spark.range(20).selectExpr("id AS vec_id", f"'{me}' AS builder")
 
-    df = spark.range(0, 10).selectExpr("id AS vec_id")
-    p = index_store.publish_parquet(df, root, "tag")
-    assert index_store.is_published(root, "tag"), "fresh complete build was discarded"
-    assert not (residue / "part-00000-stale.parquet").exists(), "residue file survived"
-    assert spark.read.parquet(p).count() == 10
-
-
-def test_promote_raises_on_unremovable_residue(spark, tmp_path, monkeypatch):
-    """If the final directory is _SUCCESS-less residue that CANNOT be
-    replaced (rename keeps failing, rmtree is ineffective), _promote
-    must RAISE rather than return: a silent return hands the caller's
-    adopt step an incomplete directory to serve as the artifact."""
-    import pytest
-
-    from northwind_warehouse_spark.sources import index_store
-
-    root = str(tmp_path / "store")
-    residue = Path(root, "tag")
-    residue.mkdir(parents=True)
-    (residue / "part-00000-stale.parquet").write_bytes(b"partial")
-
-    def _always_fail_rename(src, dst):
-        raise OSError("simulated: final recreated by a concurrent writer")
-
-    def _ineffective_rmtree(path, ignore_errors=False):
-        return None  # simulated: removal has no effect (permissions)
-
-    monkeypatch.setattr(index_store.os, "rename", _always_fail_rename)
-    monkeypatch.setattr(index_store.shutil, "rmtree", _ineffective_rmtree)
-    tmp = str(tmp_path / "store" / "tag.build-1")
-    Path(tmp).mkdir()
-    with pytest.raises(RuntimeError, match="could not publish"):
-        index_store._promote(tmp, str(residue))
-    assert not index_store.is_published(root, "tag")
+entry = index_store.publish(vt, "same-identity", build)
+rows = sorted(map(list, vt.read(entry["version"]).collect()))
+print("RESULT::" + json.dumps({"path": entry["path"], "rows": rows}))
+spark.stop()
+"""
 
 
-def test_manifest_lock_serializes_cross_process_updates(tmp_path):
-    """Round-9 advice: unlocked read-modify-writes from two processes
-    vacuuming DIFFERENT keys could interleave and lose one key's entry
-    (after which gc would collect its live artifact). Hammer the
-    manifest from concurrent processes and assert no entry is lost."""
-    root = str(tmp_path / "store")
-    n_procs, n_keys = 4, 12
-    script = (
-        "import sys\n"
-        "from northwind_warehouse_spark.sources import index_store\n"
-        "root, pid = sys.argv[1], sys.argv[2]\n"
-        f"for i in range({n_keys}):\n"
-        "    index_store.vacuum_superseded(root, f'key-{pid}-{i}', f'tag-{pid}-{i}')\n"
-    )
+def test_concurrent_publishers_of_one_identity_commit_once(tmp_path):
+    """Two processes publish the same identity at once. Exactly one
+    version commits, the loser's writer directory is removed, and both
+    serve the winner's rows from the committed directory."""
+    import glob
+
+    root, barrier = str(tmp_path / "store"), tmp_path / "barrier"
+    barrier.mkdir()
     procs = [
         subprocess.Popen(
-            [sys.executable, "-c", script, root, str(p)],
-            cwd=REPO, stdout=subprocess.PIPE, stderr=subprocess.PIPE,
+            [sys.executable, "-c", _PUBLISH_SCRIPT, root, f"p{i}", str(barrier)],
+            cwd=REPO, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
         )
-        for p in range(n_procs)
+        for i in range(2)
     ]
+    results = []
     for p in procs:
-        _, err = p.communicate(timeout=120)
-        assert p.returncode == 0, err.decode()[-2000:]
+        out, err = p.communicate(timeout=600)
+        assert p.returncode == 0, err[-2000:]
+        line = next(l for l in out.splitlines() if l.startswith("RESULT::"))
+        results.append(json.loads(line[len("RESULT::"):]))
 
-    from northwind_warehouse_spark.sources import index_store
-
-    manifest = index_store.read_manifest(root)
-    want = {f"key-{p}-{i}" for p in range(n_procs) for i in range(n_keys)}
-    assert set(manifest) == want, f"lost {sorted(want - set(manifest))}"
-
-
-def _current_index_table(idx_root: str, corpus_path: str) -> str:
-    from northwind_warehouse_spark.sources import index_store
-
-    return f"nws_ivfpq_index_{index_store.read_manifest(idx_root)[corpus_path]}"
+    [entry] = _index_table(root, "corpus|k=8").versions()
+    assert [r["path"] for r in results] == [entry["path"]] * 2
+    assert results[0]["rows"] == results[1]["rows"]
+    assert len({builder for _, builder in results[0]["rows"]}) == 1
+    assert glob.glob(os.path.join(os.path.dirname(entry["path"]), "*")) == [entry["path"]]
 
 
 def _append_generation(spark, table: str, gen: int, n_buckets: int, rows_df) -> None:
@@ -366,23 +331,20 @@ def test_compaction_restores_one_file_per_bucket(spark, tmp_path, monkeypatch):
     """The OPTIMIZE step of the maintenance story: streaming appends
     leave one file per (micro-batch, bucket); compact_bucketed_table
     must rewrite the stored index to ONE file per (generation, bucket)
-    — published as a NEW revision tag, manifest-first (round-10
+    — committed as the NEXT version of the same identity (round-10
     verdict #2: no in-place directory swap) — with rows, generations,
     serving results, and the zero-Exchange bucket contract all
     preserved."""
     from pyspark.sql import functions as F
 
     import northwind_warehouse_spark.plans.llm as L
-    from northwind_warehouse_spark.sources import index_store
 
     _patch_roots(monkeypatch, tmp_path)
     sf_dir = _write_corpus(tmp_path / "corpus")
-    idx_root = str(tmp_path / "idx")
+    vt = _index_table(str(tmp_path / "idx"), f"{sf_dir}/embeddings.parquet")
 
     rows_before_appends = L.ann_ivfpq_from_index(spark, sf_dir).collect()
-    corpus_path = f"{sf_dir}/embeddings.parquet"
-    tag0 = index_store.read_manifest(idx_root)[corpus_path]
-    table = f"nws_ivfpq_index_{tag0}"
+    _, table = L._ivfpq_table(spark, sf_dir)
     _, nb = L._ivfpq_params(sf_dir)
 
     # simulate streaming maintenance residue: several tiny bucketed
@@ -408,24 +370,20 @@ def test_compaction_restores_one_file_per_bucket(spark, tmp_path, monkeypatch):
     stats = L.ivfpq_compact_index(spark, sf_dir)
     assert stats["files_after"] < stats["files_before"], stats
     assert stats["files_after"] <= 2 * nb, stats  # one file per (gen, bucket)
-    assert stats["old_tag"] == tag0
-    new_tag = stats["new_tag"]
-    assert new_tag != tag0 and index_store.base_tag(new_tag) == tag0
+    assert stats["old_table"] == table
+    new_table = stats["new_table"]
+    assert new_table != table
 
-    # the swap is a manifest retarget, never an in-place rewrite: old
-    # table dropped, new tag served, generation preserved; the old dir
-    # is RETAINED complete for the gc retention grace (r11 — concurrent
-    # adopted readers must never lose their directory mid-scan)
-    assert index_store.read_manifest(idx_root)[corpus_path] == new_tag
-    assert index_store.is_published(idx_root, tag0)
-    import time as _time
-
-    _old_t = _time.time() - 7200
-    os.utime(str(tmp_path / "idx" / tag0), (_old_t, _old_t))
-    assert tag0 in index_store.gc_unreferenced(idx_root)
-    assert not (tmp_path / "idx" / tag0).exists()
+    # the rewrite is the next version of the same identity, never an
+    # in-place rewrite: old table dropped, new one served; the old
+    # files stay for vacuum's grace (a concurrent adopted reader must
+    # never lose its directory mid-scan)
+    v0, v1 = vt.versions()
+    assert v0["identity"] == v1["identity"]
+    assert L._ivfpq_table(spark, sf_dir)[1] == new_table
     assert not spark.catalog.tableExists(table)
-    new_table = f"nws_ivfpq_index_{new_tag}"
+    assert vt.vacuum(older_than=_hours(-1)) == [] and os.path.isdir(v0["path"])
+    assert vt.vacuum(older_than=_hours(0.01)) == [0] and not os.path.exists(v0["path"])
     got_rows = {
         (r.vec_id, r.cell_id, tuple(r.codes), r.gen)
         for r in spark.table(new_table).collect()
@@ -450,106 +408,85 @@ def test_compaction_restores_one_file_per_bucket(spark, tmp_path, monkeypatch):
 
 
 def test_compaction_crash_windows_leave_servable_index(spark, tmp_path, monkeypatch):
-    """Round-9/10 verdict #2 'done' criterion: a crash BEFORE the
-    compaction's manifest retarget leaves the old revision fully
-    served and the new dir a gc-collectable orphan; AFTER the retarget
-    (the normal post-vacuum state under the r11 retention grace) the
-    new revision serves while the old dir stays complete until the
-    age-guarded gc collects it — never a manifest pointing at a
-    missing or half-written directory, never a directory vanishing
-    under a concurrent adopted reader."""
-    import time
+    """Round-9/10 verdict #2 'done' criterion: a compaction that dies at
+    its log link, after writing, leaves the old version fully served
+    and its own files an unreferenced writer directory that vacuum
+    collects once old; a compaction that commits serves the new
+    version while the old one stays complete until vacuum's grace has
+    passed — never an entry pointing at a missing or half-written
+    directory, never a directory vanishing under a concurrent adopted
+    reader."""
+    import glob
 
     import northwind_warehouse_spark.plans.llm as L
-    from northwind_warehouse_spark.sources import index_store
+    from northwind_warehouse_spark.sources import versioned
 
     _patch_roots(monkeypatch, tmp_path)
     sf_dir = _write_corpus(tmp_path / "corpus")
-    idx_root = str(tmp_path / "idx")
-    corpus_path = f"{sf_dir}/embeddings.parquet"
+    vt = _index_table(str(tmp_path / "idx"), f"{sf_dir}/embeddings.parquet")
 
     rows0 = L.ann_ivfpq_from_index(spark, sf_dir).collect()
-    tag0 = index_store.read_manifest(idx_root)[corpus_path]
+    [v0] = vt.versions()
 
-    # window A: crash AFTER the new revision publishes, BEFORE the
-    # manifest retargets — old revision stays served, new dir orphans
-    real_vacuum = index_store.vacuum_superseded
+    def crash(*args, **kwargs):
+        raise OSError("injected crash at the log link")
 
-    def _crash_before_retarget(*a, **k):
-        raise RuntimeError("injected crash before manifest retarget")
-
-    monkeypatch.setattr(index_store, "vacuum_superseded", _crash_before_retarget)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        L.ivfpq_compact_index(spark, sf_dir)
-    monkeypatch.setattr(index_store, "vacuum_superseded", real_vacuum)
-    assert index_store.read_manifest(idx_root)[corpus_path] == tag0
-    assert index_store.is_published(idx_root, tag0)
+    with monkeypatch.context() as m:
+        m.setattr(os, "link", crash)
+        with pytest.raises(OSError, match="injected crash"):
+            L.ivfpq_compact_index(spark, sf_dir)
+    assert vt.versions() == [v0]
     assert L.ann_ivfpq_from_index(spark, sf_dir).collect() == rows0
-    orphan_a = f"{tag0}_r1"
-    assert index_store.is_published(idx_root, orphan_a), "orphan must be complete"
-    old = time.time() - 7200
-    os.utime(os.path.join(idx_root, orphan_a), (old, old))
-    assert orphan_a in index_store.gc_unreferenced(idx_root)
-    # the orphan's adopted catalog table is stale residue of the crash;
-    # a real restart has an empty catalog — mirror that here
-    spark.sql(f"DROP TABLE IF EXISTS nws_ivfpq_index_{orphan_a}")
+    [orphan] = glob.glob(os.path.join(vt.dir, "v=1", "*"))
+    old = time.time() - versioned.ORPHAN_AGE_S - 1
+    os.utime(orphan, (old, old))
+    assert vt.vacuum() == [] and not os.path.exists(orphan)
 
-    # window B: a crash (or just a pause) AFTER the manifest retargets
-    # — under the retention grace this is the NORMAL post-vacuum state:
-    # new revision served, old revision RETAINED complete until the
-    # age-guarded gc collects it
     L.ivfpq_compact_index(spark, sf_dir)
-    tag1 = index_store.read_manifest(idx_root)[corpus_path]
-    assert tag1 == f"{tag0}_r1" and index_store.is_published(idx_root, tag1)
+    _, v1 = vt.versions()
     assert L.ann_ivfpq_from_index(spark, sf_dir).collect() == rows0
-    assert index_store.is_published(idx_root, tag0), (
-        "superseded revision must stay complete through the grace window"
+    superseded_at = datetime.fromisoformat(v1["committed_at"])
+    assert vt.vacuum(older_than=superseded_at) == [] and os.path.isdir(v0["path"]), (
+        "the grace must count from the supersession, not from the publish"
     )
-    assert index_store.gc_unreferenced(idx_root, older_than_s=3600) == [], (
-        "grace clock must restart at supersession, not publish, time"
-    )
-    os.utime(os.path.join(idx_root, tag0), (old, old))
-    assert tag0 in index_store.gc_unreferenced(idx_root)
-    spark.sql(f"DROP TABLE IF EXISTS nws_ivfpq_index_{tag1}")
+    assert vt.vacuum(older_than=_hours(0.01)) == [0] and os.path.isdir(v1["path"])
+    spark.sql(f"DROP TABLE IF EXISTS {L._ivfpq_table(spark, sf_dir)[1]}")
 
 
 def test_concurrent_reader_of_superseded_tag_survives_vacuum(spark, tmp_path, monkeypatch):
     """Round-10 verdict #2 'done' criterion, two sessions: a reader
-    process resolves the manifest to the CURRENT tag, then the writer
-    compacts (publishing a new revision and vacuuming the old tag),
-    and ONLY THEN does the reader scan the directory it adopted — the
-    scan must succeed, because vacuum retains superseded directories
-    under the gc retention grace instead of rmtree'ing them out from
-    under in-flight readers. Once aged past the grace, gc collects."""
-    import time
-
+    process resolves the index's latest version, then the writer
+    compacts (committing the next version) and vacuums, and ONLY THEN
+    does the reader scan the directory it resolved — the scan must
+    succeed, because vacuum ages a version from its supersession and
+    keeps it through the grace. Once the grace has passed, vacuum
+    collects it."""
     import northwind_warehouse_spark.plans.llm as L
-    from northwind_warehouse_spark.sources import index_store
 
     _patch_roots(monkeypatch, tmp_path)
     sf_dir = _write_corpus(tmp_path / "corpus")
     idx_root = str(tmp_path / "idx")
     corpus_path = f"{sf_dir}/embeddings.parquet"
+    vt = _index_table(idx_root, corpus_path)
 
-    L.ann_ivfpq_from_index(spark, sf_dir).collect()  # build + publish
-    tag0 = index_store.read_manifest(idx_root)[corpus_path]
+    L.ann_ivfpq_from_index(spark, sf_dir).collect()  # build + commit
+    [v0] = vt.versions()
 
     flags = tmp_path / "flags"
     flags.mkdir()
     reader_script = (
-        "import glob, os, sys, time\n"
+        "import os, sys, time\n"
         "import duckdb\n"
         "from northwind_warehouse_spark.sources import index_store\n"
         "idx_root, key, flags = sys.argv[1], sys.argv[2], sys.argv[3]\n"
-        "tag = index_store.read_manifest(idx_root)[key]\n"
-        "adopted_dir = os.path.join(idx_root, tag)\n"
+        "adopted_dir = index_store.table(None, idx_root, key).latest()['path']\n"
         # atomic flag write: the parent polls for this file's EXISTENCE,
         # and a plain open(...).write() creates it before the buffered
         # content is flushed at close — under suite load the parent can
         # read an empty string (observed r13). Write-then-rename closes
         # that window.
         "with open(os.path.join(flags, 'adopted.tmp'), 'w') as fh:\n"
-        "    fh.write(tag)\n"
+        "    fh.write(adopted_dir)\n"
         "os.replace(os.path.join(flags, 'adopted.tmp'), os.path.join(flags, 'adopted'))\n"
         "for _ in range(600):\n"
         "    if os.path.exists(os.path.join(flags, 'vacuumed')):\n"
@@ -560,7 +497,7 @@ def test_concurrent_reader_of_superseded_tag_survives_vacuum(spark, tmp_path, mo
         "n = duckdb.sql(\n"
         "    f\"SELECT count(*) FROM read_parquet('{adopted_dir}/**/*.parquet')\"\n"
         ").fetchone()[0]\n"
-        "print(f'READER::{tag}::{n}')\n"
+        "print(f'READER::{adopted_dir}::{n}')\n"
     )
     proc = subprocess.Popen(
         [sys.executable, "-c", reader_script, idx_root, corpus_path, str(flags)],
@@ -572,30 +509,31 @@ def test_concurrent_reader_of_superseded_tag_survives_vacuum(spark, tmp_path, mo
                 break
             time.sleep(0.1)
         else:
-            pytest.fail("reader never adopted a tag")
-        assert (flags / "adopted").read_text() == tag0
+            pytest.fail("reader never resolved a version")
+        assert (flags / "adopted").read_text() == v0["path"]
 
-        # writer: compact → new revision published, tag0 vacuumed
-        out = L.ivfpq_compact_index(spark, sf_dir)
-        assert out["old_tag"] == tag0 and out["new_tag"] == f"{tag0}_r1"
+        # writer: compact → next version committed, then vacuum with a
+        # grace counted from that commit; the reader resolved v0 before it
+        L.ivfpq_compact_index(spark, sf_dir)
+        superseded_at = datetime.fromisoformat(vt.latest()["committed_at"])
+        assert vt.vacuum(older_than=superseded_at) == []
         (flags / "vacuumed").touch()
 
         stdout, stderr = proc.communicate(timeout=120)
         assert proc.returncode == 0, f"reader died:\n{stdout[-2000:]}\n{stderr[-2000:]}"
         line = next(l for l in stdout.splitlines() if l.startswith("READER::"))
-        _, read_tag, n_rows = line.split("::")
-        assert read_tag == tag0 and int(n_rows) > 0, (
-            "reader's post-vacuum scan of the superseded dir failed"
+        _, read_dir, n_rows = line.split("::")
+        assert read_dir == v0["path"] and int(n_rows) > 0, (
+            "reader's post-vacuum scan of the superseded version failed"
         )
     finally:
         if proc.poll() is None:
             proc.kill()
 
-    # aged past the grace, the superseded revision is collectable
-    old_t = time.time() - 7200
-    os.utime(os.path.join(idx_root, tag0), (old_t, old_t))
-    assert tag0 in index_store.gc_unreferenced(idx_root)
-    spark.sql(f"DROP TABLE IF EXISTS nws_ivfpq_index_{tag0}_r1")
+    # once the grace has passed, the superseded version is collectable
+    assert vt.vacuum(older_than=_hours(0.01)) == [0]
+    assert not os.path.exists(v0["path"])
+    spark.sql(f"DROP TABLE IF EXISTS {L._ivfpq_table(spark, sf_dir)[1]}")
 
 
 def test_maintenance_is_a_generation_and_registered_serving_stays_build_identical(
@@ -603,11 +541,11 @@ def test_maintenance_is_a_generation_and_registered_serving_stays_build_identica
 ):
     """Round-10 verdict #3 'done' criterion, against the PRODUCTION
     root layout (tmp-monkeypatched roots, same code path): a
-    maintain-stream run must (a) bump the manifest GENERATION, (b) land
+    maintain-stream run must (a) append a new GENERATION, (b) land
     its appends in the gen=<N> partition so the maintained view serves
     them, and (c) leave the REGISTERED serving query oracle-green —
-    the stored tag's gen-0 content remains exactly build(corpus file),
-    which is what the DuckDB oracle computes."""
+    the stored version's gen-0 content remains exactly build(corpus
+    file), which is what the DuckDB oracle computes."""
     from pyspark.sql import functions as F
 
     import __spark_entry__ as E
@@ -617,16 +555,11 @@ def test_maintenance_is_a_generation_and_registered_serving_stays_build_identica
     from tests.oracle_util import compare
 
     _patch_roots(monkeypatch, tmp_path)
-    idx_root = str(tmp_path / "idx")
     sf_dir = SF_SMOKE  # real corpus: the oracle needs every table
-    corpus_path = f"{sf_dir}/embeddings.parquet"
-    # the identity tag is root-independent: evict any catalog entry an
-    # earlier test registered against the production root, so this
-    # test's index really lives under the patched root
-    spark.sql(f"DROP TABLE IF EXISTS nws_ivfpq_index_{L._ivfpq_identity_tag(sf_dir)}")
+    vt = _index_table(str(tmp_path / "idx"), f"{sf_dir}/embeddings.parquet")
 
     base_rows = L._ivfpq_index(spark, sf_dir).count()
-    assert index_store.manifest_generation(idx_root, corpus_path) == 0
+    assert index_store.generation(vt.latest()) == 0
 
     e = load(spark, sf_dir, "embeddings")
     new = e.filter(F.col("vec_id") >= 490).select(
@@ -641,14 +574,14 @@ def test_maintenance_is_a_generation_and_registered_serving_stays_build_identica
     q.awaitTermination(120)
     n_new = new.count()
 
-    # (a) the manifest records the maintenance run
+    # (a) the served version holds the maintenance run's generation
     assert gen == 1
-    assert index_store.manifest_generation(idx_root, corpus_path) == 1
+    assert index_store.generation(vt.latest()) == 1
     # (b) the maintained view serves the appends; gen 0 is untouched
     assert L._ivfpq_index_maintained(spark, sf_dir).count() == base_rows + n_new
     assert L._ivfpq_index(spark, sf_dir).count() == base_rows
     # ...and the appended rows are in the gen=1 partition
-    tbl, _ = L._ivfpq_table(spark, sf_dir)
+    tbl, name = L._ivfpq_table(spark, sf_dir)
     assert tbl.filter(F.col("gen") == 1).count() == n_new
     # (c) the registered query still matches its oracle AFTER maintenance
     probs = compare(
@@ -657,22 +590,26 @@ def test_maintenance_is_a_generation_and_registered_serving_stays_build_identica
         sf_dir,
     )
     assert not probs, f"registered serving diverged after maintenance: {probs}"
-    spark.sql(f"DROP TABLE IF EXISTS {_current_index_table(idx_root, corpus_path)}")
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
 def test_publish_refuses_planted_low_recall_index(spark, tmp_path, monkeypatch):
     """Round-10 verdict #5 'done' criterion: the publish-time accept
     gate must REFUSE an index whose assignment is broken (every corpus
     vector mis-filed into a cell no query probes ⇒ candidate recall 0)
-    — nothing published, no _SUCCESS, no manifest entry — while the
-    production publish (the other tests in this file) stays green."""
+    — nothing written, no version committed, no table registered —
+    while the production publish (the other tests in this file) stays
+    green."""
+    import glob
+
     import northwind_warehouse_spark.operators.similarity as sim
     import northwind_warehouse_spark.plans.llm as L
     from pyspark.sql import functions as F
 
     _patch_roots(monkeypatch, tmp_path)
     sf_dir = _write_corpus(tmp_path / "corpus")
-    idx_root = str(tmp_path / "idx")
+    vt = _index_table(str(tmp_path / "idx"), f"{sf_dir}/embeddings.parquet")
+    tables_before = {t.name for t in spark.catalog.listTables()}
 
     real = sim.ivf_assign_two_level
 
@@ -682,15 +619,10 @@ def test_publish_refuses_planted_low_recall_index(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(L.sim, "ivf_assign_two_level", mis_assign)
     with pytest.raises(L.IndexRecallGateError, match="publish refused"):
         L._ivfpq_table(spark, sf_dir)
-    # nothing leaked: no published artifact, no manifest entry
-    from northwind_warehouse_spark.sources import index_store
-
-    assert index_store.read_manifest(idx_root).get(f"{sf_dir}/embeddings.parquet") is None
-    tags = os.listdir(idx_root) if os.path.isdir(idx_root) else []
-    assert not any(index_store.is_published(idx_root, t) for t in tags), tags
-    assert not spark.catalog.tableExists(
-        f"nws_ivfpq_index_{L._ivfpq_identity_tag(sf_dir)}"
-    )
+    # nothing leaked: no version, no written files, no catalog table
+    assert vt.versions() == []
+    assert glob.glob(os.path.join(vt.dir, "v=*", "*")) == []
+    assert {t.name for t in spark.catalog.listTables()} == tables_before
 
 
 def test_gate_recall_matches_sweep_measurement(spark, tmp_path, monkeypatch):
@@ -734,8 +666,8 @@ def test_gate_recall_matches_sweep_measurement(spark, tmp_path, monkeypatch):
 
 
 # Session A: build + publish, absorb a stream of new vectors into the
-# stored table as a manifest-recorded GENERATION, compact bucket-locally
-# (publishing a revision tag), serve. Session B (fresh process): adopt
+# stored table as a GENERATION, compact bucket-locally (committing the
+# next version), serve. Session B (fresh process): adopt
 # everything with zero builder invocations and serve the SAME results —
 # registered serving from gen 0, maintained serving including the
 # appends.
@@ -751,7 +683,6 @@ sim.pq_codebook = lambda *a, **k: (calls.__setitem__("pq_codebook", calls["pq_co
 from northwind_warehouse_spark.session import get_spark
 spark = get_spark("nws-lifecycle", shuffle_partitions=8)
 spark.sparkContext.setLogLevel("ERROR")
-from northwind_warehouse_spark.sources import index_store
 idx_root = L._IVFPQ_ROOT
 out = {"calls": calls}
 if phase == "build_absorb_compact":
@@ -781,8 +712,8 @@ spark.stop()
 def test_full_lifecycle_outlives_session_absorbs_stream_serves_multiprobe(tmp_path):
     """The round-8 verdict's closing sentence, as one flow: the stored
     artifact OUTLIVES the session, ABSORBS the stream (maintain appends
-    as a manifest-recorded generation), CLEANS UP after itself
-    (compaction into a crash-safe revision tag), and SERVES MULTI-PROBE
+    as a generation), CLEANS UP after itself (compaction committed as
+    the next version), and SERVES MULTI-PROBE
     — a fresh process then adopts all of it with zero builder
     invocations, sees the same maintained row count, and returns the
     identical multi-probe results (gen-0 serving, so maintenance never
@@ -803,7 +734,7 @@ def test_full_lifecycle_outlives_session_absorbs_stream_serves_multiprobe(tmp_pa
     a = run("build_absorb_compact")
     assert a["calls"]["train"] == 1 and a["calls"]["pq_codebook"] == 1, a["calls"]
     assert a["gen"] == 1
-    assert a["compact"]["new_tag"].endswith("_r1"), a["compact"]
+    assert a["compact"]["new_table"] != a["compact"]["old_table"], a["compact"]
     assert a["maintained_rows"] > a["gen0_rows"] > 0
     assert len(a["rows"]) > 0
 
@@ -817,54 +748,37 @@ def test_full_lifecycle_outlives_session_absorbs_stream_serves_multiprobe(tmp_pa
     assert b["gen0_rows"] == a["gen0_rows"]
 
 
-def test_gc_unreferenced_respects_manifest_and_age(tmp_path):
-    """gc_unreferenced removes only artifact dirs that are BOTH
-    unreferenced by the manifest AND older than the age guard — a
-    mid-flight publisher (fresh dir, or a .build temp) is never
-    collected."""
-    import time
-
-    from northwind_warehouse_spark.sources import index_store
-
-    root = str(tmp_path / "store")
-    for tag in ("current", "orphan_old", "orphan_fresh"):
-        os.makedirs(os.path.join(root, tag))
-        Path(root, tag, "_SUCCESS").touch()
-    os.makedirs(os.path.join(root, "t.build-123"))
-    index_store.vacuum_superseded(root, "corpus", "current")
-    old = time.time() - 7200
-    os.utime(os.path.join(root, "orphan_old"), (old, old))
-    os.utime(os.path.join(root, "t.build-123"), (old, old))
-
-    removed = index_store.gc_unreferenced(root)
-    assert sorted(removed) == ["orphan_old", "t.build-123"]
-    left = sorted(os.listdir(root))
-    assert "current" in left and "orphan_fresh" in left
-    assert "orphan_old" not in left and "t.build-123" not in left
-
-
 def test_manifest_invariants_under_random_publish_vacuum_sequences(tmp_path):
-    """Property: under ANY interleaving of publish+vacuum+generation
-    bumps across keys, (a) the manifest always points each key at its
-    latest tag, (b) every referenced tag's artifact exists and is
-    published, (c) generations bump monotonically per key and reset on
-    supersede, (d) no referenced artifact is ever removed — by vacuum
-    OR by the age-guarded gc — and (e) gc leaves exactly the referenced
-    set among old directories."""
+    """Property, with an artifact's log as its manifest: under ANY
+    interleaving of publishes and vacuums across keys, (a) each key's
+    latest version holds the identity last published for it, (b) a
+    publish builds only when that identity is not the latest, (c) every
+    logged version's files exist — vacuum drops an entry before its
+    files — and (d) a vacuum whose grace has not passed drops nothing,
+    while one past it leaves only each key's latest version."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
+    from pyspark.sql.types import StructType
 
     from northwind_warehouse_spark.sources import index_store
+
+    class Built:  # the part of a DataFrame ``publish`` touches
+        schema = StructType([])
+
+        def unpersist(self):
+            pass
+
+    def write(_df, path):
+        os.makedirs(path)
 
     ops = st.lists(
         st.tuples(
             st.sampled_from(["k1", "k2", "k3"]),
-            st.integers(0, 9),
-            st.booleans(),  # also bump a generation after this publish?
+            st.integers(0, 3),
+            st.sampled_from([None, "inside", "past"]),  # vacuum after this publish?
         ),
         min_size=1, max_size=25,
     )
-
     counter = [0]
 
     @settings(max_examples=40, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
@@ -873,31 +787,19 @@ def test_manifest_invariants_under_random_publish_vacuum_sequences(tmp_path):
         counter[0] += 1
         root = str(tmp_path / f"store{counter[0]}")
         latest: dict[str, str] = {}
-        gens: dict[str, int] = {}
-        for key, n, bump in seq:
-            tag = f"{key}-t{n}"
-            # publish (the mkdir+_SUCCESS state publish_parquet promotes to)
-            os.makedirs(os.path.join(root, tag), exist_ok=True)
-            Path(root, tag, "_SUCCESS").touch()
-            if latest.get(key) != tag:
-                index_store.vacuum_superseded(root, key, tag)
-                gens[key] = 0  # a fresh tag starts un-maintained
-            latest[key] = tag
-            if bump:
-                gens[key] = index_store.bump_generation(root, key)
-            manifest = index_store.read_manifest(root)
-            assert manifest == latest
-            for k2, t2 in manifest.items():
-                assert index_store.is_published(root, t2), (t2, sorted(os.listdir(root)))
-                assert index_store.manifest_generation(root, k2) == gens[k2]
-        # age everything, then gc: referenced tags must survive,
-        # everything else must go
-        for name in os.listdir(root):
-            p = os.path.join(root, name)
-            if os.path.isdir(p):
-                os.utime(p, (1, 1))
-        index_store.gc_unreferenced(root, older_than_s=3600)
-        dirs = {n for n in os.listdir(root) if os.path.isdir(os.path.join(root, n))}
-        assert dirs == set(latest.values())
+        for key, n, vacuum in seq:
+            vt, ident, builds = index_store.table(None, root, key), f"{key}-t{n}", []
+            index_store.publish(vt, ident, lambda: builds.append(1) or Built(), write)
+            assert builds == ([] if latest.get(key) == ident else [1])
+            latest[key] = ident
+            if vacuum == "inside":
+                assert vt.vacuum(older_than=_hours(-1)) == []
+            elif vacuum == "past":
+                vt.vacuum(older_than=_hours(0.01))
+                assert len(vt.versions()) == 1
+            for k2, i2 in latest.items():
+                t2 = index_store.table(None, root, k2)
+                assert t2.latest()["identity"] == i2
+                assert all(os.path.isdir(v["path"]) for v in t2.versions())
 
     run()

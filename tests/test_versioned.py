@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
+from datetime import datetime, timedelta, timezone
 
 import pytest
 from pyspark.sql import functions as F
@@ -83,6 +83,22 @@ def test_vacuum_retention(spark, tmp_path):
     # keep_last=0 is clamped: the newest version can never be vacuumed
     assert t.vacuum(keep_last=0) == [2]
     assert [m["version"] for m in t.versions()] == [3]
+
+
+def test_vacuum_ages_a_version_from_when_it_was_superseded(spark, tmp_path):
+    """``older_than`` ages a version by its successor's commit, the
+    moment it stopped being the latest. A version committed two hours
+    ago and superseded just now may have a reader that resolved it as
+    the latest a moment ago, so a one-hour grace keeps it."""
+    from northwind_warehouse_spark.sources.versioned import VersionedTable
+
+    now = datetime.now(timezone.utc)
+    t = VersionedTable(spark, str(tmp_path), "t")
+    t.write(spark.range(3), committed_at=now - timedelta(hours=2))
+    t.write(spark.range(5), committed_at=now)
+    assert t.vacuum(keep_last=1, older_than=now - timedelta(hours=1)) == []
+    assert t.read(version=0).count() == 3
+    assert t.vacuum(keep_last=1, older_than=now + timedelta(seconds=1)) == [0]
 
 
 def test_moved_lake_reads_and_vacuums(spark, tmp_path):

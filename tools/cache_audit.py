@@ -103,7 +103,7 @@ def main() -> None:
     # of serving dangling unpersisted handles
     import northwind_warehouse_spark.plans.llm as L
 
-    for cache in (L._TRAINED_CBS, L._FLAT_CENTS, L._PQ_CBS, L._PROBE_ROUTINGS):
+    for cache in (L._STORED_ARTIFACTS, L._FLAT_CENTS, L._PROBE_ROUTINGS):
         cache.clear()
     wall3, snap3 = run_pass(spark, registry, release_each=True)
     print("pass 3 (release-after-each):", wall3, "s", snap3)

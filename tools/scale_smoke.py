@@ -42,7 +42,7 @@ def _drop_session_cache(spark) -> None:
     spark.catalog.clearCache()
     import northwind_warehouse_spark.plans.llm as L
 
-    for cache in (L._TRAINED_CBS, L._FLAT_CENTS, L._PQ_CBS, L._PROBE_ROUTINGS):
+    for cache in (L._STORED_ARTIFACTS, L._FLAT_CENTS, L._PROBE_ROUTINGS):
         cache.clear()
     try:
         spark.sparkContext._jvm.System.gc()
@@ -243,11 +243,11 @@ def measure_maintained_serving(spark, dirs: dict[int, str]) -> dict:
     serving number. Per factor: build the stored index under a PRIVATE
     root (isolation — the shared /tmp store and its catalog tables are
     untouched), run N micro-batch appends through the PRODUCTION
-    maintain entry (ivfpq_maintain_from_stream — each bumps the
-    manifest generation and lands one file per (batch, bucket)),
-    measure maintained-view serving FRAGMENTED, compact
-    (ivfpq_compact_index → one file per (gen, bucket) under a new
-    revision tag), measure again. Min-of-2 warm, same semantics as the
+    maintain entry (ivfpq_maintain_from_stream — each appends one
+    generation and lands one file per (batch, bucket)), measure
+    maintained-view serving FRAGMENTED, compact (ivfpq_compact_index →
+    one file per (gen, bucket), committed as the index's next version),
+    measure again. Min-of-2 warm, same semantics as the
     graded tail's stored-index rows. Round 12 extends the table to 30×
     (r11 verdict #3): the fragmentation regime's file count grows with
     both corpus size and generation count — 30× × 8 generations is
@@ -269,12 +269,6 @@ def measure_maintained_serving(spark, dirs: dict[int, str]) -> dict:
     try:
         for factor in (1, 10, 30):
             sf_dir = dirs[factor]
-            # the identity tag is root-independent: evict catalog
-            # entries an earlier pass registered against the shared
-            # root so this section's index lives under the private one
-            spark.sql(
-                f"DROP TABLE IF EXISTS nws_ivfpq_index_{L._ivfpq_identity_tag(sf_dir)}"
-            )
 
             def t(fn, n=2):
                 best = None
@@ -337,12 +331,16 @@ def measure_cold_serving(spark, sf_dir: str) -> float:
     import northwind_warehouse_spark.plans.llm as L
 
     path = f"{sf_dir.rstrip('/')}/embeddings.parquet"
-    for cache in (L._TRAINED_CBS, L._FLAT_CENTS, L._PQ_CBS):
-        for key in [k for k in cache if k[0] == path]:
-            try:
-                cache.pop(key)[1].unpersist(True)
-            except Exception:
-                pass
+    for key in [k for k in L._STORED_ARTIFACTS if k[1] == path]:
+        try:
+            L._STORED_ARTIFACTS.pop(key)[2].unpersist(True)
+        except Exception:
+            pass
+    for key in [k for k in L._FLAT_CENTS if k[0] == path]:
+        try:
+            L._FLAT_CENTS.pop(key)[1].unpersist(True)
+        except Exception:
+            pass
     for key in [k for k in L._PROBE_ROUTINGS if k[0] == path]:
         try:
             old = L._PROBE_ROUTINGS.pop(key)[1]
@@ -350,11 +348,7 @@ def measure_cold_serving(spark, sf_dir: str) -> float:
             old[1].unpersist(True)
         except Exception:
             pass
-    ident = L._ivfpq_identity_tag(sf_dir)
-    for row in spark.sql("SHOW TABLES").collect():
-        t = row.tableName
-        if t.startswith("nws_ivfpq_index_") and t[len("nws_ivfpq_index_"):].startswith(ident):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+    spark.sql(f"DROP TABLE IF EXISTS {L._ivfpq_table(spark, sf_dir)[1]}")
     t0 = time.perf_counter()
     L.ann_ivfpq_from_index(spark, sf_dir).count()
     return round(time.perf_counter() - t0, 2)
@@ -1226,10 +1220,10 @@ def main() -> None:
         "The maintained reader (gen 0 ∪ streamed appends) measured as a",
         "serving number, not just lifecycle tests: per factor, 8",
         "micro-batch appends through ivfpq_maintain_from_stream (each",
-        "bumps the manifest generation and lands one file per",
+        "appends one generation and lands one file per",
         "(batch, bucket) — the fragmentation regime), then",
-        "ivfpq_compact_index (one file per (gen, bucket), new revision",
-        "tag, retention-grace vacuum). Min-of-2 warm, private index",
+        "ivfpq_compact_index (one file per (gen, bucket), committed as",
+        "the index's next version). Min-of-2 warm, private index",
         "root; gen-0 column = the registered serving wall for",
         "comparison.",
         "",
