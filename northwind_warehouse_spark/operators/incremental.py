@@ -83,23 +83,37 @@ def scd2_fold_commit(vt: VersionedTable, changes: DataFrame, spec: dict) -> int 
     """Fold the change rows after ``vt``'s committed watermark into its
     SCD2 dimension (``spec``: the keyword arguments of ``scd2_merge``)
     and commit it with the newest change ``ts`` as its watermark in one
-    log entry; returns the new version id. The slice's ``max(ts)`` is
-    also its emptiness check: a slice with nothing after the watermark
-    commits nothing. A fold that loses its version id re-folds the rows
-    after the winner's watermark on the winner's dimension."""
+    log entry; returns the new version id. The dim is partitioned by
+    ``is_active``: a fold reads and rewrites only the active slice, and
+    the closed history carries forward as links, with the versions this
+    fold closed added beside it (a dim committed unpartitioned is
+    rewritten whole once). The slice's ``max(ts)`` is also its
+    emptiness check: a slice with nothing after the watermark commits
+    nothing. When its ``min(ts)`` is after the watermark too, the slice
+    is folded unfiltered, so a steady batch's plan holds no watermark
+    literal and reuses the generated code of the batch before it. A
+    fold that loses its version id re-folds the rows after the winner's
+    watermark on the winner's dimension."""
     ts = spec["ts_col"]
     changes = changes.select(*spec["key_cols"], ts, *spec["attr_cols"], *spec.get("tiebreak_cols", ()))
     # any non-empty slice after a watermark holds the overall newest ts
-    new_hwm = changes.agg(F.max(ts)).collect()[0][0]
+    oldest, newest = changes.agg(F.min(ts), F.max(ts)).collect()[0]
 
-    def fold(dim: DataFrame | None, entry: dict | None) -> DataFrame | None:
+    def fold(dim: DataFrame | None, entry: dict | None) -> DataFrame | tuple | None:
         hwm = _committed_watermark(entry)
-        if new_hwm is None or (hwm is not None and naive_utc(new_hwm) <= hwm):
+        if newest is None or (hwm is not None and naive_utc(newest) <= hwm):
             return None
-        rows = high_watermark_filter(changes, ts, hwm or EPOCH_LOW)
-        return scd2_merge(dim, rows, **spec) if dim is not None else scd2_from_change_stream(rows, **spec)
+        if hwm is None or naive_utc(oldest) > hwm:
+            rows = changes.filter(F.col(ts).isNotNull())
+        else:
+            rows = high_watermark_filter(changes, ts, hwm)
+        if dim is None:
+            return scd2_from_change_stream(rows, **spec)
+        if not os.path.isdir(os.path.join(entry["path"], "is_active=Y")):  # an unpartitioned dim
+            return scd2_merge(dim, rows, **spec)
+        return scd2_merge(dim.filter(F.col("is_active") == "Y"), rows, **spec), ["Y"]
 
-    return vt.update(fold, watermark=new_hwm)
+    return vt.update(fold, partition_by=("is_active",), watermark=newest)
 
 
 def incremental_merge_by_key(

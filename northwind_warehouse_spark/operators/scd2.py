@@ -36,6 +36,7 @@ def scd2_from_change_stream(
     attr_cols: Sequence[str],
     tiebreak_cols: Sequence[str] = (),
     sk_name: str = "sk",
+    prior_version: str | None = None,
 ) -> DataFrame:
     """Collapse a change stream into SCD2 rows.
 
@@ -47,9 +48,16 @@ def scd2_from_change_stream(
          version back-dated to 1900-01-01, open end 2200-01-01) and the
          ``is_active`` flag;
       4. mint the surrogate key md5(key, effective_date).
+
+    ``prior_version`` (``scd2_merge``'s replay) names a column that is
+    set only on a key's stored active version: that row sorts before
+    any change at the same ``ts``, and the key's versions continue from
+    its number.
     """
     keys = [F.col(k) for k in key_cols]
     order = [F.col(ts_col)] + [F.col(c) for c in tiebreak_cols]
+    if prior_version is not None:
+        order.insert(1, F.col(prior_version).isNull())
     w_seq = Window.partitionBy(*keys).orderBy(*order)
 
     # dedup exact-duplicate (key, ts) rows via lag on the SAME window
@@ -66,8 +74,11 @@ def scd2_from_change_stream(
         .filter(F.col("_prev_hash").isNull() | (F.col("_prev_hash") != F.col("_row_hash")))
         .drop("_prev_hash")
     )
+    version_no = F.row_number().over(w_seq)
+    if prior_version is not None:
+        version_no += F.coalesce(F.first(prior_version).over(w_seq), F.lit(1)) - 1
     versioned = (
-        changed.withColumn("version_no", F.row_number().over(w_seq))
+        changed.withColumn("version_no", version_no)
         .withColumn(
             "effective_date",
             F.when(F.col("version_no") == 1, F.lit(EPOCH_LOW).cast("timestamp")).otherwise(
@@ -118,32 +129,36 @@ def scd2_merge(
     dbt incremental materialization on unique_key).
 
     Invariant: ``merge(build(old), new) == build(old ∪ new)`` — tested in
-    tests/test_operators.py (hypothesis, arbitrary splits). Only
-    partitions of *affected* keys are recomputed: untouched keys pass
-    through without a shuffle-the-world rebuild, which is what makes
-    this viable on a 100 TB dimension.
+    tests/test_properties.py (hypothesis, arbitrary splits). Only the
+    *active* version of each affected key is replayed: it and the new
+    changes are one windowed pass whose version numbers, effective dates
+    and surrogate keys continue from it. Closed versions and unaffected
+    keys pass through untouched, so ``existing`` may also be just the
+    active slice (``is_active = 'Y'``); the result then holds that
+    slice's new state plus the versions this merge closed.
 
     Discipline: incoming changes must carry timestamps at-or-after the
-    stored history's watermark (standard CDC ordering). A replayed
-    change at a timestamp *equal* to a stored version resolves in favor
-    of the stored version (its replay sorts first via null tiebreak).
+    stored history's watermark (standard CDC ordering). A change at a
+    timestamp *equal* to the active version's resolves in favor of the
+    stored version (its replay sorts first).
     """
-    affected = changes.select(*key_cols).distinct()
-    untouched = existing.join(affected, list(key_cols), "left_anti")
-    # replay the stored versions of affected keys as a change stream and
-    # fold the new changes in — one windowed pass, same as the first build
-    prior_changes = (
-        existing.join(affected, list(key_cols), "left_semi")
+    # a semi or anti join needs no distinct keys: no shuffle before the broadcast
+    affected = changes.select(*key_cols)
+    active = F.col("is_active") == "Y"
+    untouched = existing.filter(~active).unionByName(
+        existing.filter(active).join(affected, list(key_cols), "left_anti"))
+    replayed = (
+        existing.filter(active).join(affected, list(key_cols), "left_semi")
         .select(
             *key_cols,
             F.col("updated_at").alias(ts_col),
             *[F.col(c) for c in attr_cols],
             *[F.lit(None).cast(changes.schema[c].dataType).alias(c) for c in tiebreak_cols],
+            F.col("version_no").alias("_prior_version"),
         )
     )
-    new_changes = changes.select(*key_cols, ts_col, *attr_cols, *tiebreak_cols)
-    rebuilt = scd2_from_change_stream(
-        prior_changes.unionByName(new_changes),
-        key_cols, ts_col, hash_col, attr_cols, tiebreak_cols, sk_name,
-    )
+    new_changes = changes.select(*key_cols, ts_col, *attr_cols, *tiebreak_cols,
+                                 F.lit(None).cast("int").alias("_prior_version"))
+    rebuilt = scd2_from_change_stream(replayed.unionByName(new_changes), key_cols, ts_col, hash_col,
+                                      attr_cols, tiebreak_cols, sk_name, "_prior_version")
     return untouched.unionByName(rebuilt)

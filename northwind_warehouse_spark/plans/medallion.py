@@ -13,7 +13,7 @@ are hashed as epoch microseconds.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from northwind_warehouse_spark.catalog import load, table_rows
@@ -470,28 +470,30 @@ def oracle_snapshot_users() -> str:
 CUSTOMER_LOOKUP_COLS = ("customer_sk", "nation_name", "region_name")
 
 
-def lookup_customer(spark: SparkSession, sf_dir: str, rel: DataFrame, key: str) -> DataFrame:
+def lookup_customer(spark: SparkSession, sf_dir: str, rel: DataFrame, key: str,
+                    where: Column | None = None) -> DataFrame:
     """``rel`` with ``CUSTOMER_LOOKUP_COLS`` (``customer_sk``,
     ``nation_name``, ``region_name``) looked up in dim_customer by
     ``rel[key]``; a key with no customer falls back to sk(0) and 'Not
     Found' (reference: models/dwh/fact_order.sql,
     macros/fact_order_fail_lookup.sql). ``rel`` must not carry those
-    three columns."""
+    three columns, unless ``where`` is given: then only the rows where
+    it holds are looked up, and the others keep their own values. The
+    join's condition carries ``where``, so that is still one pass."""
     d = dim_customer(spark, sf_dir).select(
-        F.col("customer_id").alias("_cid"), *CUSTOMER_LOOKUP_COLS)
+        F.col("customer_id").alias("_cid"), *[F.col(c).alias(f"_{c}") for c in CUSTOMER_LOOKUP_COLS])
+    match = F.col(key) == F.col("_cid")
     # rows-gated hint (r13): dim_customer's optimizer estimate is
     # join-product-inflated (~1.6e12 bytes for 15k rows at sf0.1) and
     # declines the broadcast; the footer row count is exact.
-    return (
-        rel.join(maybe_broadcast_rows(d, table_rows(sf_dir, "customer") + 2),
-                 F.col(key) == F.col("_cid"), "left")
-        .drop("_cid")
-        .withColumns({
-            "customer_sk": F.coalesce("customer_sk", surrogate_key(F.lit(0))),
-            "nation_name": F.coalesce("nation_name", F.lit("Not Found")),
-            "region_name": F.coalesce("region_name", F.lit("Not Found")),
-        })
-    )
+    found = rel.join(maybe_broadcast_rows(d, table_rows(sf_dir, "customer") + 2),
+                     match if where is None else match & where, "left")
+    fallback = {"customer_sk": surrogate_key(F.lit(0)), "nation_name": F.lit("Not Found"),
+                "region_name": F.lit("Not Found")}
+    return found.withColumns({
+        c: F.coalesce(F.col(f"_{c}"), *([F.col(c)] if where is not None else []), fallback[c])
+        for c in CUSTOMER_LOOKUP_COLS
+    }).drop("_cid", *[f"_{c}" for c in CUSTOMER_LOOKUP_COLS])
 
 
 def fact_order_rows(orders: DataFrame) -> DataFrame:

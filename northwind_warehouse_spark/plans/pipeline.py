@@ -7,28 +7,34 @@ Flow per run (reference: models/* + macros/audit_management/*):
      writes nothing, and with schema-known loads (``catalog.read_parquet``)
      it starts no Spark job;
   2. dims: ``scd2_fold_commit`` reads the dim's high watermark from its
-     latest log entry, SCD2-merges the newer change rows (only affected
-     keys recomputed) and commits the new version together with its new
-     watermark (the newest change ``ts``) in one log entry; an empty
-     change slice commits no version;
+     latest log entry, SCD2-merges the newer change rows into the active
+     slice (only affected keys recomputed) and commits the new version
+     together with its new watermark (the newest change ``ts``) in one
+     log entry; the closed history carries forward as hard links, and
+     an empty change slice commits no version;
   3. facts: upsert the incoming orders by ``order_id``; they enter
      unresolved, and ONE customer lookup per batch resolves them
      together with the existing rows still on the dummy customer SK
      (reference: macros/fact_order_fail_lookup.sql); commit one version
-     (partitioned by order_year for pruning).
+     (partitioned by order_year for pruning) that rewrites only the
+     years the batch touches and links the others.
 
-Each stage has one commit point, its log entry, created put-if-absent:
-a crash anywhere before it leaves the table and its watermark as they
-were. Both stages are ``VersionedTable.update`` steps, so a stage that
-loses its version id to a concurrent writer (the streaming SCD2 sink
-on the same dim) rebuilds on the winner's version instead of dropping
-either commit. Idempotent: re-running with no new data commits no dim
-version and a fact version equal to the previous one, mirroring dbt's
-incremental materialization semantics.
+The dim and fact stages write different tables from the same staged
+relations, so ``run`` runs them at once: the dim stage in a thread of
+its own, the fact stage in the caller's. Each stage has one commit
+point, its log entry, created put-if-absent: a crash anywhere before it
+leaves the table and its watermark as they were. Both stages are
+``VersionedTable.update`` steps, so a stage that loses its version id
+to a concurrent writer (the streaming SCD2 sink on the same dim)
+rebuilds on the winner's version instead of dropping either commit.
+Idempotent: re-running with no new data commits no dim version and a
+fact version equal to the previous one, mirroring dbt's incremental
+materialization semantics.
 """
 
 from __future__ import annotations
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -73,31 +79,57 @@ class WarehousePipeline:
             partition_by=("order_year",))
 
     def refresh_failed_lookups(self, fact: DataFrame | None, orders: DataFrame,
-                               sf_dir: str) -> DataFrame:
+                               sf_dir: str) -> DataFrame | tuple[DataFrame, list[int]]:
         """``fact`` (None before the first commit) upserted by
         ``order_id`` with ``orders`` (``stg_orders`` rows), which enter
         unresolved; one customer lookup against ``sf_dir`` then resolves
         them together with the rows still on the dummy customer SK, e.g.
         after a late-arriving dimension load (reference:
         models/dwh/fact_order.sql, macros/fact_order_fail_lookup.sql).
-        Rows already resolved are kept as they are. Lazy: the caller's
-        commit runs it."""
+        Rows already resolved are kept as they are.
+
+        With a ``fact``, returns only the ``order_year`` partitions that
+        hold an incoming order, the row it replaces or an unresolved row,
+        and their years, so the commit carries the other years forward;
+        finding them is one Spark job. The rows themselves are lazy: the
+        caller's commit runs them."""
         lookup = medallion.CUSTOMER_LOOKUP_COLS
         incoming = medallion.fact_order_rows(
             orders.withColumns({c: F.lit(None).cast("string") for c in lookup})
         ).withColumn("order_year", F.year("order_date"))
-        if fact is not None:
-            incoming = incremental_merge_by_key(fact, incoming, ["order_id"])
         sk = F.col("customer_sk")
         unresolved = sk.isNull() | (sk == surrogate_key(F.lit(0)))
-        repaired = medallion.lookup_customer(
-            self.spark, sf_dir, incoming.filter(unresolved).drop(*lookup), "customer_id")
-        return incoming.filter(~unresolved).unionByName(repaired)
+        if fact is None:
+            return medallion.lookup_customer(self.spark, sf_dir, incoming, "customer_id", unresolved)
+        touched = (fact.filter(unresolved)
+                   .unionByName(fact.join(incoming.select("order_id"), "order_id", "left_semi"))
+                   .select("order_year").unionByName(incoming.select("order_year")))
+        years = sorted({r[0] for r in touched.collect()})
+        rows = incremental_merge_by_key(fact.filter(F.col("order_year").isin(years)), incoming, ["order_id"])
+        return medallion.lookup_customer(self.spark, sf_dir, rows, "customer_id", unresolved), years
 
     def run(self, sf_dir: str) -> None:
+        """One batch: staging, then the dim stage in an
+        ``InheritableThread`` (a caller's job group carries over) while
+        this thread runs the fact stage. A stage's error is raised once
+        both have ended."""
         orders, events = self.run_staging(sf_dir)
-        self.run_dim_users(events)
-        self.run_fact_orders(orders, sf_dir)
+        errors = []
+
+        def dim() -> None:
+            try:
+                self.run_dim_users(events)
+            except BaseException as e:  # re-raised by the caller's thread
+                errors.append(e)
+
+        thread = InheritableThread(target=dim)
+        thread.start()
+        try:
+            self.run_fact_orders(orders, sf_dir)
+        finally:
+            thread.join()
+        if errors:
+            raise errors[0]
 
     # -- reads -------------------------------------------------------------
 

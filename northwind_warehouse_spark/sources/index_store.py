@@ -31,7 +31,8 @@ log, as Delta Lake keeps one log per table:
   name carries the version's writer directory, so a session notices a
   newer version and never serves a table of another root.
 - **Compaction.** :func:`compact_bucketed_table` commits the next
-  version of the same identity, written bucket-locally from the latest.
+  version of the same identity, written bucket-locally from the latest,
+  unless every (generation, bucket) of the latest holds one file.
 - **Generations.** Streaming maintenance appends rows to the latest
   version under the frozen quantizer, into a ``gen=<N>`` partition;
   :func:`generation` is the highest one. Generation 0 stays exactly
@@ -53,6 +54,8 @@ from __future__ import annotations
 
 import hashlib
 import os
+import re
+from collections import Counter
 from collections.abc import Callable
 from contextlib import suppress
 from dataclasses import dataclass
@@ -96,6 +99,17 @@ def publish(
     finally:
         if df is not None:
             df.unpersist()
+
+
+# Spark's bucketed file names end in _<bucket id>, before any extension
+_BUCKET_FILE = re.compile(r".*_(\d+)(?:\..*)?$")
+
+
+def _files_per_bucket(path: str) -> Counter:
+    """Data files per (partition directory, bucket id) under ``path``."""
+    return Counter((os.path.relpath(root, path), int(m.group(1)))
+                   for root, _dirs, files in os.walk(path) for f in files
+                   if not f.startswith(("_", ".")) and (m := _BUCKET_FILE.match(f)))
 
 
 def generation(entry: dict) -> int:
@@ -190,12 +204,17 @@ def compact_bucketed_table(
     unreferenced writer directory ``vacuum`` collects) or the new one;
     a reader of the old version keeps its files until ``vacuum``'s
     grace has passed. Raises ``FileExistsError`` if another writer
-    commits first. Returns before/after file counts and the old/new
-    catalog table names."""
+    commits first. When no (generation, bucket) of the latest version
+    holds more than one file, there is nothing to compact and nothing
+    commits. Returns before/after file counts and the old/new catalog
+    table names (the same name when nothing committed)."""
     entry = vt.latest()
     if entry is None:
         raise KeyError(f"compact_bucketed_table: {vt.dir} holds no version")
     old = spec.serve(spark, table_prefix, entry)
+    if max(_files_per_bucket(entry["path"]).values(), default=0) <= 1:
+        n = _count_files(entry["path"])
+        return {"files_before": n, "files_after": n, "old_table": old, "new_table": old}
     conf = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
 
     def fill(path: str) -> None:

@@ -12,7 +12,10 @@ partition columns so downstream scans prune:
 ``write_table`` is a plain Spark overwrite; ``compact_table``,
 ``cluster_table`` and ``forget_keys`` commit a new version of a
 ``VersionedTable`` on its put-if-absent log (a race with another writer
-raises ``FileExistsError``). ``read_table_evolved`` fills columns that
+raises ``FileExistsError``). The first two rewrite the whole table;
+``forget_keys`` rewrites only the partitions holding a forgotten key
+and carries the others forward as hard links, the commit the warehouse
+pipeline's batches make too. ``read_table_evolved`` fills columns that
 old files lack, mirroring dbt's `on_schema_change: sync_all_columns`.
 """
 
@@ -43,14 +46,19 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def _rewrite(vt: VersionedTable, fill) -> None:
-    """Commit the version after ``vt``'s latest, written by ``fill(path,
-    rows, entry)`` from that version; its schema and watermark carry over."""
+def _latest(vt: VersionedTable) -> tuple[dict, DataFrame, datetime | None]:
+    """``vt``'s latest entry, its rows and its watermark."""
     entry = vt.latest()
     df = vt.read(entry and entry["version"])  # an empty table raises here
     wm = entry["watermark"]
-    vt.commit(entry["version"], lambda path: fill(path, df, entry), df.schema,
-              datetime.fromisoformat(wm) if wm else None)
+    return entry, df, datetime.fromisoformat(wm) if wm else None
+
+
+def _rewrite(vt: VersionedTable, fill) -> None:
+    """Commit the version after ``vt``'s latest, written by ``fill(path,
+    rows, entry)`` from that version; its schema and watermark carry over."""
+    entry, df, wm = _latest(vt)
+    vt.commit(entry["version"], lambda path: fill(path, df, entry), df.schema, wm)
 
 
 def _count_files(p: str) -> int:
@@ -103,27 +111,17 @@ def forget_keys(vt: VersionedTable, key_col: str, keys: list, partition_col: str
 
     The partition discovery is a pushdown-able filter + distinct over
     the partition column (reads just the affected column, prunes via
-    row-group stats); the new version hard-links the files of every
-    untouched partition — on a 100 TB lake a single-user delete rewrites
-    a few files, not the table. Returns the partitions rewritten (none
-    when no row matches: the version then only hard-links)."""
-    doomed, affected = F.col(key_col).isin(keys), []
-
-    def fill(path: str, df: DataFrame, entry: dict) -> None:
-        affected.extend(sorted(r[0] for r in df.filter(doomed).select(partition_col).distinct().collect()))
-        rewritten = {f"{partition_col}={v}" for v in affected}
-        if not rewritten <= set(os.listdir(entry["path"])):  # a value Spark escapes in a path
-            raise ValueError(f"partitions {sorted(rewritten)} are not all directories of {entry['path']}")
-        (df.filter(F.col(partition_col).isin(affected) & ~doomed)
-         .write.partitionBy(partition_col).parquet(path))
-        for root, _dirs, files in os.walk(entry["path"]):
-            rel = os.path.relpath(root, entry["path"])
-            if rel != "." and rel.split(os.sep)[0] not in rewritten:
-                os.makedirs(os.path.join(path, rel), exist_ok=True)
-                for f in files:
-                    os.link(os.path.join(root, f), os.path.join(path, rel, f))
-
-    _rewrite(vt, fill)
+    row-group stats); the new version is a carry-forward commit
+    (``VersionedTable.write(replace=...)``) that hard-links the files of
+    every untouched partition — on a 100 TB lake a single-user delete
+    rewrites a few files, not the table. Returns the partitions
+    rewritten (none when no row matches: the version then only
+    hard-links)."""
+    entry, df, wm = _latest(vt)
+    doomed = F.col(key_col).isin(keys)
+    affected = sorted(r[0] for r in df.filter(doomed).select(partition_col).distinct().collect())
+    vt.write(df.filter(F.col(partition_col).isin(affected) & ~doomed), partition_by=(partition_col,),
+             watermark=wm, base=entry["version"], replace=affected)
     return {"partitions_rewritten": len(affected), "partition_values": [str(v) for v in affected]}
 
 

@@ -23,7 +23,15 @@ one writer wins each ``n``; a loser removes its directory, and
 commit point: the data and its source ``watermark`` (the newest source
 timestamp absorbed, naive UTC ISO, or null) land together or not at
 all. Reads pass Spark the entry's ``schema``, so they infer nothing.
-Versions are full snapshots, like the reference's materialized tables.
+
+Every version's directory holds the whole table, so a version reads,
+time-travels and vacuums alone. A write that replaces only some
+partitions of its base commits carry-forward (``write(replace=...)``):
+Spark writes the replaced partitions, and every other data file of the
+base is hard-linked into the new directory, as Delta Lake rewrites
+only the files a commit touches. A link costs no bytes, and a linked
+file outlives the version it came from, so ``vacuum`` deletes
+directories as before.
 """
 
 from __future__ import annotations
@@ -43,6 +51,8 @@ from pyspark.sql.types import StructType
 
 # vacuum spares an unreferenced data directory younger than this: a writer may be filling it
 ORPHAN_AGE_S = 3600.0
+# characters Spark escapes in a partition directory name (ExternalCatalogUtils.escapePathName)
+_ESCAPED = set('"#%\'*/:=?\\{[]^\x7f') | {chr(c) for c in range(1, 32)}
 
 
 def _aware_utc(ts: datetime) -> datetime:
@@ -90,38 +100,61 @@ class VersionedTable:
         a directory of this writer's own; ``identity`` names what the data
         was built from (``index_store`` records its artifact's source).
         If another writer holds that version or ``vacuum`` dropped
-        ``base``, removes it and raises FileExistsError."""
+        ``base`` (``fill`` may find that too), removes the directory and
+        raises FileExistsError."""
         version = base + 1
         rel = os.path.join(f"v={version}", uuid.uuid4().hex)
         path = os.path.join(self.dir, rel)
-        fill(path)
         staged = os.path.join(path, "_entry.json")  # Spark skips "_" names
-        with open(staged, "w") as f:
-            json.dump({"version": version, "path": rel, "schema": schema.jsonValue(),
-                       "committed_at": _aware_utc(committed_at or datetime.now(timezone.utc)).isoformat(),
-                       "watermark": naive_utc(watermark).isoformat() if watermark else None,
-                       "identity": identity}, f)
-        os.makedirs(self.log, exist_ok=True)
         try:
+            fill(path)
+            with open(staged, "w") as f:
+                json.dump({"version": version, "path": rel, "schema": schema.jsonValue(),
+                           "committed_at": _aware_utc(committed_at or datetime.now(timezone.utc)).isoformat(),
+                           "watermark": naive_utc(watermark).isoformat() if watermark else None,
+                           "identity": identity}, f)
+            os.makedirs(self.log, exist_ok=True)
             if base >= 0 and not os.path.exists(os.path.join(self.log, f"{base}.json")):
                 raise FileExistsError(f"{self.dir}: version {base} and so {version} were vacuumed")
             os.link(staged, os.path.join(self.log, f"{version}.json"))
         except FileExistsError:
-            shutil.rmtree(path)
+            shutil.rmtree(path, ignore_errors=True)
             raise
         os.unlink(staged)
         return version
 
     def write(self, df: DataFrame, committed_at: datetime | None = None,
               partition_by: tuple[str, ...] = (), watermark: datetime | None = None,
-              base: int | None = None) -> int:
+              base: int | None = None, replace: list | None = None) -> int:
         """Commit ``df`` as a new immutable version, with the source
         ``watermark`` it has absorbed; returns its id. ``base`` is the
         version ``df`` was built from (-1: none); if another writer has
         committed after it, raises ``FileExistsError``. Without ``base``,
-        ``df`` follows whichever version is latest."""
+        ``df`` follows whichever version is latest.
+
+        ``replace`` (values of ``partition_by[0]``, rendered with
+        ``str`` as Spark names their directories) makes the commit
+        carry ``base`` forward: ``df`` holds the new rows of those
+        partitions, plus any rows it adds to other partitions, and
+        every data file of ``base`` (required) outside them is hard-linked
+        into the new version."""
+        if replace is not None:
+            if base is None or base < 0:
+                raise ValueError("a carry-forward write needs the version it carries forward")
+            skip = [f"{partition_by[0]}={v}" for v in replace]
+            escaped = [d for v, d in zip(replace, skip)
+                       if v is None or str(v) == "" or _ESCAPED & set(str(v))]
+            if escaped:
+                raise ValueError(f"partitions {escaped} are not all directories of version {base}: "
+                                 "Spark escapes their values in directory names")
+
         def fill(path: str) -> None:
             df.write.mode("errorifexists").partitionBy(*partition_by).parquet(path)
+            if replace is not None:
+                try:
+                    _link_partitions(self._entry(base)["path"], skip, path)
+                except FileNotFoundError:  # a newer version superseded base, and vacuum dropped it
+                    raise FileExistsError(f"{self.dir}: version {base} was vacuumed") from None
 
         while True:
             try:
@@ -131,20 +164,25 @@ class VersionedTable:
                 if base is not None:
                     raise
 
-    def update(self, build: Callable[[DataFrame | None, dict | None], DataFrame | None],
+    def update(self, build: Callable[[DataFrame | None, dict | None], DataFrame | tuple | None],
                partition_by: tuple[str, ...] = (), watermark: datetime | None = None) -> int | None:
         """Read-modify-commit: ``build(latest, entry)`` maps the latest
         version and its entry (None, None for an empty table) to the next
-        version, or to None to commit nothing. Returns the committed id.
-        A writer that loses the id rebuilds on the winner's version."""
+        version, to a ``(rows, values)`` pair that replaces the partitions
+        ``values`` of ``partition_by[0]`` with ``rows`` and carries the
+        rest forward (see ``write``), or to None to commit nothing.
+        Returns the committed id. A writer that loses the id rebuilds on
+        the winner's version."""
         while True:
             entry = self.latest()
-            df = build(self._read(entry) if entry else None, entry)
-            if df is None:
+            out = build(self._read(entry) if entry else None, entry)
+            if out is None:
                 return None
+            df, replace = out if isinstance(out, tuple) else (out, None)
             with suppress(FileExistsError):
                 return self.write(df, partition_by=partition_by, watermark=watermark,
-                                  base=entry["version"] if entry else -1)
+                                  base=entry["version"] if entry else -1,
+                                  replace=replace if entry else None)
 
     # -- read --------------------------------------------------------------
 
@@ -158,7 +196,9 @@ class VersionedTable:
         return self._read(self._entry(ids[-1] if version is None else version))
 
     def _read(self, entry: dict) -> DataFrame:
-        return self.spark.read.schema(StructType.fromJson(entry["schema"])).parquet(entry["path"])
+        schema = StructType.fromJson(entry["schema"])
+        # Spark puts partition columns last; the entry's order stays the table's
+        return self.spark.read.schema(schema).parquet(entry["path"]).select(*schema.fieldNames())
 
     def vacuum(self, keep_last: int = 1, older_than: datetime | None = None) -> list[int]:
         """Retention cleanup: drop the versions beyond the newest
@@ -199,6 +239,22 @@ class VersionedTable:
         if not eligible:
             raise KeyError(f"no version of {self.dir} existed at {ts.isoformat()}")
         return self._read(eligible[-1])
+
+
+def _link_partitions(base: str, skip: list[str], path: str) -> None:
+    """Hard-link every data file of the partitioned version directory
+    ``base`` into ``path``, except those under the top-level partition
+    directories named in ``skip``."""
+    for root, _dirs, files in os.walk(base):
+        rel = os.path.relpath(root, base)
+        if rel == "." and any(not f.startswith(("_", ".")) for f in files):
+            raise ValueError(f"{base} is not partitioned: nothing of it can carry forward")
+        if rel == "." or rel.split(os.sep)[0] in skip:
+            continue
+        os.makedirs(os.path.join(path, rel), exist_ok=True)
+        for f in files:
+            if not f.startswith(("_", ".")):  # Spark's rule: not data
+                os.link(os.path.join(root, f), os.path.join(path, rel, f))
 
 
 def table_diff(old: DataFrame, new: DataFrame, key_cols: list[str]) -> DataFrame:

@@ -13,6 +13,24 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
+def sf_dir_with(tmp_path, name: str, tables: dict) -> str:
+    """An sf dir ``tmp_path/name`` holding the pyarrow ``tables`` given
+    by name, beside links to SF_SMOKE's other tables."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    d = tmp_path / name
+    d.mkdir()
+    for f in os.listdir(SF_SMOKE):
+        t = f.removesuffix(".parquet")
+        if t in tables:
+            pq.write_table(tables[t], d / f)
+        else:
+            os.symlink(os.path.join(SF_SMOKE, f), d / f)
+    return str(d)
+
+
 def pytest_configure(config):
     config.addinivalue_line("markers", "slow: larger-SF oracle passes (deselect with -m 'not slow')")
 

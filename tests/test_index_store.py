@@ -327,6 +327,24 @@ def _append_generation(spark, table: str, gen: int, n_buckets: int, rows_df) -> 
     )
 
 
+def _fragment(spark, sf_dir: str) -> None:
+    """Append two one-row files to one bucket of generation 1 of the
+    stored index, so a compaction has a rewrite to do: an index that
+    already holds one file per (generation, bucket) compacts to no new
+    version."""
+    from pyspark.sql import functions as F
+
+    import northwind_warehouse_spark.plans.llm as L
+
+    _, table = L._ivfpq_table(spark, sf_dir)
+    _, nb = L._ivfpq_params(sf_dir)
+    one = spark.table(table).limit(1)
+    for i in (1, 2):
+        _append_generation(spark, table, 1, nb, one.select(
+            (F.col("vec_id") + F.lit(1_000_000 * i)).alias("vec_id"), "cell_id", "codes",
+            F.lit(1).alias("gen")))
+
+
 def test_compaction_restores_one_file_per_bucket(spark, tmp_path, monkeypatch):
     """The OPTIMIZE step of the maintenance story: streaming appends
     leave one file per (micro-batch, bucket); compact_bucketed_table
@@ -334,7 +352,7 @@ def test_compaction_restores_one_file_per_bucket(spark, tmp_path, monkeypatch):
     — committed as the NEXT version of the same identity (round-10
     verdict #2: no in-place directory swap) — with rows, generations,
     serving results, and the zero-Exchange bucket contract all
-    preserved."""
+    preserved. Compacting it again commits nothing."""
     from pyspark.sql import functions as F
 
     import northwind_warehouse_spark.plans.llm as L
@@ -390,6 +408,12 @@ def test_compaction_restores_one_file_per_bucket(spark, tmp_path, monkeypatch):
     }
     assert got_rows == want_rows
 
+    # compacting a compacted index adds no version and serves the same table
+    again = L.ivfpq_compact_index(spark, sf_dir)
+    assert again["old_table"] == again["new_table"] == new_table
+    assert again["files_before"] == again["files_after"] == stats["files_after"]
+    assert [v["version"] for v in vt.versions()] == [1]
+
     # bucket contract survives the rewrite: zero-Exchange cell-grain agg
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -427,6 +451,7 @@ def test_compaction_crash_windows_leave_servable_index(spark, tmp_path, monkeypa
 
     rows0 = L.ann_ivfpq_from_index(spark, sf_dir).collect()
     [v0] = vt.versions()
+    _fragment(spark, sf_dir)
 
     def crash(*args, **kwargs):
         raise OSError("injected crash at the log link")
@@ -471,6 +496,7 @@ def test_concurrent_reader_of_superseded_tag_survives_vacuum(spark, tmp_path, mo
 
     L.ann_ivfpq_from_index(spark, sf_dir).collect()  # build + commit
     [v0] = vt.versions()
+    _fragment(spark, sf_dir)
 
     flags = tmp_path / "flags"
     flags.mkdir()
@@ -690,11 +716,14 @@ if phase == "build_absorb_compact":
     from northwind_warehouse_spark.catalog import load
     L.ann_ivfpq_from_index(spark, sf_dir).collect()   # build + publish
     e = load(spark, sf_dir, "embeddings")
-    new = e.filter(F.col("vec_id") >= 90).select(
-        (F.col("vec_id") + F.lit(1_000_000)).alias("vec_id"), "embedding")
     src = f"{idx_root}/_stream_src"
-    new.coalesce(1).write.mode("overwrite").parquet(src)
-    incoming = spark.readStream.schema(new.schema).parquet(src)
+    # two micro-batches of the same vectors under new ids: each adds a
+    # file to the same buckets, so the compaction has a rewrite to do
+    for shift in (1_000_000, 2_000_000):
+        new = e.filter(F.col("vec_id") >= 90).select(
+            (F.col("vec_id") + F.lit(shift)).alias("vec_id"), "embedding")
+        new.coalesce(1).write.mode("append").parquet(src)
+    incoming = spark.readStream.schema(new.schema).option("maxFilesPerTrigger", 1).parquet(src)
     q, gen = L.ivfpq_maintain_from_stream(spark, sf_dir, incoming, f"{idx_root}/_ckpt")
     q.awaitTermination(120)
     out["gen"] = gen

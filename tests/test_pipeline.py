@@ -7,7 +7,7 @@ from datetime import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, sf_dir_with
 
 SPLIT_TS = "2024-01-15 00:00:00"
 
@@ -126,15 +126,129 @@ def _half_events_dir(tmp_path):
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    half = tmp_path / "half"
-    half.mkdir()
-    for f in os.listdir(SF_SMOKE):
-        if f != "events.parquet":
-            os.symlink(os.path.join(SF_SMOKE, f), half / f)
     ev = pq.read_table(os.path.join(SF_SMOKE, "events.parquet"))
-    pq.write_table(ev.filter(pc.less_equal(ev["ts"], pc.max(ev["ts"].slice(0, len(ev) // 2)))),
-                   half / "events.parquet")
-    return str(half)
+    return sf_dir_with(tmp_path, "half", {
+        "events": ev.filter(pc.less_equal(ev["ts"], pc.max(ev["ts"].slice(0, len(ev) // 2))))})
+
+
+def _two_batches(tmp_path):
+    """Two batch dirs: the first half of the events with the orders
+    before 2001, then the later events with the orders of 2001. Both
+    leave out customer 0's orders: its SK equals the dummy SK, so its
+    years would be re-resolved in every batch (ROADMAP item 6)."""
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    ev = pq.read_table(os.path.join(SF_SMOKE, "events.parquet"))
+    mid = pc.max(ev["ts"].slice(0, len(ev) // 2))
+    orders = pq.read_table(os.path.join(SF_SMOKE, "orders.parquet"))
+    orders = orders.filter(pc.not_equal(orders["o_custkey"], 0))
+    late = pc.equal(pc.year(orders["o_orderdate"]), 2001)
+    return (sf_dir_with(tmp_path, "first", {"events": ev.filter(pc.less_equal(ev["ts"], mid)),
+                                            "orders": orders.filter(pc.invert(late))}),
+            sf_dir_with(tmp_path, "second", {"events": ev.filter(pc.greater(ev["ts"], mid)),
+                                             "orders": orders.filter(late)}))
+
+
+def _inodes(path: str) -> dict[str, set[int]]:
+    """Inodes of the data files under each partition directory of ``path``."""
+    import os
+
+    return {d: {os.stat(os.path.join(root, f)).st_ino
+                for root, _dirs, files in os.walk(os.path.join(path, d))
+                for f in files if not f.startswith(("_", "."))}
+            for d in os.listdir(path) if "=" in d}
+
+
+def test_batch_commits_only_what_it_changes(spark, tmp_path):
+    """A batch's fact version hard-links the files of every order_year
+    it does not touch and rewrites the one it does; its dim version
+    keeps every closed-history file of the base, adds the versions the
+    batch closed, and rewrites only the active slice. Both tables equal
+    one build over both batches."""
+    from northwind_warehouse_spark.plans.medallion import fact_orders, scd2_users
+    from northwind_warehouse_spark.plans.pipeline import WarehousePipeline
+
+    first, second = _two_batches(tmp_path)
+    p = WarehousePipeline(spark, str(tmp_path / "lake"))
+    p.run(first)
+    fact0, dim0 = (_inodes(p._vt(t).latest()["path"]) for t in (p.FACT_ORDERS, p.DIM_USERS))
+    p.run(second)
+    fact1, dim1 = (_inodes(p._vt(t).latest()["path"]) for t in (p.FACT_ORDERS, p.DIM_USERS))
+
+    assert sorted(fact1) == sorted(fact0) + ["order_year=2001"]
+    for year in fact0:
+        assert fact1[year] == fact0[year], year
+    assert fact1["order_year=2001"]
+
+    assert sorted(dim0) == sorted(dim1) == ["is_active=N", "is_active=Y"]
+    assert dim0["is_active=N"] < dim1["is_active=N"]
+    assert dim1["is_active=Y"] and not dim1["is_active=Y"] & dim0["is_active=Y"]
+
+    assert _dim_rows(p.table(p.DIM_USERS)) == _dim_rows(scd2_users(spark, SF_SMOKE))
+    assert _fact_rows(p.table(p.FACT_ORDERS).drop("order_year")) == _fact_rows(
+        fact_orders(spark, SF_SMOKE).filter(F.col("customer_id") != 0))
+
+
+# the read() schemas both tables had while every commit was a full
+# snapshot: the build's column order, every column nullable
+READ_SCHEMAS = {
+    "dim_users_scd2": "struct<user_id:bigint,event_type:string,value:double,row_hash:string,"
+                      "updated_at:timestamp,version_no:int,effective_date:timestamp,"
+                      "expiry_date:timestamp,is_active:string,user_sk:string>",
+    "fact_orders": "struct<order_id:bigint,customer_sk:string,customer_id:bigint,nation_name:string,"
+                   "region_name:string,order_status:string,total_price:double,order_date:date,"
+                   "date_key:int,order_priority:string,order_year:int>",
+}
+
+
+def test_read_schemas_keep_their_columns_and_order(spark, tmp_path):
+    """A first commit and a carry-forward commit read back with the same
+    schema as full rewrites did: partition columns stay where the
+    table's schema puts them, and every column is nullable."""
+    from northwind_warehouse_spark.plans.pipeline import WarehousePipeline
+
+    p = WarehousePipeline(spark, str(tmp_path / "lake"))
+    for batch in _two_batches(tmp_path):
+        p.run(batch)
+        for name, want in READ_SCHEMAS.items():
+            schema = p.table(name).schema
+            assert schema.simpleString() == want and all(f.nullable for f in schema), name
+
+
+def test_failed_dim_stage_raises_and_rerun_equals_serial_run(spark, tmp_path, monkeypatch):
+    """The dim stage runs in a thread of its own: its error is raised by
+    ``run`` once the fact stage has ended, the dim keeps its version and
+    watermark, and a re-run leaves the lake as stages run one after the
+    other leave it."""
+    from northwind_warehouse_spark.plans.pipeline import WarehousePipeline
+
+    half = _half_events_dir(tmp_path)
+    p = WarehousePipeline(spark, str(tmp_path / "lake"))
+    p.run(half)
+    entry0 = p._vt(p.DIM_USERS).latest()
+
+    def fail(self, events):
+        raise RuntimeError("injected dim-stage failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(WarehousePipeline, "run_dim_users", fail)
+        with pytest.raises(RuntimeError, match="injected dim-stage failure"):
+            p.run(SF_SMOKE)
+    assert p._vt(p.DIM_USERS).latest() == entry0
+    assert len(p._vt(p.FACT_ORDERS).versions()) == 2  # the fact stage committed
+
+    p.run(SF_SMOKE)
+    serial = WarehousePipeline(spark, str(tmp_path / "serial"))
+    for sf_dir in (half, SF_SMOKE):
+        orders, events = serial.run_staging(sf_dir)
+        serial.run_dim_users(events)
+        serial.run_fact_orders(orders, sf_dir)
+    assert _dim_rows(p.table(p.DIM_USERS)) == _dim_rows(serial.table(serial.DIM_USERS))
+    assert _fact_rows(p.table(p.FACT_ORDERS)) == _fact_rows(serial.table(serial.FACT_ORDERS))
+    assert p.audit.get(p.DIM_USERS).hwm_date == serial.audit.get(serial.DIM_USERS).hwm_date
 
 
 def test_crash_between_steps_commits_nothing(spark, tmp_path, monkeypatch):
@@ -202,6 +316,30 @@ def test_fold_that_loses_its_version_refolds_on_the_winner(spark, tmp_path, monk
     assert [v["version"] for v in vt.versions()] == [0, 1]
     assert _dim_rows(vt.read()) == _dim_rows(scd2_users(spark, SF_SMOKE))
     assert datetime.fromisoformat(vt.versions()[-1]["watermark"]) == _max_event_ts(spark, SF_SMOKE)
+
+
+def test_fold_on_an_unpartitioned_dim_rewrites_it_whole(spark, tmp_path):
+    """A dim committed unpartitioned (as every dim was before folds
+    carried the closed history forward) has no active slice to
+    replace: the next fold rewrites it whole, partitioned, and loses no
+    closed version."""
+    import os
+
+    from northwind_warehouse_spark.operators.incremental import scd2_fold_commit
+    from northwind_warehouse_spark.operators.scd2 import scd2_from_change_stream
+    from northwind_warehouse_spark.plans.medallion import users_scd2_spec
+    from northwind_warehouse_spark.sources.versioned import VersionedTable
+
+    schema = "event_id long, user_id long, ts timestamp, event_type string, value double"
+    first = spark.createDataFrame([(1, 7, datetime(2024, 1, 1), "a", 1.0),
+                                   (2, 7, datetime(2024, 1, 3), "b", 1.0)], schema)
+    later = spark.createDataFrame([(3, 7, datetime(2024, 1, 5), "c", 1.0)], schema)
+    vt = VersionedTable(spark, str(tmp_path), "dim")
+    vt.write(scd2_from_change_stream(first, **users_scd2_spec()), watermark=datetime(2024, 1, 3))
+    assert scd2_fold_commit(vt, later, users_scd2_spec()) == 1
+    assert sorted(d for d in os.listdir(vt.latest()["path"]) if "=" in d) == ["is_active=N", "is_active=Y"]
+    want = scd2_from_change_stream(first.unionByName(later), **users_scd2_spec())
+    assert _dim_rows(vt.read()) == _dim_rows(want) and len(_dim_rows(want)) == 3
 
 
 @pytest.mark.xfail(strict=True, raises=AssertionError,
@@ -330,22 +468,11 @@ def test_stuck_order_redelivered_with_its_customer_resolves_once(spark, tmp_path
     order_id, cid = next((o, c) for o, c in zip(orders["o_orderkey"].to_pylist(),
                                                 orders["o_custkey"].to_pylist()) if c != 0)
 
-    def batch(name, tables):
-        d = tmp_path / name
-        d.mkdir()
-        for f in os.listdir(SF_SMOKE):
-            t = f.removesuffix(".parquet")
-            if t in tables:
-                pq.write_table(tables[t], d / f)
-            else:
-                os.symlink(os.path.join(SF_SMOKE, f), d / f)
-        return str(d)
-
-    early = batch("early", {"customer": cust.filter(pc.not_equal(cust["c_custkey"], cid))})
+    early = sf_dir_with(tmp_path, "early", {"customer": cust.filter(pc.not_equal(cust["c_custkey"], cid))})
     one = orders.filter(pc.equal(orders["o_orderkey"], order_id))
     redelivered = one.set_column(one.schema.get_field_index("o_orderstatus"), "o_orderstatus",
                                  pa.array(["Z"], one.schema.field("o_orderstatus").type))
-    late = batch("late", {"orders": redelivered})
+    late = sf_dir_with(tmp_path, "late", {"orders": redelivered})
 
     dummy = spark.range(1).select(surrogate_key(F.lit(0))).first()[0]
     real = spark.range(1).select(surrogate_key(F.lit(cid))).first()[0]

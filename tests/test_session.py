@@ -1,12 +1,13 @@
-"""What ``get_spark`` saves on the read path: a warm query compiles no
-generated code, and building a plan captures no Python call sites."""
+"""What ``get_spark`` saves: a warm query and a steady warehouse batch
+compile no generated code, and building a plan captures no Python call
+sites."""
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, sf_dir_with
 
 # perfbench's analyst mix: its plans generate more classes than Spark's
 # default codegen cache of 100 entries holds
@@ -38,6 +39,37 @@ def test_warm_analyst_mix_compiles_no_generated_code(spark):
     before = _compilations(spark)
     assert _checksum_mix(spark) == first
     assert _compilations(spark) - before == 0
+
+
+def test_steady_warehouse_batch_compiles_no_generated_code(spark, tmp_path):
+    """Three batches, each a third of the events and of the orders by
+    time: the third batch's plans differ from the second's only in the
+    dim's watermark and the fact years they replace, and neither may
+    reach generated code."""
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from northwind_warehouse_spark.plans.pipeline import WarehousePipeline
+
+    def thirds(table: str, col: str) -> list:
+        t = pq.read_table(os.path.join(SF_SMOKE, f"{table}.parquet"))
+        order = pc.sort_indices(t[col])
+        lo, hi = (t[col][order[len(t) * k // 3].as_py()] for k in (1, 2))
+        return [t.filter(pc.less(t[col], lo)),
+                t.filter(pc.and_(pc.greater_equal(t[col], lo), pc.less(t[col], hi))),
+                t.filter(pc.greater_equal(t[col], hi))]
+
+    batches = [sf_dir_with(tmp_path, f"b{i}", {"events": ev, "orders": o})
+               for i, (ev, o) in enumerate(zip(thirds("events", "ts"), thirds("orders", "o_orderdate")))]
+    p = WarehousePipeline(spark, str(tmp_path / "lake"))
+    p.run(batches[0])
+    p.run(batches[1])
+    before = _compilations(spark)
+    p.run(batches[2])
+    assert _compilations(spark) - before == 0
+    assert len(p._vt(p.DIM_USERS).versions()) == len(p._vt(p.FACT_ORDERS).versions()) == 3
 
 
 def test_building_a_plan_captures_no_call_site(spark, monkeypatch):

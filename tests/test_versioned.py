@@ -243,22 +243,33 @@ def _state(t):
             sorted(r.id for r in t.read().collect()) if t.versions() else None)
 
 
-@pytest.mark.parametrize("op", ["first write", "write", "vacuum"])
+@pytest.mark.parametrize("op", ["first write", "write", "vacuum", "carry forward"])
 def test_crash_at_each_step_leaves_state_before_or_after(spark, tmp_path, monkeypatch, op):
-    """A crash at any filesystem step of a write or a vacuum leaves every
-    listed version readable, and the table equal to its state before or
-    after the operation; the operation then runs to completion."""
+    """A crash at any filesystem step of a write, a vacuum or a
+    carry-forward write (every hard link of the base's files included)
+    leaves every listed version readable, and the table equal to its
+    state before or after the operation; the operation then runs to
+    completion."""
     from northwind_warehouse_spark.sources.versioned import VersionedTable
+
+    def parts(n):
+        return spark.range(n).withColumn("p", F.col("id") % 3)
 
     def setup(root):
         t = VersionedTable(spark, root, "t")
-        for n in range({"first write": 0, "write": 2, "vacuum": 2}[op]):
-            t.write(spark.range(n + 1))
+        for n in range({"first write": 0, "write": 2, "vacuum": 2, "carry forward": 2}[op]):
+            if op == "carry forward":
+                t.write(parts(n + 5), partition_by=("p",))
+            else:
+                t.write(spark.range(n + 1))
         return t
 
     def run(t):
         if op == "vacuum":
             t.vacuum(keep_last=1)
+        elif op == "carry forward":
+            t.write(parts(10).filter(F.col("p") == 1), partition_by=("p",),
+                    base=t.latest()["version"], replace=[1])
         else:
             t.write(spark.range(10))
 
@@ -283,6 +294,7 @@ def test_crash_at_each_step_leaves_state_before_or_after(spark, tmp_path, monkey
         if len(steps) < k:  # the operation ran with no step left to crash
             break
     assert k > 3
+    assert op != "carry forward" or steps.count("link") >= 3  # base files and the entry
 
 
 def _race(n_writers, rounds, commit):
